@@ -1,8 +1,11 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Table loaders over the driver's parquet testdata.
   *
@@ -11,19 +14,93 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * sizing) lives in one place. At 100 TB the only change needed is the
   * directory layout (partitioned datasets instead of single files) — the
   * operator code is unaffected because everything downstream is declarative.
+  *
+  * Every plain parquet read — these loaders and the operators' reads of
+  * their staged roots — goes through [[parquet]], which infers a path's
+  * schema once instead of once per load. Its cache entry is keyed by the
+  * path, the path's file listing (paths, lengths, modification times) and
+  * the session's parquet-inference confs, so rewriting the data or changing
+  * those confs re-infers; a failed inference is never cached.
   */
 object Tables {
   private def p(dir: String, name: String) = s"$dir/$name.parquet"
 
-  def region(s: SparkSession, dir: String): DataFrame   = s.read.parquet(p(dir, "region"))
-  def nation(s: SparkSession, dir: String): DataFrame   = s.read.parquet(p(dir, "nation"))
-  def customer(s: SparkSession, dir: String): DataFrame = s.read.parquet(p(dir, "customer"))
-  def supplier(s: SparkSession, dir: String): DataFrame = s.read.parquet(p(dir, "supplier"))
-  def part(s: SparkSession, dir: String): DataFrame     = s.read.parquet(p(dir, "part"))
-  def orders(s: SparkSession, dir: String): DataFrame   = s.read.parquet(p(dir, "orders"))
-  def lineitem(s: SparkSession, dir: String): DataFrame = s.read.parquet(p(dir, "lineitem"))
-  def documents(s: SparkSession, dir: String): DataFrame = s.read.parquet(p(dir, "documents"))
-  def embeddings(s: SparkSession, dir: String): DataFrame = s.read.parquet(p(dir, "embeddings"))
+  /** Session confs that change what parquet schema inference returns. */
+  private val InferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.caseSensitive")
+
+  /** (qualified path, inference conf values) -> (listing fingerprint, schema). */
+  private val schemas =
+    new ConcurrentHashMap[(String, Seq[String]), (String, StructType)]()
+
+  /** `s.read.parquet(path)` without the per-load inference job.
+    *
+    * A path-based parquet read infers its schema by reading footers in a
+    * one-task Spark job, at every load. This loader infers a path's schema
+    * once and plans every later load with `s.read.schema(cached)`, which
+    * yields the same relation (same schema, nullability, metadata and
+    * partition columns) without starting a job.
+    *
+    * An entry is keyed by the qualified path and the values of
+    * [[InferenceConfs]] in the loading session, and is valid only while the
+    * path's file listing — every file's path, length and modification time,
+    * recursively — hashes to the fingerprint taken before the inference that
+    * filled it. Rewriting or appending to the path, or loading it under
+    * different inference confs, therefore re-infers. A failed inference
+    * (a missing path, an unreadable encoding) is never cached: it throws
+    * from Spark exactly as an uncached read does, at every load.
+    */
+  private[graft] def parquet(s: SparkSession, path: String): DataFrame = {
+    val hpath = new Path(path)
+    val fs = hpath.getFileSystem(s.sessionState.newHadoopConf())
+    val qualified = fs.makeQualified(hpath)
+    val listed =
+      try Some(fingerprint(fs, qualified))
+      catch { case _: java.io.FileNotFoundException => None }
+    listed match {
+      case None => s.read.parquet(path) // throws Spark's own PATH_NOT_FOUND
+      case Some(fp) =>
+        val key = (qualified.toString, InferenceConfs.map(s.conf.get))
+        Option(schemas.get(key)) match {
+          case Some((`fp`, schema)) => s.read.schema(schema).parquet(path)
+          case _ =>
+            val df = s.read.parquet(path)
+            schemas.put(key, (fp, df.schema))
+            df
+        }
+    }
+  }
+
+  /** Content fingerprint of a path: SHA-256 over the sorted (path, length,
+    * modification time) of every file under `root` (or of `root` itself when
+    * it is a file). It keys the schema cache here and the operators' stage
+    * markers, so data rewritten in place invalidates both. Throws
+    * `FileNotFoundException` for a missing path.
+    */
+  private[graft] def fingerprint(fs: FileSystem, root: Path): String = {
+    def files(p: Path): Seq[FileStatus] = fs.listStatus(p).toSeq
+      .flatMap(st => if (st.isDirectory) files(st.getPath) else Seq(st))
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    files(root).map(f => s"${f.getPath}\t${f.getLen}\t${f.getModificationTime}\n")
+      .sorted.foreach(line => md.update(line.getBytes("UTF-8")))
+    md.digest().map("%02x".format(_)).mkString
+  }
+
+  def region(s: SparkSession, dir: String): DataFrame   = parquet(s, p(dir, "region"))
+  def nation(s: SparkSession, dir: String): DataFrame   = parquet(s, p(dir, "nation"))
+  def customer(s: SparkSession, dir: String): DataFrame = parquet(s, p(dir, "customer"))
+  def supplier(s: SparkSession, dir: String): DataFrame = parquet(s, p(dir, "supplier"))
+  def part(s: SparkSession, dir: String): DataFrame     = parquet(s, p(dir, "part"))
+  def orders(s: SparkSession, dir: String): DataFrame   = parquet(s, p(dir, "orders"))
+  def lineitem(s: SparkSession, dir: String): DataFrame = parquet(s, p(dir, "lineitem"))
+  def documents(s: SparkSession, dir: String): DataFrame = parquet(s, p(dir, "documents"))
+  def embeddings(s: SparkSession, dir: String): DataFrame = parquet(s, p(dir, "embeddings"))
 
   /** `events.ts` has shipped in two physical encodings across testdata
     * generations, and the loader normalizes both to Spark's native
@@ -45,7 +122,7 @@ object Tables {
     */
   def events(s: SparkSession, dir: String): DataFrame = {
     val raw =
-      try s.read.parquet(p(dir, "events"))
+      try parquet(s, p(dir, "events"))
       catch {
         // nanos data in a session missing the legacy conf dies inside
         // schema inference, before our dispatch can run — keep the old

@@ -948,7 +948,7 @@ object Aggregates {
   /** The staged distinct (lang, hv) table both KMV consumers read. */
   private[graft] def kmvHashes(s: SparkSession, dir: String): DataFrame = {
     stageKmvHashes(s, dir)
-    s.read.parquet(s"${Relational.stagedRoot(KmvStageDir)}/hashes")
+    Tables.parquet(s, s"${Relational.stagedRoot(KmvStageDir)}/hashes")
   }
 
   /** D31 `agg_kmv` (round 14): KMV / theta-style distinct sketch with set

@@ -56,7 +56,7 @@ object Joins {
     * only persists through `saveAsTable`; with Spark's default in-memory
     * catalog that needs no Hive metastore — exactly the shape a production
     * lakehouse stores its fact tables in. The table name carries a digest
-    * of (dir, name:size:mtime fingerprint) — the same content-keying
+    * of (dir, content fingerprint) — the same content-keying
     * discipline as Relational's staged mirrors (round-4 ADVICE #1): data
     * regenerated at the same path gets a NEW table, never stale buckets.
     */

@@ -202,7 +202,7 @@ object Lakehouse {
         .write.mode("overwrite").parquet(s"$root/small")
       val bytes = parquetFiles(s"$root/small").map(Files.size(_)).sum
       val target = math.max(1L, (bytes + CompactTargetBytes - 1) / CompactTargetBytes).toInt
-      s.read.parquet(s"$root/small").repartition(target)
+      Tables.parquet(s, s"$root/small").repartition(target)
         .write.mode("overwrite").parquet(s"$root/compacted")
     }
     val root = Relational.stagedRoot(CompactStageDir)
@@ -217,9 +217,9 @@ object Lakehouse {
     // smaller SF rather than flagging a real compaction defect). A cheap
     // metadata-only count over the staged fragments (parquet footers, no
     // row scan) anchors it to the actual staged state.
-    val stagedRows = s.read.parquet(s"$root/small").count()
+    val stagedRows = Tables.parquet(s, s"$root/small").count()
     val expectBefore = math.min(stagedRows, CompactSmallFiles.toLong).toInt
-    s.read.parquet(s"$root/compacted")
+    Tables.parquet(s, s"$root/compacted")
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
       .withColumn("files_before", lit(expectBefore))
       .withColumn("compact_ok", lit(nBefore == expectBefore &&
@@ -558,7 +558,7 @@ object Lakehouse {
     stageTimeTravel(s, dir)
     val root = Relational.stagedRoot(TtStageDir)
     (0 until TtVersions).map { v =>
-      s.read.parquet(s"$root/v$v")
+      Tables.parquet(s, s"$root/v$v")
         .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("sum_cents"),
           min(col("o_orderkey")).as("min_key"), max(col("o_orderkey")).as("max_key"))
         .select(lit(v).as("version"), col("n_rows"), col("sum_cents"),

@@ -74,26 +74,18 @@ object Relational {
     */
   val CsvStageDir = "/tmp/graft_scan_csv"
 
-  /** Content fingerprint of a source parquet path (file or directory):
-    * sorted `name:size:mtime` entries. Included in stage markers so that
-    * REGENERATED testdata at the same path invalidates the stage (round-4
-    * ADVICE #1 — a path-only marker would let both engines read the same
-    * stale mirror, which the hash gate can never catch because they agree).
+  /** Content fingerprint of a source parquet path (file or directory), see
+    * [[Tables.fingerprint]]. Included in stage markers so that REGENERATED
+    * testdata at the same path invalidates the stage (round-4 ADVICE #1 — a
+    * path-only marker would let both engines read the same stale mirror,
+    * which the hash gate can never catch because they agree).
     */
-  private[graft] def sourceFingerprint(path: String): String = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val p = Paths.get(path)
-    val files =
-      if (Files.isDirectory(p)) {
-        val walk = Files.walk(p)
-        try walk.iterator().asScala.filter(Files.isRegularFile(_)).toVector
-        finally walk.close()
-      } else Vector(p)
-    files
-      .map(f => s"${f.getFileName}:${Files.size(f)}:${Files.getLastModifiedTime(f).toMillis}")
-      .sorted.mkString(";")
-  }
+  private[graft] def sourceFingerprint(path: String): String =
+    Tables.fingerprint(stageFs, new org.apache.hadoop.fs.Path(path))
+
+  /** Staging reads its sources and writes its stages on the local disk. */
+  private lazy val stageFs =
+    org.apache.hadoop.fs.FileSystem.getLocal(new org.apache.hadoop.conf.Configuration())
 
   /** OS-level exclusive lock around a stage-check-and-write (round-4 ADVICE
     * #2: two JVMs — e.g. Bench and Verify — could otherwise interleave
@@ -342,7 +334,7 @@ object Relational {
     */
   def scanNested(s: SparkSession, dir: String): DataFrame = {
     stageNested(s, dir)
-    s.read.parquet(s"${stagedRoot(NestedStageDir)}/documents")
+    Tables.parquet(s, s"${stagedRoot(NestedStageDir)}/documents")
       .select(col("doc_id"),
         col("meta.lang").as("lang"), col("meta.source").as("source"),
         col("meta.n_chars").as("n_chars"),
@@ -493,7 +485,7 @@ object Relational {
     */
   def scanPacked(s: SparkSession, dir: String): DataFrame = {
     stagePacked(s, dir)
-    s.read.parquet(s"${stagedRoot(PackStageDir)}/packed")
+    Tables.parquet(s, s"${stagedRoot(PackStageDir)}/packed")
       .select(col("doc_id"),
         octet_length(col("content")).cast("long").as("n_bytes"),
         md5(col("content")).as("checksum"))
@@ -546,7 +538,7 @@ object Relational {
     */
   def scanPartitioned(s: SparkSession, dir: String): DataFrame = {
     stagePartitioned(s, dir)
-    s.read.parquet(s"${stagedRoot(PartStageDir)}/documents")
+    Tables.parquet(s, s"${stagedRoot(PartStageDir)}/documents")
       .filter(col("lang") === "en")
       .select("doc_id", "lang", "source", "n_chars")
       .oracleSorted("doc_id")
@@ -569,8 +561,8 @@ object Relational {
     */
   def scanDpp(s: SparkSession, dir: String): DataFrame = {
     stagePartitioned(s, dir)
-    val fact = s.read.parquet(s"${stagedRoot(PartStageDir)}/documents")
-    val dim = s.read.parquet(s"${stagedRoot(PartStageDir)}/langdim")
+    val fact = Tables.parquet(s, s"${stagedRoot(PartStageDir)}/documents")
+    val dim = Tables.parquet(s, s"${stagedRoot(PartStageDir)}/langdim")
       .filter(col("lang_group") === "cjk")
     fact.join(dim, "lang")
       .select("doc_id", "lang", "source", "n_chars")
@@ -1053,12 +1045,9 @@ object Relational {
     * constant. Results are partition-independent (the host queries are
     * global aggregates with exact-sum discipline).
     */
-  /** True when `dir/table.parquet` fits inside ONE scan split (the
-    * [[fanOutIfSingleSplit]] condition, exposed for other scale gates —
-    * round 18 uses it to pick `agg_quantile_merge`'s exact-prefix form).
-    */
-  private[graft] def fitsOneSplit(s: SparkSession, dir: String,
-                                  table: String): Boolean = {
+  private[graft] def fanOutIfSingleSplit(s: SparkSession, df: DataFrame,
+                                         dir: String, table: String,
+                                         keys: Column*): DataFrame = {
     val bytes = try {
       val path = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
       val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -1066,13 +1055,7 @@ object Relational {
     } catch { case scala.util.control.NonFatal(_) => Long.MaxValue }
     val maxSplit = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       s.conf.get("spark.sql.files.maxPartitionBytes", "128MB"))
-    bytes < maxSplit
-  }
-
-  private[graft] def fanOutIfSingleSplit(s: SparkSession, df: DataFrame,
-                                         dir: String, table: String,
-                                         keys: Column*): DataFrame = {
-    if (!fitsOneSplit(s, dir, table)) df
+    if (bytes >= maxSplit) df
     // hash keys when given (skips round-robin's sort-before-repartition —
     // SPARK-23207 makes every keyless repartition pre-sort its input so
     // retries are deterministic; a deterministic key needs no such sort),

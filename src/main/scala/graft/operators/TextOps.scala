@@ -638,7 +638,7 @@ object TextOps {
       : (DataFrame, DataFrame) = {
     stageNgramCounts(s, dir)
     val root = Relational.stagedRoot(NgramStageDir)
-    (s.read.parquet(s"$root/uni"), s.read.parquet(s"$root/bi"))
+    (Tables.parquet(s, s"$root/uni"), Tables.parquet(s, s"$root/bi"))
   }
 
   /** `text_ngrams`: corpus-level bigram counts (every occurrence, not
@@ -2314,28 +2314,28 @@ object TextOps {
       .agg(count(lit(1)).as("n_docs"), min("doc_id").as("min_doc"))
       .oracleSorted("simhash")
 
-  /** SimHash Hamming-distance pairing: 4 bands × 4 bits over the 16-bit
-    * signature; Hamming radius 3 — any pair within the radius differs in ≤3
-    * bits, so by pigeonhole at least one 4-bit band is IDENTICAL: band
-    * equality has exact recall inside the radius.
+  /** SimHash pairing parameters: the Hamming radius of both pairings, and
+    * the band count of `dedup_simhash_wide`'s band-rotation join. With
+    * radius 3 a pair differs in at most 3 bits, so by pigeonhole it agrees
+    * on at least one of the 4 disjoint bands: band equality has exact
+    * recall inside the radius.
     */
   val SimhashBands = 4
   val SimhashHammingK = 3
 
   /** K2b′ `dedup_simhash_pairs`: near-dup DOCUMENT PAIRS within Hamming ≤ k
     * of the 16-bit SimHash — the step `dedup_simhash`'s exact-signature
-    * buckets stop short of (round-2 VERDICT #3). Classic band-rotation join:
-    * candidates from any-band equality (exact recall in the radius, see
-    * SimhashBands), verification by exact Hamming distance.
+    * buckets stop short of (round-2 VERDICT #3). The pairing is
+    * [[simhashRadiusPairs]]: each distinct signature XORs itself with every
+    * mask of 1..k bits (the radius-k Hamming ball) and equi-joins the
+    * neighbour value back to the broadcast signature table, so candidates
+    * are exactly the pairs inside the radius.
     *
     * Scale shape: the pairing runs over DISTINCT signatures, not documents —
     * a 16-bit space holds ≤ 65 536 rows no matter the corpus size, so the
-    * band self-join cost is a CONSTANT, independent of N (each signature
-    * carries its min doc_id as the cluster representative; full membership
-    * is `dedup_simhash`'s bucket table, an equi-join away). At 100 TB one
-    * would widen to a 64-bit signature with 16-bit bands — identical shape,
-    * and the distinct-signature reduction is what keeps the join from ever
-    * seeing corpus-scale row counts either way.
+    * join cost is a CONSTANT, independent of N (each signature carries its
+    * min doc_id as the cluster representative; full membership is
+    * `dedup_simhash`'s bucket table, an equi-join away).
     */
   def dedupSimhashPairs(s: SparkSession, dir: String): DataFrame =
     simhashRadiusPairs(
@@ -2346,9 +2346,11 @@ object TextOps {
   /** Wide-signature variant of the pairing for corpus scale: the 16-bit
     * space saturates at 65 536 distinct signatures (on a large corpus every
     * bucket is occupied and the Hamming graph over distinct signatures goes
-    * dense), so `dedup_simhash_wide` runs the SAME band-rotation shape over
-    * a 60-bit SimHash (4 bands × 15 bits; 60 = the widest md5-prefix value
-    * that stays a signed-positive BIGINT in both engines). Band buckets
+    * dense), so `dedup_simhash_wide` pairs a 60-bit SimHash (60 = the
+    * widest md5-prefix value that stays a signed-positive BIGINT in both
+    * engines) with a classic band-rotation join: 4 bands × 15 bits,
+    * candidates from any-band equality (exact recall inside the radius, see
+    * `SimhashBands`), verification by exact Hamming distance. Band buckets
     * have 2^15 values and the distinct-signature space is 2^60 — neither
     * saturates at any realistic corpus size.
     */

@@ -1247,7 +1247,7 @@ object VectorOps {
     */
   private[graft] def mrlStaged(s: SparkSession, dir: String): DataFrame = {
     stageMrlPrefix(s, dir)
-    s.read.parquet(s"${Relational.stagedRoot(MrlStageDir)}/embeddings")
+    Tables.parquet(s, s"${Relational.stagedRoot(MrlStageDir)}/embeddings")
   }
 
   /** Ceiling on stage-1 output rows (C × |queries|) that stage 2 may
@@ -1392,7 +1392,7 @@ object VectorOps {
     */
   private[graft] def hamStaged(s: SparkSession, dir: String): DataFrame = {
     stageHamBits(s, dir)
-    s.read.parquet(s"${Relational.stagedRoot(HamStageDir)}/embeddings")
+    Tables.parquet(s, s"${Relational.stagedRoot(HamStageDir)}/embeddings")
   }
 
   /** Inline A/B arm of the [[graft.HamBytes]] scan-bytes measurement: the
@@ -1563,7 +1563,7 @@ object VectorOps {
     */
   private[graft] def hnswCorpusBits(s: SparkSession, dir: String): Int = {
     stageHnswGraph(s, dir)
-    s.read.parquet(s"${Relational.stagedRoot(HnswStageDir)}/meta")
+    Tables.parquet(s, s"${Relational.stagedRoot(HnswStageDir)}/meta")
       .head().getInt(0)
   }
 
@@ -1719,7 +1719,7 @@ object VectorOps {
       : (DataFrame, DataFrame) = {
     stageHnswGraph(s, dir)
     val root = Relational.stagedRoot(HnswStageDir)
-    (s.read.parquet(s"$root/edges"), s.read.parquet(s"$root/portals"))
+    (Tables.parquet(s, s"$root/edges"), Tables.parquet(s, s"$root/portals"))
   }
 
   /** The staged bucketed-corpus family (b, vec_id, embedding) — the
@@ -1727,7 +1727,7 @@ object VectorOps {
     */
   private[graft] def hnswBuckets(s: SparkSession, dir: String): DataFrame = {
     stageHnswGraph(s, dir)
-    s.read.parquet(s"${Relational.stagedRoot(HnswStageDir)}/buckets")
+    Tables.parquet(s, s"${Relational.stagedRoot(HnswStageDir)}/buckets")
   }
 
   /** The VISITED-and-scored frame of `sim_hnsw` — every (q_id, vec_id,

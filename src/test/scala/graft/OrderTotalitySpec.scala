@@ -28,7 +28,7 @@ class OrderTotalitySpec extends AnyFunSuite {
   private lazy val shuffledDir: String = {
     val out = "/tmp/graft_order_totality/sf0.001"
     // re-stage only when the source CONTENT fingerprint is missing/stale —
-    // keyed on each table's name:size:mtime digest (round-8 ADVICE #3: a
+    // keyed on each table's path/size/mtime digest (round-8 ADVICE #3: a
     // path-only marker let testdata regenerated in place silently reuse
     // the stale mirror), the same discipline as the CSV/JSON stage keys
     val marker = new java.io.File(s"$out/.staged_from")

@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.LineageCut._
 import graft.operators.TextOps
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -391,6 +392,36 @@ class TextOpsSpec extends AnyFunSuite {
     assert((10L to 15L).forall(labels(_) == 10L))
     assert((20L to 23L).forall(labels(_) == 20L))
     assert(labels(30L) == 30L && labels(31L) == 30L)
+  }
+
+  test("clusterLabels invariant: every label is a live doc_id, so the inner attach keeps every node") {
+    // The attach join in clusterLabels' loop is INNER: a node survives an
+    // iteration only through a probe that resolves, and the loop relies on
+    // every label being a labelled doc_id (the self-probe). A broken
+    // invariant drops nodes or emits labels naming no node, silently in the
+    // engine path; here it fails: the output must label exactly the graph's
+    // nodes, once each, with labels drawn from those nodes.
+    import spark.implicits._
+    val rnd = new scala.util.Random(5)
+    val graphs = Seq(
+      "chain" -> (1L to 40L).map(i => (i, i + 1)).toDF("doc_a", "doc_b"),
+      "star" -> (2L to 30L).map(i => (1L, i)).toDF("doc_a", "doc_b"),
+      "random" -> Seq.fill(60)((rnd.nextInt(50).toLong + 1, rnd.nextInt(50).toLong + 1))
+        .collect { case (a, b) if a != b => (a min b, a max b) }.distinct
+        .toDF("doc_a", "doc_b"),
+      "dedup_cluster pairs" -> TextOps.minhashPairs(Tables.documents(spark, sfDir))
+        .select("doc_a", "doc_b").lineageCut())
+    graphs.foreach { case (what, pairs) =>
+      val nodes = pairs.collect().flatMap(r => Seq(r.getLong(0), r.getLong(1))).toSet
+      assert(nodes.nonEmpty, s"$what: empty graph checks nothing")
+      val labels = TextOps.clusterLabels(pairs).collect().map(r => r.getLong(0) -> r.getLong(1))
+      val docs = labels.map(_._1)
+      assert(docs.length == docs.toSet.size, s"$what: a doc_id is labelled twice")
+      assert(docs.toSet == nodes,
+        s"$what: clusterLabels lost nodes ${(nodes -- docs).toSeq.sorted.take(10)}")
+      assert(labels.forall { case (d, l) => nodes(l) && l <= d },
+        s"$what: a label is not a member node at or below its doc_id")
+    }
   }
 
   test("dedup_substring finds a verbatim copied paragraph inside unrelated documents") {
