@@ -104,10 +104,6 @@ object Bench {
     // default run is the oracle tax, not engine cost (see BASELINE.md).
     sys.env.get("SPARK_GRAFT_TERMINAL_SORT")
       .foreach(v => spark.conf.set("graft.terminalSort", v))
-    // SPARK_GRAFT_RAG_SHARED_CHUNKS=true|false selects rag_hybrid's
-    // chunk-scan arm for the A/B (see TextOps.RagSharedChunkScanConf)
-    sys.env.get("SPARK_GRAFT_RAG_SHARED_CHUNKS")
-      .foreach(v => spark.conf.set(graft.operators.TextOps.RagSharedChunkScanConf, v))
     // Warm the session/IO paths before even the warm-up pass so its first
     // query isn't charged session-initialization cost. BEST-EFFORT: a warm
     // failure (e.g. a testdata schema change breaking one loader, as in the

@@ -430,7 +430,7 @@ object SparkEntry {
       "qf AS (SELECT q_id, q_emb, b AS eb FROM q UNION ALL SELECT q_id, q_emb, xor(q.b, g.pw) AS eb FROM q, g, p WHERE g.i < p.bits " +
       "UNION ALL SELECT q_id, q_emb, xor(q.b, g2.pw2) AS eb FROM q, g2, p WHERE g2.i2 < p.bits), " +
       // v0 = portal fan (expandable) ∪ own-bucket members (pre-expanded —
-      // scored, never spend a beam slot; see VectorOps.hnswVisited round 16);
+      // scored, never spend a beam slot; see VectorOps.simHnsw round 16);
       // duplicates fold with expanded winning
       s"v0 AS MATERIALIZED (SELECT q_id, vec_id, max(cos) AS cos, bool_or(ex) AS ex FROM (" +
       s"SELECT q_id, pt.vec_id, ${cosOf("q_emb", "pt.embedding")} AS cos, FALSE AS ex FROM qf JOIN portal pt ON pt.b = qf.eb " +

@@ -32,8 +32,6 @@ object Verify {
     // does (round-7 VERDICT next-round #1).
     sys.env.get("SPARK_GRAFT_TERMINAL_SORT")
       .foreach(v => spark.conf.set("graft.terminalSort", v))
-    sys.env.get("SPARK_GRAFT_RAG_SHARED_CHUNKS")
-      .foreach(v => spark.conf.set(graft.operators.TextOps.RagSharedChunkScanConf, v))
     // SPARK_GRAFT_RESIZE_MOD=N gates multimodal_resize on the doc_id % N = 0
     // subset (100× oracle tractability — SparkEntry.resizeGateWhere reads
     // the SAME env for the dumped SQL, so both sides cover one subset)

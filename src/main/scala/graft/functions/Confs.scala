@@ -2,8 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSession
 
-/** Exception-safe scoped session-conf override (the AnnRecall `sweep()`
-  * discipline, factored for operator use).
+/** Exception-safe scoped session-conf override: the previous value (or
+  * its absence) is restored even when the body throws.
   *
   * Round-17 use: driver-coordinated iteration loops (k-means, the integer
   * k-means twin, PQ codebook learning) run one TINY aggregate job per

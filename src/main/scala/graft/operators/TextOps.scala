@@ -299,14 +299,6 @@ object TextOps {
     */
   val RagMaxQueryDoc = 5000L
 
-  /** `rag_hybrid` chunk-scan mode: `true` materializes the shared chunk
-    * frame once (lineage cut) for both retriever arms; `false` lets each
-    * arm derive it from the documents scan independently (Catalyst still
-    * reuses the file scan; the chunking compute runs twice). See the A/B
-    * note in [[ragHybrid]].
-    */
-  val RagSharedChunkScanConf = "graft.rag.sharedChunkScan"
-
   /** Hashed-BoW embedding of a text column: md5-prefix hash per token
     * (house portable-hash idiom), then per-dimension counts — emitted as
     * `array<float>` so the scoring stage can run the codegen'd
@@ -333,11 +325,7 @@ object TextOps {
     * k = `RagTopK`; `rag_hybrid` fuses it at k = `HybridN` (one body, so
     * the registered query and the fusion input cannot drift).
     */
-  private[graft] def ragDenseRanked(s: SparkSession, dir: String, k: Int): DataFrame =
-    ragDenseRankedFrom(chunkFrame(s, dir), s, dir, k)
-
-  private[graft] def ragDenseRankedFrom(
-      chunks0: DataFrame, s: SparkSession, dir: String, k: Int): DataFrame = {
+  private[graft] def ragDenseRanked(s: SparkSession, dir: String, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // The repartition is a deliberate pipeline barrier, not a distribution
     // need: whole-stage codegen DEFERS a deterministic projection into the
@@ -356,7 +344,7 @@ object TextOps {
     // chunk explode is ~10× that, so the extra exchange ships ~600 MB of
     // chunk text); the barrier alone is also the fastest form at sf0.1
     // (1.15 → 0.55 s warm vs 0.82 s with the fan-out).
-    val chunks = chunks0
+    val chunks = chunkFrame(s, dir)
       .select(col("doc_id"), col("chunk_id"),
         graft.plans.HashedBow.of(col("chunk"), RagDims).as("vec"))
       .repartition(s.sparkContext.defaultParallelism, col("doc_id"), col("chunk_id"))
@@ -445,11 +433,7 @@ object TextOps {
     * fuses it at k = `HybridN`. The ranking key stays the exact decimal
     * sum throughout.
     */
-  private[graft] def ragSparseRanked(s: SparkSession, dir: String, k: Int): DataFrame =
-    ragSparseRankedFrom(chunkFrame(s, dir), s, dir, k)
-
-  private[graft] def ragSparseRankedFrom(
-      chunks0: DataFrame, s: SparkSession, dir: String, k: Int): DataFrame = {
+  private[graft] def ragSparseRanked(s: SparkSession, dir: String, k: Int): DataFrame = {
     import graft.functions.ScalarAttach._
     import org.apache.spark.sql.types.DecimalType
     // array_remove(split(...), "") ≡ filter(split(...), t => t =!= "") —
@@ -467,7 +451,7 @@ object TextOps {
     // common-subexpression elimination); via an attribute it runs once.
     // round-17 single-split fan-out (guide §2.5): tokenization + the tf
     // partial aggregation otherwise run inside the one-row-group scan task
-    val tok = Relational.fanOutIfSingleSplit(s, chunks0, dir, "documents",
+    val tok = Relational.fanOutIfSingleSplit(s, chunkFrame(s, dir), dir, "documents",
         col("doc_id"), col("chunk_id"))
       .select(col("doc_id"), col("chunk_id"), realToks(col("chunk")).as("toks"))
       .select(col("doc_id"), col("chunk_id"),
@@ -560,28 +544,15 @@ object TextOps {
   def ragHybrid(s: SparkSession, dir: String): DataFrame = {
     val rrf = (rank: String) =>
       coalesce(expr(s"CAST($RrfL AS BIGINT) div ($RrfK + $rank)"), lit(0L))
-    // A/B (round-13, carried VERDICT item): `graft.rag.sharedChunkScan`
-    // materializes chunkFrame ONCE behind a lineage cut feeding both the
-    // dense embedding and the sparse tf index, instead of each arm
-    // re-deriving it from the documents scan. Measured at 100× (isolated
-    // 5-pass runs, BASELINE.md): shared 28.9 s vs independent 27.7 s
-    // median — a wash (clean-pass ranges overlap entirely; the chunking
-    // compute is noise next to each arm's own join/agg work, and Catalyst
-    // reuses the underlying file scan anyway). Default stays INDEPENDENT:
-    // same speed, no materialization footprint, simpler plan.
-    import graft.functions.LineageCut._
-    val shared = s.conf.get(RagSharedChunkScanConf, "false").toBoolean
-    val (d0, sp0) =
-      if (shared) {
-        val ch = chunkFrame(s, dir).lineageCut(eager = false)
-        (ragDenseRankedFrom(ch, s, dir, HybridN),
-         ragSparseRankedFrom(ch, s, dir, HybridN))
-      } else
-        (ragDenseRanked(s, dir, HybridN), ragSparseRanked(s, dir, HybridN))
-    val d = d0
+    // Each arm derives the chunk frame from the documents scan on its own
+    // (Catalyst reuses the file scan; the chunking compute runs twice). A
+    // shared lineage-cut chunk frame measured as a wash at 100× — 28.9 s
+    // shared (`bench_rag100x_armB.json`) vs 27.7 s independent
+    // (`bench_rag100x_armA.json`) median — so the simpler plan stays.
+    val d = ragDenseRanked(s, dir, HybridN)
       .select(col("query_doc"), col("doc_id"), col("chunk_id"),
         col("rnk").as("dense_rnk"))
-    val sp = sp0
+    val sp = ragSparseRanked(s, dir, HybridN)
       .select(col("query_doc"), col("doc_id"), col("chunk_id"),
         col("rnk").as("sparse_rnk"))
     val w = Window.partitionBy("query_doc")
@@ -2172,9 +2143,9 @@ object TextOps {
   val DecontamModulus = 97
   val DecontamShingleN = 8
 
-  /** Default for `graft.decontamBroadcastLimit`: max distinct eval grams
-    * the broadcast path may carry (2M longs ≈ tens of MB broadcast — the
-    * scale where per-executor copies stop being free).
+  /** Max distinct eval grams the `decontaminate` broadcast path may carry
+    * (2M longs ≈ tens of MB broadcast — the scale where per-executor
+    * copies stop being free).
     */
   val DecontamBroadcastLimitDefault = 2000000L
 
@@ -2189,7 +2160,7 @@ object TextOps {
     * The hit join is SIZE-GATED (round-4 VERDICT #4 removed the last
     * "small by assumption" in the K-block): the distinct eval-gram count is
     * measured (one aggregation of the eval side; its cut blocks are reused
-    * by the join), and at ≤ `graft.decontamBroadcastLimit` grams the set is
+    * by the join), and at ≤ `DecontamBroadcastLimitDefault` grams the set is
     * broadcast — the streaming-friendly stateless-per-row shape
     * StreamingParitySpec exercises. Above the limit (decontaminating
     * against a merged benchmark suite plus a dedup blocklist) the hint is
@@ -2198,7 +2169,15 @@ object TextOps {
     * are byte-identical by construction (TextOpsSpec parity law); AQE
     * remains free to re-broadcast at runtime if actual sizes allow.
     */
-  def decontaminate(s: SparkSession, dir: String): DataFrame = {
+  def decontaminate(s: SparkSession, dir: String): DataFrame =
+    decontaminateAt(s, dir, DecontamBroadcastLimitDefault)
+
+  /** `decontaminate` with an explicit broadcast limit (the registered query
+    * runs at [[DecontamBroadcastLimitDefault]]; the parity law forces the
+    * shuffle path with 0).
+    */
+  private[graft] def decontaminateAt(s: SparkSession, dir: String,
+                                     broadcastLimit: Long): DataFrame = {
     // one shingling pass feeds both branches (lineage-cut, cleaner-freed)
     val g = Tables.documents(s, dir)
       .select(col("doc_id"), hashedShingles(col("text"), DecontamShingleN).as("hv"))
@@ -2209,9 +2188,8 @@ object TextOps {
       .distinct()
       .lineageCut(eager = false) // the gate's count() materializes; the join reuses
     val train = g.filter(!isEval)
-    val limit = s.conf.get("graft.decontamBroadcastLimit",
-      DecontamBroadcastLimitDefault.toString).toLong
-    val evalSide = if (evalGrams.count() <= limit) broadcast(evalGrams) else evalGrams
+    val evalSide =
+      if (evalGrams.count() <= broadcastLimit) broadcast(evalGrams) else evalGrams
     val hits = train.select(col("doc_id"), explode(col("hv")).as("g"))
       .join(evalSide, "g")
       .groupBy("doc_id").agg(count(lit(1)).as("n_hit"))

@@ -57,28 +57,13 @@ object VectorOps {
   /** Fixed query set for similarity search: vec_id < 5. */
   val QuerySetSize = 5
 
-  /** Session override of the query/corpus split threshold (round 16 —
-    * the ANN recall MEASUREMENT was statistically thin: 5 queries ×
-    * AnnTopK = 25 ground-truth pairs per sweep, round-15 VERDICT #2).
-    * The gated registry never sets this (the oracles hardcode the
-    * [[QuerySetSize]] default), but AnnRecall widens it inside a
-    * try/finally to sweep recall over a 20× larger ground truth. Every
-    * staged index family keys on the effective value, so a widened
-    * sweep stages its own families instead of silently reusing the
-    * default split's.
-    */
-  val QrySetConf = "graft.sim.querySetSize"
-
-  private[graft] def querySet(s: SparkSession): Long =
-    s.conf.get(QrySetConf, QuerySetSize.toString).toLong
-
-  /** The query-side / corpus-side halves of an embeddings frame under the
-    * effective split — ONE definition for every similarity operator.
+  /** The query-side / corpus-side halves of an embeddings frame — ONE
+    * definition of the split for every similarity operator.
     */
   private[graft] def queriesOf(df: DataFrame): DataFrame =
-    df.filter(col("vec_id") < querySet(df.sparkSession))
+    df.filter(col("vec_id") < QuerySetSize.toLong)
   private[graft] def corpusOf(df: DataFrame): DataFrame =
-    df.filter(col("vec_id") >= querySet(df.sparkSession))
+    df.filter(col("vec_id") >= QuerySetSize.toLong)
   val TopK = 10
   val AnnBits = 8
   val AnnTopK = 5
@@ -105,21 +90,15 @@ object VectorOps {
     (0 until (1 << AnnBits)).map(_.toLong)
       .filter(m => java.lang.Long.bitCount(m) <= flips)
 
-  /** Multi-probe masks for `sim_ann` at the default radius 1 — the set the
-    * oracle SQL interpolates.
+  /** Multi-probe masks for `sim_ann` at radius 1 — the set the registered
+    * query probes and the oracle SQL interpolates. The radius is the
+    * recall/cost lever: random vectors spread true neighbours across many
+    * buckets, and candidates scale ∝ |probes|/2^bits of the corpus per
+    * query — 9/256 at radius 1, 37/256 at radius 2 — while only the tiny
+    * broadcast query side fans out, never the corpus. AnnRecallSpec
+    * measures the recall gain of radius 2.
     */
   val AnnProbeMasks: Seq[Long] = probeMasks(1)
-
-  /** The recall/cost knob for `sim_ann`: probe radius in bucket-bit flips.
-    * Default 1 (the oracle-pinned contract the registered query runs
-    * under). Random vectors spread true neighbours across many buckets
-    * (the round-5 recall-regime note), so raising the radius is THE lever:
-    * candidates scale ∝ |probes|/2^bits of the corpus per query —
-    * 9/256 at radius 1, 37/256 at radius 2 — and only the tiny broadcast
-    * query side fans out, never the corpus. AnnRecallSpec measures the
-    * monotone recall gain.
-    */
-  val AnnProbeFlipsConf = "graft.annProbeFlips"
 
   /** K4 `vec_norm`: per-vector L1/L2 norms and dimensionality. L2 runs
     * through the codegen'd dot kernel (bitwise == the HOF fold, see Vec);
@@ -862,7 +841,7 @@ object VectorOps {
     // lineage cut (lazy): the consumers reference this frame from two or
     // three join branches (encode + LUT + coarse assign); without the cut
     // each branch would recompute the corpus-wide centroid aggregation —
-    // the ivfCandidates precedent
+    // the ivfCandidatesBy precedent
     labelMeanCentroids(emb).select(col("c_label"),
       posexplode(array((0 until PqSubspaces).map(i =>
         slice(col("cvec"), i * PqSubDim + 1, PqSubDim)): _*))
@@ -1097,24 +1076,6 @@ object VectorOps {
     * the `vec_pq_adc` tail.
     */
   def simIvfPq(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("q_id").orderBy(asc("adc_d"), asc("vec_id"))
-    ivfPqCandidates(s, dir)
-      .withColumn("rn", row_number().over(w).cast("int"))
-      .filter(col("rn") <= AnnTopK)
-      .select(col("q_id"), col("rn"), col("vec_id"),
-        round(col("adc_d").cast("double"), 6).as("adc"))
-      .oracleSorted("q_id", "rn")
-  }
-
-  /** The scored-candidate frame of IVF-PQ search — every probed-list
-    * (query, vector) pair with its exact-decimal ADC distance, BEFORE
-    * ranking; split out for [[graft.AnnRecall]]'s recall-vs-cost sweep
-    * (the `ivfCandidates`/`annCandidates` pattern) and for the exact
-    * rerank variant [[simIvfPqRerank]]. Probed-list count honors the
-    * [[IvfProbesConf]] session conf (the sweep axis); the registered
-    * query never sets it, so the oracle contract is untouched.
-    */
-  private[graft] def ivfPqCandidates(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{posexplode, broadcast}
     import org.apache.spark.sql.types.DecimalType
     val emb = Tables.embeddings(s, dir)
@@ -1143,40 +1104,22 @@ object VectorOps {
       .withColumn("d2c",
         graft.functions.Vec.sqDistF(col("subv"), col("csub")).cast(DecimalType(28, 18)))
     val lut = qdd.select(col("q_id"), col("s"), col("c_label").as("code"), col("d2c"))
-    val nProbes = s.conf.get(IvfProbesConf, IvfProbes.toString).toInt
     val probes = qdd.groupBy("q_id", "c_label").agg(sum("d2c").as("fd"))
       .withColumn("pr", row_number()
         .over(Window.partitionBy("q_id").orderBy(asc("fd"), asc("c_label"))))
-      .filter(col("pr") <= nProbes)
+      .filter(col("pr") <= IvfProbes)
       .select(col("q_id"), col("c_label").as("ilist"))
+    val w = Window.partitionBy("q_id").orderBy(asc("adc_d"), asc("vec_id"))
     codes.join(ilist, "vec_id")
       .join(broadcast(probes), "ilist")
       .join(broadcast(lut), Seq("q_id", "s", "code"))
       .groupBy("q_id", "vec_id")
       .agg(sum("d2c").as("adc_d"))
-  }
-
-  /** IVF-PQ with EXACT rerank — the second axis of AnnRecall's ivfpq
-    * sweep: the probed candidate set is identical to `sim_ivfpq`'s, but
-    * the final ranking fetches the candidates' raw vectors and orders by
-    * exact squared L2 instead of the ADC approximation (FAISS's
-    * re-ranking stage). At scale this is the standard accuracy knob: the
-    * candidate fetch is |candidates| ≪ corpus rows through a hash join,
-    * and recall is then limited only by coarse pruning, not by PQ
-    * resolution.
-    */
-  private[graft] def simIvfPqRerank(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(s, dir)
-    val qv = queriesOf(emb)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val w = Window.partitionBy("q_id").orderBy(asc("d2"), asc("vec_id"))
-    ivfPqCandidates(s, dir).select("q_id", "vec_id")
-      .join(emb.select(col("vec_id"), col("embedding")), "vec_id")
-      .join(broadcast(qv), "q_id")
-      .withColumn("d2", Vec.sqDistF(col("q_emb"), col("embedding")))
       .withColumn("rn", row_number().over(w).cast("int"))
       .filter(col("rn") <= AnnTopK)
-      .select(col("q_id"), col("rn"), col("vec_id"), col("d2"))
+      .select(col("q_id"), col("rn"), col("vec_id"),
+        round(col("adc_d").cast("double"), 6).as("adc"))
+      .oracleSorted("q_id", "rn")
   }
 
   /** K3 `sim_topk`: brute-force cosine top-k of the corpus against a small
@@ -1206,13 +1149,11 @@ object VectorOps {
     */
   val MrlPrefixDims = 16
 
-  /** `sim_mrl` stage-2 depth: exact-rerank candidates kept per query.
-    * Session-overridable (`MrlCandidatesConf`) for the AnnRecall sweep —
-    * at C = |corpus| the rerank IS the brute force and recall is exactly
-    * 1.0 (the VectorOpsSpec law).
+  /** `sim_mrl` stage-2 depth: exact-rerank candidates kept per query. At
+    * C = |corpus| the rerank IS the brute force and recall is exactly 1.0
+    * (the VectorOpsSpec law).
     */
   val MrlCandidates = 50
-  val MrlCandidatesConf = "graft.sim.mrlCandidates"
 
   /** Fixed staging root of the prefix-column-family mirror `sim_mrl` reads
     * (same `by/<digest>` + `current` indirection as the Relational stage
@@ -1220,8 +1161,8 @@ object VectorOps {
     * float prefix materialized as its OWN parquet column next to the full
     * embedding — parquet stores each column as separate chunks, so stage 1
     * reads the 16-float family and never touches the 64-float one (the
-    * scan-schema assertion in SourcesSpec; measured bytes cut in
-    * BASELINE.md via [[graft.MrlBytes]]).
+    * scan-schema assertion in SourcesSpec; footer-measured bytes cut in
+    * `mrl_bytes_r14.json`: 3.8× at sf0.1, 4.0× at 100×).
     */
   val MrlStageDir = "/tmp/graft_mrl_prefix"
 
@@ -1250,52 +1191,58 @@ object VectorOps {
     Tables.parquet(s, s"${Relational.stagedRoot(MrlStageDir)}/embeddings")
   }
 
-  /** Ceiling on stage-1 output rows (C × |queries|) that stage 2 may
-    * BROADCAST back onto the corpus: 2M (long, long) pairs ≈ 32 MB — far
-    * under Spark's 8 GB broadcast ceiling with headroom for driver memory.
-    * Above it (the AnnRecall exhaustive-C sweep on a big corpus, where
-    * C = |corpus| makes the candidate list ~|queries|× the corpus) stage 2
-    * falls back to a shuffle hash join on vec_id (round-13 ADVICE).
-    */
-  val MrlBroadcastMaxRows = 2000000L
-
-  private[graft] def mrlCandidateCount(s: SparkSession): Long =
-    s.conf.get(MrlCandidatesConf, MrlCandidates.toString).toLong
-
   /** K3g `sim_mrl` (round 13): Matryoshka / truncation two-stage retrieval
     * — the modern production pattern between brute force and a trained
     * index: stage 1 scores EVERY corpus vector by prefix-dim cosine
-    * (cheap: `MrlPrefixDims`/`Dim` of the FLOPs — and, since round 14, of
-    * the SCAN BYTES: the prefix is staged as its own parquet column family
-    * and stage 1's scan schema carries ONLY `(vec_id, prefix)`, asserted
-    * in SourcesSpec), keeps the top `MrlCandidates` per query, stage 2
+    * (cheap: `MrlPrefixDims`/`Dim` of the FLOPs — and of the SCAN BYTES:
+    * the prefix is staged as its own parquet column family and stage 1's
+    * scan schema carries ONLY `(vec_id, prefix)`, asserted in
+    * SourcesSpec), keeps the top `MrlCandidates` per query, stage 2
     * reranks just those by full-dim exact cosine. No training, no index
     * build — the accuracy knob is C alone, and recall→1.0 monotonically as
-    * C→|corpus| (measured in the AnnRecall sweep; exhaustive-C
-    * rank-identity law in VectorOpsSpec).
+    * C→|corpus| (VectorOpsSpec law; measured recall-vs-C in
+    * `annrecall_*.json`).
     *
     * Scale shape: stage 1 is the `sim_topk` broadcast scan reading 16 of
     * 64 floats per row straight off the column family (no slice, no
-    * repartition barrier — the round-13 barrier existed only because
-    * whole-stage codegen deferred the slice into the nested-loop build
-    * loop; a scanned column cannot be re-evaluated); its BNLJ carries the
-    * same counted allowance as `sim_topk` (≤`QuerySetSize` broadcast
-    * rows). Stage 2 never rescans: the C×|queries| candidate ids come back
-    * onto ONE corpus hash join — broadcast while C×|queries| ≤
-    * `MrlBroadcastMaxRows`, shuffle hash join beyond (the id list grows
-    * with the sweep's C, not the corpus scan).
+    * repartition barrier — whole-stage codegen would defer a slice into
+    * the nested-loop build loop; a scanned column cannot be re-evaluated);
+    * its BNLJ carries the same counted allowance as `sim_topk`
+    * (≤`QuerySetSize` broadcast rows). Stage 2 is [[exactRerank]].
     */
-  def simMrl(s: SparkSession, dir: String): DataFrame = {
+  def simMrl(s: SparkSession, dir: String): DataFrame =
+    simMrlAt(s, dir, MrlCandidates)
+
+  /** `sim_mrl` at an explicit stage-2 depth `c` (the registered query runs
+    * at [[MrlCandidates]]; the exhaustive-C law runs at |corpus|).
+    */
+  private[graft] def simMrlAt(s: SparkSession, dir: String, c: Long): DataFrame = {
     val emb = mrlStaged(s, dir)
+    val qpre = queriesOf(emb)
+      .select(col("vec_id").as("q_id"), col("prefix").as("q_pre"))
+    val cand = corpusOf(emb)
+      .select(col("vec_id"), col("prefix"))
+      .crossJoin(broadcast(qpre))
+      .select(col("q_id"), col("vec_id"),
+        Vec.cosineF(col("q_pre"), col("prefix")).as("pcos"))
+      .withColumn("prn", row_number()
+        .over(Window.partitionBy("q_id").orderBy(desc("pcos"), asc("vec_id"))))
+      .filter(col("prn") <= c)
+      .select("q_id", "vec_id")
+    exactRerank(emb, cand)
+  }
+
+  /** Stage 2 of the two-stage retrievers (`sim_mrl`, `sim_hamming`): the
+    * C×|queries| (q_id, vec_id) candidates are broadcast onto ONE corpus
+    * hash join — the corpus is never rescanned — and reranked by full-dim
+    * exact cosine to the top `TopK`.
+    */
+  private def exactRerank(emb: DataFrame, cand: DataFrame): DataFrame = {
     val q = queriesOf(emb)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val cand = mrlCandidates(s, emb)
-    val candSide =
-      if (mrlCandidateCount(s) * querySet(s) <= MrlBroadcastMaxRows) broadcast(cand)
-      else cand
     corpusOf(emb)
       .select("vec_id", "embedding")
-      .join(candSide, "vec_id")
+      .join(broadcast(cand), "vec_id")
       .join(broadcast(q), "q_id")
       .select(col("q_id"), col("vec_id"),
         Vec.cosineF(col("q_emb"), col("embedding")).as("cos"))
@@ -1305,50 +1252,15 @@ object VectorOps {
       .oracleSorted("q_id", "rn")
   }
 
-  /** Stage-2 candidate frame of `sim_mrl` (the top-C-by-prefix-cosine
-    * (q_id, vec_id) pairs) — split out so the query, the AnnRecall cost
-    * axis, and the [[graft.MrlBytes]] scan-bytes A/B share one body. The
-    * input frame must carry a `prefix` column: the staged mirror for the
-    * operator (column-family read), or an inline
-    * `slice(embedding, 1, MrlPrefixDims)` projection for the legacy arm
-    * of the bytes A/B ([[mrlPrefixInline]]).
-    */
-  private[graft] def mrlCandidates(s: SparkSession, emb: DataFrame): DataFrame = {
-    val c = mrlCandidateCount(s)
-    val qpre = queriesOf(emb)
-      .select(col("vec_id").as("q_id"), col("prefix").as("q_pre"))
-    val cpre = corpusOf(emb)
-      .select(col("vec_id"), col("prefix"))
-    cpre.crossJoin(broadcast(qpre))
-      .select(col("q_id"), col("vec_id"),
-        Vec.cosineF(col("q_pre"), col("prefix")).as("pcos"))
-      .withColumn("prn", row_number()
-        .over(Window.partitionBy("q_id").orderBy(desc("pcos"), asc("vec_id"))))
-      .filter(col("prn") <= c)
-      .select("q_id", "vec_id")
-  }
-
-  /** The round-13 stage-1 input shape, kept as the A/B arm of the
-    * scan-bytes measurement: prefix computed inline by slicing the full
-    * embedding column (the scan must read all `Dim` floats), materialized
-    * behind a repartition barrier so codegen cannot defer the slice into
-    * the BNLJ build loop (the `ragDenseRanked` discipline).
-    */
-  private[graft] def mrlPrefixInline(s: SparkSession, dir: String): DataFrame =
-    Tables.embeddings(s, dir)
-      .select(col("vec_id"), slice(col("embedding"), 1, MrlPrefixDims).as("prefix"))
-      .repartition(col("vec_id"))
-
   // ------------------------------------------------------------------
   // K3j sim_hamming: binary quantization + Hamming stage 1 + exact rerank
   // ------------------------------------------------------------------
 
   /** `sim_hamming` stage-2 depth: exact-rerank candidates kept per query
-    * (session-overridable for the AnnRecall sweep — at C = |corpus| the
-    * rerank IS the brute force, rank-identity law in VectorOpsSpec).
+    * (at C = |corpus| the rerank IS the brute force, rank-identity law in
+    * VectorOpsSpec).
     */
   val HamCandidates = 50
-  val HamCandidatesConf = "graft.sim.hamCandidates"
 
   /** Bits per signature word. The `Dim`-bit sign signature is stored as
     * two 32-bit words in BIGINT columns rather than one 64-bit word: bit
@@ -1363,12 +1275,10 @@ object VectorOps {
     * the two signature words as their OWN parquet columns next to the
     * full embedding, so stage 1's scan schema is `(vec_id, bits_lo,
     * bits_hi)` — 2 longs instead of `Dim` floats, a ~16× column-family
-    * byte cut (measured by [[graft.HamBytes]]; asserted in SourcesSpec).
+    * byte cut (footer-measured in `ham_bytes_r14.json`: 15.1× at sf0.1,
+    * 18.6× at 100×; asserted in SourcesSpec).
     */
   val HamStageDir = "/tmp/graft_ham_bits"
-
-  private[graft] def hamCandidateCount(s: SparkSession): Long =
-    s.conf.get(HamCandidatesConf, HamCandidates.toString).toLong
 
   private def stageHamBits(s: SparkSession, dir: String): Unit = synchronized {
     Relational.withStageLock(HamStageDir) {
@@ -1395,42 +1305,6 @@ object VectorOps {
     Tables.parquet(s, s"${Relational.stagedRoot(HamStageDir)}/embeddings")
   }
 
-  /** Inline A/B arm of the [[graft.HamBytes]] scan-bytes measurement: the
-    * signature computed on the fly from the full embedding column (the
-    * scan must fetch all `Dim` floats), behind the same repartition
-    * barrier as [[mrlPrefixInline]] so codegen cannot defer the signature
-    * build into the BNLJ build loop.
-    */
-  private[graft] def hamBitsInline(s: SparkSession, dir: String): DataFrame =
-    Tables.embeddings(s, dir)
-      .select(col("vec_id"),
-        Vec.signBucket(col("embedding"), HamWordBits).as("bits_lo"),
-        Vec.signBucket(col("embedding"), HamWordBits, HamWordBits).as("bits_hi"))
-      .repartition(col("vec_id"))
-
-  /** Stage-1 candidate frame of `sim_hamming`: top-C per query by Hamming
-    * distance between sign signatures — two XOR+popcount longs per
-    * (corpus row, query), integer-exact on both engines. The input frame
-    * must carry `bits_lo`/`bits_hi`: the staged mirror for the operator,
-    * or the inline projection for the bytes A/B.
-    */
-  private[graft] def hamCandidates(s: SparkSession, emb: DataFrame): DataFrame = {
-    val c = hamCandidateCount(s)
-    val qb = queriesOf(emb)
-      .select(col("vec_id").as("q_id"),
-        col("bits_lo").as("q_lo"), col("bits_hi").as("q_hi"))
-    val cb = corpusOf(emb)
-      .select(col("vec_id"), col("bits_lo"), col("bits_hi"))
-    cb.crossJoin(broadcast(qb))
-      .select(col("q_id"), col("vec_id"),
-        (bit_count(col("q_lo").bitwiseXOR(col("bits_lo"))) +
-         bit_count(col("q_hi").bitwiseXOR(col("bits_hi")))).as("hd"))
-      .withColumn("prn", row_number()
-        .over(Window.partitionBy("q_id").orderBy(asc("hd"), asc("vec_id"))))
-      .filter(col("prn") <= c)
-      .select("q_id", "vec_id")
-  }
-
   /** K3j `sim_hamming` (round 14): binary-quantization two-stage retrieval
     * — the cheapest stage-1 representation in the family (1 bit per
     * dimension, the modern "binary embeddings" production pattern): each
@@ -1440,8 +1314,8 @@ object VectorOps {
     * all), keeps the top `HamCandidates`, and stage 2 reranks just those
     * by full-dim exact cosine. Like `sim_mrl` there is no training and no
     * index build; the accuracy knob is C alone (recall→1.0 as C→|corpus|
-    * — the exhaustive-C rank-identity law in VectorOpsSpec, measured
-    * recall-vs-C in the AnnRecall sweep). Sign-bit Hamming estimates the
+    * — the exhaustive-C rank-identity law in VectorOpsSpec; measured
+    * recall-vs-C in `annrecall_*.json`). Sign-bit Hamming estimates the
     * angle (Charikar 2002 SimHash: E[hd/Dim] = θ/π), so the stage-1
     * ordering tracks cosine.
     *
@@ -1450,29 +1324,31 @@ object VectorOps {
     * mirror, scan schema asserted `(vec_id, bits_lo, bits_hi)` in
     * SourcesSpec — at 100 TB this is the difference between scanning the
     * corpus and scanning 6% of it); its BNLJ carries the `sim_topk`
-    * counted allowance (≤`QuerySetSize` broadcast rows). Stage 2 never
-    * rescans: the C×|queries| candidate ids come back onto ONE corpus
-    * hash join — broadcast under `MrlBroadcastMaxRows`, shuffle hash join
-    * beyond (the sweep's exhaustive-C regime).
+    * counted allowance (≤`QuerySetSize` broadcast rows). Stage 2 is
+    * [[exactRerank]].
     */
-  def simHamming(s: SparkSession, dir: String): DataFrame = {
+  def simHamming(s: SparkSession, dir: String): DataFrame =
+    simHammingAt(s, dir, HamCandidates)
+
+  /** `sim_hamming` at an explicit stage-2 depth `c` (the registered query
+    * runs at [[HamCandidates]]; the exhaustive-C law runs at |corpus|).
+    */
+  private[graft] def simHammingAt(s: SparkSession, dir: String, c: Long): DataFrame = {
     val emb = hamStaged(s, dir)
-    val q = queriesOf(emb)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val cand = hamCandidates(s, emb)
-    val candSide =
-      if (hamCandidateCount(s) * querySet(s) <= MrlBroadcastMaxRows) broadcast(cand)
-      else cand
-    corpusOf(emb)
-      .select("vec_id", "embedding")
-      .join(candSide, "vec_id")
-      .join(broadcast(q), "q_id")
+    val qb = queriesOf(emb)
+      .select(col("vec_id").as("q_id"),
+        col("bits_lo").as("q_lo"), col("bits_hi").as("q_hi"))
+    val cand = corpusOf(emb)
+      .select(col("vec_id"), col("bits_lo"), col("bits_hi"))
+      .crossJoin(broadcast(qb))
       .select(col("q_id"), col("vec_id"),
-        Vec.cosineF(col("q_emb"), col("embedding")).as("cos"))
-      .withColumn("rn", row_number()
-        .over(Window.partitionBy("q_id").orderBy(desc("cos"), asc("vec_id"))).cast("int"))
-      .filter(col("rn") <= TopK)
-      .oracleSorted("q_id", "rn")
+        (bit_count(col("q_lo").bitwiseXOR(col("bits_lo"))) +
+         bit_count(col("q_hi").bitwiseXOR(col("bits_hi")))).as("hd"))
+      .withColumn("prn", row_number()
+        .over(Window.partitionBy("q_id").orderBy(asc("hd"), asc("vec_id"))))
+      .filter(col("prn") <= c)
+      .select("q_id", "vec_id")
+    exactRerank(emb, cand)
   }
 
   // ------------------------------------------------------------------
@@ -1511,22 +1387,8 @@ object VectorOps {
     */
   val HnswIters = 3
 
-  /** `graft.sim.hnswIters` session conf overrides the pinned round count —
-    * the AnnRecall iters-ladder knob (round-16 VERDICT #6: on the hard 1×
-    * random geometry it was unknown whether the 3-round cap or the graph
-    * binds beam-8 recall). The registered query never sets it: the oracle
-    * unrolls exactly [[HnswIters]] rounds.
-    */
-  val HnswItersConf = "graft.sim.hnswIters"
-
-  private[graft] def hnswItersOf(s: SparkSession): Int =
-    s.conf.get(HnswItersConf, HnswIters.toString).toInt
-
-  /** Beam width: unexpanded nodes expanded per round per query
-    * (session-overridable for the AnnRecall recall-vs-cost sweep).
-    */
+  /** Beam width: unexpanded nodes expanded per round per query. */
   val HnswBeam = 8
-  val HnswBeamConf = "graft.sim.hnswBeam"
 
   /** Fixed staging root of the graph column family `sim_hnsw` reads (the
     * `MrlStageDir` discipline: immutable `by/<digest>` targets + `current`
@@ -1539,9 +1401,6 @@ object VectorOps {
     * column family is never rescanned at query time.
     */
   val HnswStageDir = "/tmp/graft_hnsw_graph"
-
-  private[graft] def hnswBeamWidth(s: SparkSession): Long =
-    s.conf.get(HnswBeamConf, HnswBeam.toString).toLong
 
   /** Bucket-count exponent for a corpus of n vectors: the smallest b ≥ 3
     * with `HnswTargetList`·2^b ≥ n (capped at [[HnswMaxBits]]). Pure
@@ -1641,7 +1500,7 @@ object VectorOps {
       Relational.stageInto(HnswStageDir,
         // the build constants are part of the key: a constant change must
         // re-stage, not silently reuse the old family
-        s"$dir|hnsw5|M=$HnswM|C=$HnswCand|q=${querySet(s)}|" +
+        s"$dir|hnsw5|M=$HnswM|C=$HnswCand|" +
           Relational.sourceFingerprint(s"$dir/embeddings.parquet")) {
         target =>
           val bits = hnswBits(
@@ -1662,7 +1521,7 @@ object VectorOps {
             .lineageCut(eager = false)
           // bucketed-corpus family: the serving layout (vectors keyed by
           // their bucket) the query-time own-bucket entry scan key-joins
-          // against — see hnswVisited (round 16)
+          // against — see simHnsw (round 16)
           nodes.select("b", "vec_id", "embedding")
             .sort("b").write.mode("overwrite").parquet(s"$target/buckets")
           // portal per populated bucket: its min-vec_id node (an arbitrary
@@ -1730,12 +1589,56 @@ object VectorOps {
     Tables.parquet(s, s"${Relational.stagedRoot(HnswStageDir)}/buckets")
   }
 
-  /** The VISITED-and-scored frame of `sim_hnsw` — every (q_id, vec_id,
-    * cos) the beam search touched, BEFORE final ranking; split out for
-    * the AnnRecall sweep's scored-pairs cost axis (same rationale as
-    * [[annCandidates]]).
+  /** K3n `sim_hnsw` (round 15): graph-based ANN — the NSW/HNSW family
+    * (Malkov & Yashunin 2016), the serving-side default index
+    * (hnswlib, Lucene, pgvector) and the one ANN class missing next to
+    * LSH/IVF/PQ/MRL/Hamming (round-14 VERDICT #1). The index is a staged
+    * NAVIGABLE NEIGHBOR GRAPH over sign-LSH buckets whose count grows
+    * with the corpus ([[hnswBits]]): within-bucket kNN edges (cosine,
+    * degree `HnswM`, selected through the occlusion/diversity prune —
+    * [[diversifiedKnn]], round 16 — and symmetrized for reachability) plus long-range
+    * shortcuts to the portals (min-vec_id hubs) of each node's 1-bit-flip
+    * buckets (~log n per node — the HNSW logarithmic-degree shape; a
+    * flipped sign bucket is the geometrically adjacent half-space cell,
+    * the `sim_ann` multi-probe identity). A query enters at the portals
+    * of its own bucket and its Hamming-≤2 flips (see [[hnswFlips2]] for
+    * why radius 2) PLUS a pre-expanded scan of its own bucket's members
+    * (round 16 — see the rationale at the scan site below),
+    * then runs `HnswIters` rounds of bounded beam search: each round expands the `HnswBeam` best
+    * not-yet-expanded nodes, scores their neighbors by exact full-dim
+    * cosine, and folds them into the visited set; the answer is the
+    * cosine top-`AnnTopK` of everything visited. Determinism: every float
+    * is the shared `Vec.cosineF` fold, buckets/flips/portals are pure
+    * integer functions, every tie breaks on vec_id, and the expansion
+    * count is fixed — so the oracle replays the ENTIRE search (graph
+    * build + every beam round) as chained CTEs and the result hash-gates.
+    *
+    * Scale shape: the build is bucketed (within-bucket self-join at
+    * corpus-adaptive granularity — candidate mass Σ|bucket|² ≈
+    * n·`HnswTargetList`, LINEAR, where a fixed-k within-list kNN would be
+    * n²/k) and runs ONCE into the immutable staged family; at query time
+    * per-query work is `HnswIters × HnswBeam` key-lookup joins against
+    * the edge family (destination embeddings inline — the corpus
+    * embedding column family is NEVER rescanned), each frontier a
+    * broadcast of ≤ queries × beam rows. Unlike IVF's probe-a-fraction
+    * scan, the touched-row count is independent of corpus size — the
+    * property that makes graph indexes the high-recall/low-latency
+    * serving choice.
+    *
+    * Hard-geometry recall bound (round-17 iters×beam ladder,
+    * `annrecall_1x_r17.json` — round-16 VERDICT #6 asked whether the
+    * 3-round cap or the graph binds the 1× random-geometry beam-8
+    * recall): iters 3/5/8 at beam 8 all read recall 0.456 with the
+    * visited set nearly frozen (28.9k → 29.5k → 30.2k scored pairs) —
+    * the frontier exhausts its reachable neighborhood, so extra rounds
+    * are NOT the lever; beam 32 moves 0.752 → 0.776 across the same
+    * ladder, inside the ±0.053 binomial band. The binding constraint is
+    * greedy-search reachability on unclustered geometry (the classic NSW
+    * local-optimum); the known fix is a multi-layer (hierarchical) entry
+    * graph, not more rounds — the default stays [[HnswIters]] = 3, which
+    * the measurement shows loses nothing.
     */
-  private[graft] def hnswVisited(s: SparkSession, dir: String): DataFrame = {
+  def simHnsw(s: SparkSession, dir: String): DataFrame = {
     val (edges, portals) = hnswStaged(s, dir)
     val buckets = hnswBuckets(s, dir)
     val bits = hnswCorpusBits(s, dir)
@@ -1775,12 +1678,12 @@ object VectorOps {
       .select(col("q_id"), col("vec_id"),
         Vec.cosineF(col("q_emb"), col("embedding")).as("cos"),
         lit(true).as("ex"))
-    val beam = hnswBeamWidth(s)
+    val beam = HnswBeam.toLong
     // a member can also be a fan portal: fold duplicates, expanded wins
     var v = fan.union(own)
       .groupBy("q_id", "vec_id")
       .agg(max(col("cos")).as("cos"), max(col("ex")).as("ex"))
-    for (_ <- 1 to hnswItersOf(s)) {
+    for (_ <- 1 to HnswIters) {
       // rank UNEXPANDED nodes per query; the top `beam` expand this round
       // and flip to expanded — each node expands at most once (the HNSW
       // visited-set discipline), so no edge is fetched twice for a query
@@ -1803,63 +1706,11 @@ object VectorOps {
         .agg(max(col("cos")).as("cos"), max(col("ex")).as("ex"))
     }
     v.select("q_id", "vec_id", "cos")
-  }
-
-  /** K3n `sim_hnsw` (round 15): graph-based ANN — the NSW/HNSW family
-    * (Malkov & Yashunin 2016), the serving-side default index
-    * (hnswlib, Lucene, pgvector) and the one ANN class missing next to
-    * LSH/IVF/PQ/MRL/Hamming (round-14 VERDICT #1). The index is a staged
-    * NAVIGABLE NEIGHBOR GRAPH over sign-LSH buckets whose count grows
-    * with the corpus ([[hnswBits]]): within-bucket kNN edges (cosine,
-    * degree `HnswM`, selected through the occlusion/diversity prune —
-    * [[diversifiedKnn]], round 16 — and symmetrized for reachability) plus long-range
-    * shortcuts to the portals (min-vec_id hubs) of each node's 1-bit-flip
-    * buckets (~log n per node — the HNSW logarithmic-degree shape; a
-    * flipped sign bucket is the geometrically adjacent half-space cell,
-    * the `sim_ann` multi-probe identity). A query enters at the portals
-    * of its own bucket and its Hamming-≤2 flips (see [[hnswFlips2]] for
-    * why radius 2) PLUS a pre-expanded scan of its own bucket's members
-    * (round 16 — see the rationale at the scan site in [[hnswVisited]]),
-    * then runs `HnswIters` rounds of bounded beam search: each round expands the `HnswBeam` best
-    * not-yet-expanded nodes, scores their neighbors by exact full-dim
-    * cosine, and folds them into the visited set; the answer is the
-    * cosine top-`AnnTopK` of everything visited. Determinism: every float
-    * is the shared `Vec.cosineF` fold, buckets/flips/portals are pure
-    * integer functions, every tie breaks on vec_id, and the expansion
-    * count is fixed — so the oracle replays the ENTIRE search (graph
-    * build + every beam round) as chained CTEs and the result hash-gates.
-    *
-    * Scale shape: the build is bucketed (within-bucket self-join at
-    * corpus-adaptive granularity — candidate mass Σ|bucket|² ≈
-    * n·`HnswTargetList`, LINEAR, where a fixed-k within-list kNN would be
-    * n²/k) and runs ONCE into the immutable staged family; at query time
-    * per-query work is `HnswIters × HnswBeam` key-lookup joins against
-    * the edge family (destination embeddings inline — the corpus
-    * embedding column family is NEVER rescanned), each frontier a
-    * broadcast of ≤ queries × beam rows. Unlike IVF's probe-a-fraction
-    * scan, the touched-row count is independent of corpus size — the
-    * property that makes graph indexes the high-recall/low-latency
-    * serving choice.
-    *
-    * Hard-geometry recall bound (round-17 iters×beam ladder,
-    * `annrecall_1x_r17.json` — round-16 VERDICT #6 asked whether the
-    * 3-round cap or the graph binds the 1× random-geometry beam-8
-    * recall): iters 3/5/8 at beam 8 all read recall 0.456 with the
-    * visited set nearly frozen (28.9k → 29.5k → 30.2k scored pairs) —
-    * the frontier exhausts its reachable neighborhood, so extra rounds
-    * are NOT the lever; beam 32 moves 0.752 → 0.776 across the same
-    * ladder, inside the ±0.053 binomial band. The binding constraint is
-    * greedy-search reachability on unclustered geometry (the classic NSW
-    * local-optimum); the known fix is a multi-layer (hierarchical) entry
-    * graph, not more rounds — the default stays [[HnswIters]] = 3, which
-    * the measurement shows loses nothing.
-    */
-  def simHnsw(s: SparkSession, dir: String): DataFrame =
-    hnswVisited(s, dir)
       .withColumn("rn", row_number()
         .over(Window.partitionBy("q_id").orderBy(desc("cos"), asc("vec_id"))).cast("int"))
       .filter(col("rn") <= AnnTopK)
       .oracleSorted("q_id", "rn")
+  }
 
   /** K3n′ `sim_hnsw_incremental` (round 15): graph-index maintenance — the
     * K3h (`sim_ivf_incremental`) discipline applied to the NSW graph,
@@ -2191,19 +2042,13 @@ object VectorOps {
     * side (k×9 rows), never the corpus.
     */
   def simAnn(s: SparkSession, dir: String): DataFrame =
-    annCandidates(s, dir)
-      .withColumn("rn", row_number()
-        .over(Window.partitionBy("q_id").orderBy(desc("cos"), asc("vec_id"))).cast("int"))
-      .filter(col("rn") <= AnnTopK)
-      .oracleSorted("q_id", "rn")
+    simAnnAt(s, dir, AnnProbeMasks)
 
-  /** The scored-candidate frame of `sim_ann` (every bucket-matched
-    * (query, corpus) pair with its cosine, BEFORE ranking) — split out so
-    * [[graft.AnnRecall]] can count scored pairs as the cost axis of the
-    * recall-vs-cost measurement without duplicating the probe logic.
+  /** `sim_ann` over an explicit probe-mask set (the registered query
+    * probes [[AnnProbeMasks]]; the wider-radius recall law passes
+    * `probeMasks(2)`).
     */
-  private[graft] def annCandidates(s: SparkSession, dir: String): DataFrame = {
-    val masks = probeMasks(s.conf.get(AnnProbeFlipsConf, "1").toInt)
+  private[graft] def simAnnAt(s: SparkSession, dir: String, masks: Seq[Long]): DataFrame = {
     val bucketed = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding"),
         Vec.signBucket(col("embedding"), AnnBits).as("bucket"))
@@ -2212,10 +2057,13 @@ object VectorOps {
         explode(array(masks.map(lit): _*)).as("mask"))
       .select(col("q_id"), col("q_emb"),
         col("bucket").bitwiseXOR(col("mask")).as("bucket"))
-    val corpus = corpusOf(bucketed)
-    corpus.join(broadcast(q), "bucket")
+    corpusOf(bucketed).join(broadcast(q), "bucket")
       .select(col("q_id"), col("vec_id"),
         Vec.cosineF(col("q_emb"), col("embedding")).as("cos"))
+      .withColumn("rn", row_number()
+        .over(Window.partitionBy("q_id").orderBy(desc("cos"), asc("vec_id"))).cast("int"))
+      .filter(col("rn") <= AnnTopK)
+      .oracleSorted("q_id", "rn")
   }
 
   /** K3e `sim_mips` (round 11): maximum-inner-product top-k — the ranking
@@ -2269,56 +2117,42 @@ object VectorOps {
     * per-row projection (the M² scalar broadcasts), assignment is
     * shuffle-free against the broadcast centroid row, search is a
     * broadcast equi-join on the probed list id. Recall vs the exact
-    * `sim_mips` ground truth is measured per probe count by AnnRecall
+    * `sim_mips` ground truth per probe count: `annrecall_*.json`
     * (BASELINE.md ANN table).
     */
   def simMipsIvf(s: SparkSession, dir: String): DataFrame =
-    mipsIvfCandidates(Tables.embeddings(s, dir))
+    simMipsIvfAt(s, dir, IvfProbes)
+
+  /** `sim_mips_ivf` probing `nProbes` lists per query (the registered
+    * query probes [[IvfProbes]]; the exhaustive law probes all 10).
+    */
+  private[graft] def simMipsIvfAt(s: SparkSession, dir: String, nProbes: Int): DataFrame =
+    mipsIvfCandidates(Tables.embeddings(s, dir), nProbes)
       .withColumn("rn", row_number()
         .over(Window.partitionBy("q_id").orderBy(desc("dot"), asc("vec_id"))).cast("int"))
       .filter(col("rn") <= AnnTopK)
       .oracleSorted("q_id", "rn")
 
-  /** The norm-augmented frame of `sim_mips_ivf`: original `embedding` plus
-    * the (Dim+1)-dim `ix_emb` the IVF structure indexes. Split out so the
-    * candidate frame below and AnnRecall share one augmentation.
+  /** Scored-candidate frame of `sim_mips_ivf` (pre-rank): the original
+    * `embedding` plus the (Dim+1)-dim norm-augmented `ix_emb` the IVF
+    * structure indexes. Centroids are the exact-decimal label means of the
+    * AUGMENTED vectors (the oracle mirrors the (Dim+1)-dim cell/comp/cent
+    * CTEs).
     */
-  private[graft] def mipsAugmented(emb: DataFrame): DataFrame = {
+  private[graft] def mipsIvfCandidates(emb: DataFrame, nProbes: Int): DataFrame = {
     import graft.functions.ScalarAttach._
     val m2row = corpusOf(emb)
       .agg(max(Vec.dotF(col("embedding"), col("embedding"))).as("m2"))
-    emb.attachScalarRow(m2row).select(
+    val aug = emb.attachScalarRow(m2row).select(
       col("vec_id"), col("label"), col("embedding"),
       concat(col("embedding"), array(
-        when(col("vec_id") < querySet(emb.sparkSession), lit(0.0f))
+        when(col("vec_id") < QuerySetSize.toLong, lit(0.0f))
           .otherwise(sqrt(col("m2") -
             Vec.dotF(col("embedding"), col("embedding"))).cast("float"))))
         .as("ix_emb"))
+    val cent = labelMeanCentroids(aug.select(col("label"), col("ix_emb").as("embedding")))
+    ivfCandidatesBy(aug, cent, (q, x) => Vec.dotF(q, x), "dot", nProbes)
   }
-
-  /** Scored-candidate frame of `sim_mips_ivf` (pre-rank) — the AnnRecall
-    * cost axis, same rationale as [[ivfCandidates]]. Centroids are the
-    * exact-decimal label means of the AUGMENTED vectors (the oracle
-    * mirrors the (Dim+1)-dim cell/comp/cent CTEs).
-    */
-  private[graft] def mipsIvfCandidates(emb: DataFrame): DataFrame = {
-    val (aug, cent) = mipsIvfParts(emb)
-    mipsIvfCandidates(aug, cent)
-  }
-
-  /** Probe-count-independent halves of the `sim_mips_ivf` structure — the
-    * augmented frame and its label-mean centroids. AnnRecall hoists these
-    * out of its probe sweep (round-12 ADVICE: only the probed equi-join
-    * depends on `IvfProbesConf`; rebuilding the augmentation per iteration
-    * re-paid the centroid aggregation 4×).
-    */
-  private[graft] def mipsIvfParts(emb: DataFrame): (DataFrame, DataFrame) = {
-    val aug = mipsAugmented(emb)
-    (aug, labelMeanCentroids(aug.select(col("label"), col("ix_emb").as("embedding"))))
-  }
-
-  private[graft] def mipsIvfCandidates(aug: DataFrame, cent: DataFrame): DataFrame =
-    ivfCandidatesBy(aug, cent, (q, x) => Vec.dotF(q, x), "dot")
 
   /** K3c `sim_ivf`: IVF (inverted-file) ANN — the second classic coarse
     * index besides LSH. Structure: (1) k centroids; (2) every corpus vector
@@ -2393,36 +2227,23 @@ object VectorOps {
     * (label-mean centroids) and the kmeans-learned deployment form.
     */
   private[graft] def simIvfWith(emb: DataFrame, cent: DataFrame): DataFrame =
-    ivfCandidates(emb, cent)
+    ivfCandidatesBy(emb.withColumn("ix_emb", col("embedding")), cent,
+        (q, x) => Vec.cosineF(q, x), "cos", IvfProbes)
       .withColumn("rn", row_number()
         .over(Window.partitionBy("q_id").orderBy(desc("cos"), asc("vec_id"))).cast("int"))
       .filter(col("rn") <= AnnTopK)
       .oracleSorted("q_id", "rn")
-
-  /** Probed lists per query: `graft.ivfProbes` session conf overrides the
-    * pinned [[IvfProbes]] default — the sweep axis of AnnRecall's
-    * recall-vs-cost measurement (the registered `sim_ivf` query never sets
-    * it, so the oracle contract is untouched).
-    */
-  val IvfProbesConf = "graft.ivfProbes"
-
-  /** The scored-candidate frame of IVF search (every probed-list
-    * (query, corpus) pair with its cosine, BEFORE ranking) — split out for
-    * [[graft.AnnRecall]], same rationale as [[annCandidates]].
-    */
-  private[graft] def ivfCandidates(emb: DataFrame, cent: DataFrame): DataFrame =
-    ivfCandidatesBy(emb.withColumn("ix_emb", col("embedding")), cent,
-      (q, x) => Vec.cosineF(q, x), "cos")
 
   /** IVF candidate scoring with a SEPARATE index space: coarse assignment
     * and probing run on the `ix_emb` column, candidate scoring on the
     * original `embedding` pair — the hook through which the MIPS
     * norm-augmentation (K3e) serves from the same inverted-file structure.
     * `sim_ivf` passes `ix_emb = embedding` and cosine, degenerating to the
-    * classic single-space IVF.
+    * classic single-space IVF. Each query probes its `nProbes` nearest
+    * lists.
     */
   private[graft] def ivfCandidatesBy(emb: DataFrame, cent: DataFrame,
-      score: (Column, Column) => Column, scoreName: String): DataFrame = {
+      score: (Column, Column) => Column, scoreName: String, nProbes: Int): DataFrame = {
     // One row holding all k centroids → broadcast, no shuffle to assign.
     // Lineage cut + materialized once (`localCheckpoint(false)`, not
     // `cache`): both the corpus-assignment branch and the query-probe branch
@@ -2447,7 +2268,6 @@ object VectorOps {
     val corpus = corpusOf(withCents)
       .select(col("vec_id"), col("embedding"), nearest(col("ix_emb")).getField("lbl").as("ilist"))
     // Queries probe their nProbes nearest lists (query set is tiny).
-    val nProbes = emb.sparkSession.conf.get(IvfProbesConf, IvfProbes.toString).toInt
     val probes = queriesOf(withCents)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         posexplode(slice(array_sort(transform(col("cents"),
@@ -2527,14 +2347,6 @@ object VectorOps {
     */
   val SemMaxBits = 24
 
-  /** `graft.semBits` session conf pins the refinement exponent — the
-    * law/bench-exhibit knob (b = 0 replays the pre-round-17 fixed-k form
-    * whose Σ|cluster|² ≈ N²/k made it the registry's one scale-killer at
-    * 100×). The registered query never sets it: both engines derive the
-    * exponent from the corpus count via the same integer ladder.
-    */
-  val SemBitsConf = "graft.semBits"
-
   /** Refinement exponent for k0 coarse cells over n vectors: the smallest
     * b ≥ 0 with k0·[[SemTargetCluster]]·2^b ≥ n (capped at
     * [[SemMaxBits]]). Pure integer comparisons — the oracle's
@@ -2584,8 +2396,11 @@ object VectorOps {
     * two driver-side counts (coarse frame is k0 rows; the corpus count is
     * one footer-metadata job) — index-build state, like [[hnswBits]].
     */
-  def dedupSemantic(s: SparkSession, dir: String): DataFrame =
-    dedupSemanticWith(Tables.embeddings(s, dir), null)
+  def dedupSemantic(s: SparkSession, dir: String): DataFrame = {
+    val emb = Tables.embeddings(s, dir)
+    val cent = labelMeanCentroids(emb)
+    dedupSemanticWith(emb, cent, semBits(cent.count(), emb.count()))
+  }
 
   /** The DEPLOYMENT form of semantic dedup (mirror of [[simIvfKmeans]]):
     * coarse clusters LEARNED by the k-means loop instead of label means —
@@ -2603,24 +2418,20 @@ object VectorOps {
       val cent = kmeansCenters(emb).zipWithIndex
         .map { case (c, cid) => (cid, c) }.toSeq
         .toDF("c_label", "cvec")
-      dedupSemanticWith(emb, cent).lineageCut()
+      dedupSemanticWith(emb, cent, semBits(cent.count(), emb.count())).lineageCut()
     } finally emb.unpersist()
   }
 
-  /** Semantic-dedup core over ANY (c_label, cvec) centroid frame (null →
-    * the oracle-checkable [[labelMeanCentroids]] build) — assignment +
-    * within-cluster prune + verdict, shared by `dedup_semantic` and the
-    * kmeans-learned deployment form.
+  /** Semantic-dedup core over ANY (c_label, cvec) centroid frame —
+    * assignment + within-cluster prune + verdict, shared by
+    * `dedup_semantic` and the kmeans-learned deployment form. `bits` is
+    * the cell-refinement exponent: both callers pass the corpus-adaptive
+    * [[semBits]] ladder value, derived once at "index build" from the
+    * coarse-cell and corpus counts; b = 0 is the fixed-k
+    * form whose Σ|cluster|² ≈ N²/k the ladder exists to break.
     */
-  private[graft] def dedupSemanticWith(emb: DataFrame, cent0: DataFrame): DataFrame = {
+  private[graft] def dedupSemanticWith(emb: DataFrame, cent: DataFrame, bits: Int): DataFrame = {
     import graft.functions.ScalarAttach._
-    val s = emb.sparkSession
-    val cent = if (cent0 == null) labelMeanCentroids(emb) else cent0
-    // corpus-adaptive refinement exponent (round-16 VERDICT #1): derived
-    // once at "index build" from the coarse-cell and corpus counts; the
-    // conf override exists only for the fixed-k law/bench exhibit
-    val bits = s.conf.getOption(SemBitsConf).map(_.toInt)
-      .getOrElse(semBits(cent.count(), emb.count()))
     val centsRow = cent
       .agg(collect_list(struct(col("c_label"), col("cvec"))).as("cents"))
       .lineageCut(eager = false)
@@ -2689,13 +2500,6 @@ object VectorOps {
     */
   val SemLshBits = 5
 
-  /** `graft.semLshBits` session conf pins the width — the law/bench
-    * exhibit knob (specs pin 5 to keep the hand-built bucket geometry;
-    * the registered query never sets it, so both engines derive the
-    * exponent from the corpus count).
-    */
-  val SemLshBitsConf = "graft.semLshBits"
-
   /** Ladder width for the LSH form: smallest b with 64·2^b ≥ n, floored
     * at the historical [[SemLshBits]] so small fixtures keep their bucket
     * geometry (and [[graft.functions.Vec.signBucket]] always gets ≥ 1
@@ -2723,11 +2527,9 @@ object VectorOps {
     */
   def dedupSemanticLsh(s: SparkSession, dir: String): DataFrame = {
     val emb0 = Tables.embeddings(s, dir)
-    // width from the corpus-count ladder (round 17), conf only for the
-    // pinned-geometry spec laws; the floor keeps every shipped sf ≤ 0.1
-    // at the historical 5-bit contract
-    val bits = s.conf.getOption(SemLshBitsConf).map(_.toInt)
-      .getOrElse(semLshBitsOf(emb0.count()))
+    // width from the corpus-count ladder (round 17); the floor keeps
+    // every shipped sf ≤ 0.1 at the historical 5-bit contract
+    val bits = semLshBitsOf(emb0.count())
     val e = emb0
       .select(col("vec_id"), col("embedding"),
         Vec.signBucket(col("embedding"), bits).as("b"))

@@ -40,12 +40,12 @@ class AnnRecallSpec extends AnyFunSuite {
   }
 
   // Measured corpus values (deterministic — no RNG in the family):
-  // sim_ann 0.12, sim_ivf 0.32, sim_ivf_kmeans 0.76. Notably the
-  // kmeans-LEARNED coarse quantizer beats label-mean centroids ~2.4x on
-  // recall at identical probe cost — random labels carry no geometry, the
-  // learned centroids adapt to it; 9-probe sign-LSH trails both because a
-  // cosine-0.4 "neighbour" flips ~3 of 8 sign bits. Floors sit one
-  // deliberate-change margin below the measured values.
+  // sim_ann 0.12, sim_ivf 0.32, sim_hnsw 0.32, sim_ivf_kmeans 0.76.
+  // Notably the kmeans-LEARNED coarse quantizer beats label-mean centroids
+  // ~2.4x on recall at identical probe cost — random labels carry no
+  // geometry, the learned centroids adapt to it; 9-probe sign-LSH trails
+  // both because a cosine-0.4 "neighbour" flips ~3 of 8 sign bits. Floors
+  // sit one deliberate-change margin below the measured values.
   test("sim_ann recall@5 on the sf0.1 corpus stays above its floor") {
     val r = recallOf(VectorOps.simAnn(spark, dir))
     info(f"sim_ann corpus recall@5 = $r%.2f")
@@ -54,9 +54,7 @@ class AnnRecallSpec extends AnyFunSuite {
 
   test("sim_ann probe radius is the recall lever: flips=2 strictly beats flips=1") {
     val r1 = recallOf(VectorOps.simAnn(spark, dir))
-    spark.conf.set(VectorOps.AnnProbeFlipsConf, "2")
-    val r2 = try recallOf(VectorOps.simAnn(spark, dir))
-    finally spark.conf.unset(VectorOps.AnnProbeFlipsConf)
+    val r2 = recallOf(VectorOps.simAnnAt(spark, dir, VectorOps.probeMasks(2)))
     info(f"sim_ann corpus recall@5: flips=1 $r1%.2f → flips=2 $r2%.2f")
     // candidates scale 9/256 → 37/256 of the corpus per query; on the
     // random-vector corpus (the hardest regime) the wider radius must
@@ -69,6 +67,16 @@ class AnnRecallSpec extends AnyFunSuite {
     val r = recallOf(VectorOps.simIvf(spark, dir))
     info(f"sim_ivf corpus recall@5 = $r%.2f")
     assert(r >= 0.28, f"sim_ivf corpus recall@5 $r%.2f below documented floor 0.28")
+  }
+
+  // sim_hnsw runs at the registered HnswIters/HnswBeam (measured 0.32 on
+  // the 5-query split; the 50-query sweep in annrecall_1x_r17.json read
+  // 0.456 at beam 8). Its top-K is ranked by exact cosine over the visited
+  // set, so recall is bounded by graph reachability alone.
+  test("sim_hnsw recall@5 on the sf0.1 corpus stays above its floor") {
+    val r = recallOf(VectorOps.simHnsw(spark, dir))
+    info(f"sim_hnsw corpus recall@5 = $r%.2f")
+    assert(r >= 0.28, f"sim_hnsw corpus recall@5 $r%.2f below documented floor 0.28")
   }
 
   test("sim_ivf with kmeans-learned centroids: corpus recall@5 above floor") {

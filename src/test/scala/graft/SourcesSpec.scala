@@ -204,7 +204,7 @@ class SourcesSpec extends AnyFunSuite {
     val fields = scans.map(_.requiredSchema.fieldNames.toSet)
     // stage 1 (corpus + query prefix sides): the scan schema is EXACTLY
     // id + prefix — the 64-float embedding family is never decoded, which
-    // is the 4× scan-bytes claim (measured in graft.MrlBytes)
+    // is the 4× scan-bytes claim (footer-measured in mrl_bytes_r14.json)
     val stage1 = fields.filter(_.contains("prefix"))
     assert(stage1.nonEmpty, s"no prefix-family scan: $fields")
     stage1.foreach(fs => assert(fs == Set("vec_id", "prefix"),
@@ -231,7 +231,7 @@ class SourcesSpec extends AnyFunSuite {
     val fields = scans.map(_.requiredSchema.fieldNames.toSet)
     // stage 1 (corpus + query signature sides): the scan schema is EXACTLY
     // id + the two signature words — 16 bytes/row instead of Dim floats,
-    // the ~16x scan-bytes claim (measured in graft.HamBytes)
+    // the ~16x scan-bytes claim (footer-measured in ham_bytes_r14.json)
     val stage1 = fields.filter(_.contains("bits_lo"))
     assert(stage1.nonEmpty, s"no signature-family scan: $fields")
     stage1.foreach(fs => assert(fs == Set("vec_id", "bits_lo", "bits_hi"),

@@ -487,16 +487,13 @@ class TextOpsSpec extends AnyFunSuite {
       val base = TextOps.decontaminate(spark, sfDir)
       assert(base.queryExecution.sparkPlan.toString.contains("BroadcastHashJoin"),
         "default path must force-broadcast the (small) eval-gram set")
-      spark.conf.set("graft.decontamBroadcastLimit", "0")
-      try {
-        val fallback = TextOps.decontaminate(spark, sfDir)
-        // no broadcast join anywhere in the gated plan (AQE may still
-        // re-broadcast at RUNTIME from observed sizes — that is its job)
-        assert(!fallback.queryExecution.sparkPlan.toString.contains("BroadcastHashJoin"),
-          "limit=0 must drop the broadcast hint")
-        assert(fallback.collect().toSeq.map(_.toString) ==
-          base.collect().toSeq.map(_.toString))
-      } finally spark.conf.unset("graft.decontamBroadcastLimit")
+      val fallback = TextOps.decontaminateAt(spark, sfDir, 0L)
+      // no broadcast join anywhere in the gated plan (AQE may still
+      // re-broadcast at RUNTIME from observed sizes — that is its job)
+      assert(!fallback.queryExecution.sparkPlan.toString.contains("BroadcastHashJoin"),
+        "limit=0 must drop the broadcast hint")
+      assert(fallback.collect().toSeq.map(_.toString) ==
+        base.collect().toSeq.map(_.toString))
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
   }
 

@@ -302,11 +302,8 @@ class VectorOpsSpec extends AnyFunSuite {
         "the domination order must drop at least one of the planted pair")
       // the round-16 fixed-k=1 exhibit (forced b = 0): one cell of 202 =>
       // mass n² — the quadratic shape the adaptive ladder exists to kill
-      val fixed =
-        try {
-          spark.conf.set(VectorOps.SemBitsConf, "0")
-          VectorOps.dedupSemantic(spark, dir)
-        } finally spark.conf.unset(VectorOps.SemBitsConf)
+      val emb = Tables.embeddings(spark, dir)
+      val fixed = VectorOps.dedupSemanticWith(emb, VectorOps.labelMeanCentroids(emb), 0)
       assert(cellMass(fixed) == 202L * 202L, "b=0 is the single-cell exhibit")
       assert(cellMass(adaptive) < 202L * 202L / 2,
         s"adaptive mass ${cellMass(adaptive)} must break the quadratic shape")
@@ -911,15 +908,12 @@ class VectorOpsSpec extends AnyFunSuite {
     // nProbes = 10 (every label-mean list) makes the coarse filter a
     // no-op, so the norm-augmentation identity must give EXACT recall —
     // rank-for-rank, not just set recall
-    spark.conf.set(VectorOps.IvfProbesConf, "10")
-    try {
-      val exhaustive = VectorOps.simMipsIvf(spark, sfDir)
-        .select("q_id", "rn", "vec_id").collect()
-        .map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
-      assert(exhaustive == want,
-        s"exhaustive-probe MIPS-IVF drifted from brute force: ${
-          (exhaustive.toSet diff want.toSet).take(5)}")
-    } finally spark.conf.unset(VectorOps.IvfProbesConf)
+    val exhaustive = VectorOps.simMipsIvfAt(spark, sfDir, 10)
+      .select("q_id", "rn", "vec_id").collect()
+      .map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
+    assert(exhaustive == want,
+      s"exhaustive-probe MIPS-IVF drifted from brute force: ${
+        (exhaustive.toSet diff want.toSet).take(5)}")
     // at the default probe count the result is the dot-ranked top of the
     // PROBED candidate set: every hit must be a candidate, every query
     // must still return AnnTopK rows (the index never starves a query)
@@ -929,7 +923,7 @@ class VectorOpsSpec extends AnyFunSuite {
     assert(byQ.size == VectorOps.QuerySetSize.toInt &&
       byQ.values.forall(_.length == VectorOps.AnnTopK),
       s"probe starvation: ${byQ.view.mapValues(_.length).toMap}")
-    val cands = VectorOps.mipsIvfCandidates(Tables.embeddings(spark, sfDir))
+    val cands = VectorOps.mipsIvfCandidates(Tables.embeddings(spark, sfDir), VectorOps.IvfProbes)
       .select("q_id", "vec_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     got.foreach(r => assert(cands((r.getLong(0), r.getLong(2))),
@@ -978,13 +972,10 @@ class VectorOpsSpec extends AnyFunSuite {
     assert(want.nonEmpty)
     val corpus = Tables.embeddings(spark, sfDir)
       .filter(col("vec_id") >= VectorOps.QuerySetSize).count()
-    def runAt(c: Long): Map[(Long, Int), Long] = {
-      spark.conf.set(VectorOps.MrlCandidatesConf, c.toString)
-      try VectorOps.simMrl(spark, sfDir)
+    def runAt(c: Long): Map[(Long, Int), Long] =
+      VectorOps.simMrlAt(spark, sfDir, c)
         .select("q_id", "rn", "vec_id").collect()
         .map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
-      finally spark.conf.unset(VectorOps.MrlCandidatesConf)
-    }
     // C = |corpus|: stage 2 IS the brute force — exact rank identity, not
     // just set recall (the law that pins both stages' plumbing)
     val exhaustive = runAt(corpus)
@@ -1163,13 +1154,10 @@ class VectorOpsSpec extends AnyFunSuite {
     assert(want.nonEmpty)
     val corpus = Tables.embeddings(spark, sfDir)
       .filter(col("vec_id") >= VectorOps.QuerySetSize).count()
-    def runAt(c: Long): Map[(Long, Int), Long] = {
-      spark.conf.set(VectorOps.HamCandidatesConf, c.toString)
-      try VectorOps.simHamming(spark, sfDir)
+    def runAt(c: Long): Map[(Long, Int), Long] =
+      VectorOps.simHammingAt(spark, sfDir, c)
         .select("q_id", "rn", "vec_id").collect()
         .map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
-      finally spark.conf.unset(VectorOps.HamCandidatesConf)
-    }
     val exhaustive = runAt(corpus)
     assert(exhaustive == want,
       s"exhaustive-C Hamming drifted from sim_topk: ${
