@@ -963,10 +963,10 @@ object SparkEntry {
       // stagedRoot pins the digest this JVM staged (oracleSql is a def,
       // re-evaluated when Verify dumps it AFTER the queries ran), so an
       // interleaved run at another SF re-linking `current` can't poison it
-      (s"SELECT p_partkey, p_name, p_brand, p_type, p_size, p_retailprice FROM read_csv('${Relational.stagedRoot(Relational.CsvStageDir)}/part/*.csv', header=true, " +
+      (s"SELECT p_partkey, p_name, p_brand, p_type, p_size, p_retailprice FROM read_csv('${Staging.stagedRoot(Relational.CsvStageDir)}/part/*.csv', header=true, " +
       "columns={'p_partkey':'BIGINT','p_name':'VARCHAR','p_brand':'VARCHAR','p_type':'VARCHAR','p_size':'INTEGER','p_retailprice':'DOUBLE'}) ORDER BY p_partkey"),
     "scan_json" ->
-      (s"SELECT doc_id, text, lang, source, n_chars FROM read_json('${Relational.stagedRoot(Relational.JsonStageDir)}/documents/*.json', " +
+      (s"SELECT doc_id, text, lang, source, n_chars FROM read_json('${Staging.stagedRoot(Relational.JsonStageDir)}/documents/*.json', " +
       "format='newline_delimited', columns={'doc_id':'BIGINT','text':'VARCHAR','lang':'VARCHAR','source':'VARCHAR','n_chars':'BIGINT'}) ORDER BY doc_id"),
     // DuckDB has no ORC reader: the oracle reads the source PARQUET rows, so
     // the hash match pins the ORC write+read round trip to value-exactness
@@ -978,7 +978,7 @@ object SparkEntry {
     "scan_nested" ->
       (s"SELECT doc_id, meta.lang AS lang, meta.source AS source, meta.n_chars AS n_chars, " +
       s"CAST(len(tokens) AS INT) AS n_tokens, tokens[1] AS first_token, tokens[-1] AS last_token " +
-      s"FROM read_parquet('${Relational.stagedRoot(Relational.NestedStageDir)}/documents/*.parquet') ORDER BY doc_id"),
+      s"FROM read_parquet('${Staging.stagedRoot(Relational.NestedStageDir)}/documents/*.parquet') ORDER BY doc_id"),
     // oracle filters the ORIGINAL flat table — the hash match proves the
     // hive-partitioned round-trip preserved the data
     // the oracle reads the ROW form the files were staged from — the hash

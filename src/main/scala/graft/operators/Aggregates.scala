@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Staging, Tables}
 import graft.functions.{Num, TypedAvg}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import graft.functions.OracleSort._
@@ -25,8 +25,7 @@ object Aggregates {
     // round-17 single-split fan-out (guide §2.5): the four exact-decimal
     // money sums otherwise run serially inside the one-row-group scan
     // task; exact sums are associative — partition-count independent
-    Relational.fanOutIfSingleSplit(s, Tables.lineitem(s, dir), dir,
-        "lineitem", col("l_orderkey"), col("l_linenumber"))
+    Relational.fanOutIfSingleSplit(Tables.lineitem(s, dir), col("l_orderkey"), col("l_linenumber"))
       .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
       .groupBy("l_returnflag", "l_linestatus")
       .agg(
@@ -167,8 +166,7 @@ object Aggregates {
   def aggRollup(s: SparkSession, dir: String): DataFrame =
     // round-17 single-split fan-out — Expand (3 replicas/row) + the decimal
     // partial agg otherwise run serially in the scan task; see aggAvg
-    Relational.fanOutIfSingleSplit(s, Tables.lineitem(s, dir), dir,
-        "lineitem", col("l_orderkey"), col("l_linenumber"))
+    Relational.fanOutIfSingleSplit(Tables.lineitem(s, dir), col("l_orderkey"), col("l_linenumber"))
       // compute the per-row decimal money expression BEFORE the rollup:
       // Expand replicates each row once per grouping set (3× here), and an
       // aggregate-side expression would be re-evaluated per replica —
@@ -227,8 +225,7 @@ object Aggregates {
     */
   def aggWeighted(s: SparkSession, dir: String): DataFrame =
     // round-17 single-split fan-out — same rationale as aggAvg
-    Relational.fanOutIfSingleSplit(s, Tables.lineitem(s, dir), dir,
-        "lineitem", col("l_orderkey"), col("l_linenumber"))
+    Relational.fanOutIfSingleSplit(Tables.lineitem(s, dir), col("l_orderkey"), col("l_linenumber"))
       .groupBy("l_returnflag")
       .agg(
         round(sum(Num.dec2(col("l_extendedprice")) * Num.rate2(col("l_discount"))).cast("double") /
@@ -527,7 +524,7 @@ object Aggregates {
     // regardless of corpus size — so it is a bounded-constant structure
     // (the 256-bin cumulative's class, bigger constant), not a data-sized
     // single partition.
-    val grid = Relational.fanOutIfSingleSplit(s, x, dir, "lineitem", col("c"))
+    val grid = Relational.fanOutIfSingleSplit(x, col("c"))
       .groupBy("c").agg(count(lit(1)).as("cnt"))
       .withColumn("cum", sum("cnt").over(Window.orderBy("c")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
@@ -683,8 +680,7 @@ object Aggregates {
     // the five exact-decimal product sums otherwise run serially inside the
     // one-row-group scan task; hash fan-out parallelizes the partial agg.
     // Sums are exact decimals — associative, partition-count independent.
-    Relational.fanOutIfSingleSplit(s, Tables.lineitem(s, dir), dir, "lineitem",
-        col("l_orderkey"), col("l_linenumber"))
+    Relational.fanOutIfSingleSplit(Tables.lineitem(s, dir), col("l_orderkey"), col("l_linenumber"))
       .groupBy("l_returnflag")
       .agg(
         count(lit(1)).as("n"),
@@ -718,8 +714,7 @@ object Aggregates {
   def aggRegression(s: SparkSession, dir: String): DataFrame = {
     val (x, y) = (Num.dec2(col("l_quantity")), Num.dec2(col("l_extendedprice")))
     // round-17 single-split fan-out — same rationale and proof as aggCorr
-    Relational.fanOutIfSingleSplit(s, Tables.lineitem(s, dir), dir, "lineitem",
-        col("l_orderkey"), col("l_linenumber"))
+    Relational.fanOutIfSingleSplit(Tables.lineitem(s, dir), col("l_orderkey"), col("l_linenumber"))
       .groupBy("l_returnflag")
       .agg(
         count(lit(1)).as("n"),
@@ -915,40 +910,33 @@ object Aggregates {
   val KmvSpaceK1: String =
     ((BigInt(1) << 60) * (KmvK - 1) * 100).toString
 
-  /** Fixed staging root of the distinct (lang, hv) shingle-hash family
+  /** Fixed stage dir of the distinct (lang, hv) shingle-hash family
     * SHARED by `agg_kmv` and `stream_kmv` (round 15, VERDICT #4): both
     * queries consume the same distinct 60-bit-hash set, and at 100× each
     * was independently paying the identical 26M-row corpus
     * explode+distinct (39.5 s + 26.9 s — the two slowest scale rows). The
-    * set now stages ONCE (the `MrlStageDir` immutable-target discipline,
-    * keyed on the documents fingerprint) and both consumers scan the
+    * set now stages ONCE per documents content (see
+    * [[graft.Staging.stage]]) and both consumers scan the
     * vocabulary-sized family. Values are integers, so the parquet round
     * trip is exact and the oracles — which replay the derivation from the
     * ORIGINAL documents table — still hash-gate cell-for-cell.
     */
   val KmvStageDir = "/tmp/graft_kmv_hashes"
 
-  private def stageKmvHashes(s: SparkSession, dir: String): Unit = synchronized {
-    Relational.withStageLock(KmvStageDir) {
-      Relational.stageInto(KmvStageDir,
-        s"$dir|kmv1|${Relational.sourceFingerprint(s"$dir/documents.parquet")}") {
-        target =>
-          Tables.documents(s, dir)
-            .select(col("lang"),
-              explode(array_distinct(TextOps.shingles(col("text"), 3))).as("g"))
-            .select(col("lang"),
-              conv(substring(md5(col("g").cast("binary")), 1, 15), 16, 10)
-                .cast("long").as("hv"))
-            .distinct()
-            .write.mode("overwrite").parquet(s"$target/hashes")
-      }
-    }
-  }
-
   /** The staged distinct (lang, hv) table both KMV consumers read. */
   private[graft] def kmvHashes(s: SparkSession, dir: String): DataFrame = {
-    stageKmvHashes(s, dir)
-    Tables.parquet(s, s"${Relational.stagedRoot(KmvStageDir)}/hashes")
+    val root = Staging.stage(KmvStageDir, dir, "kmv1", s"$dir/documents.parquet") {
+      target =>
+        Tables.documents(s, dir)
+          .select(col("lang"),
+            explode(array_distinct(TextOps.shingles(col("text"), 3))).as("g"))
+          .select(col("lang"),
+            conv(substring(md5(col("g").cast("binary")), 1, 15), 16, 10)
+              .cast("long").as("hv"))
+          .distinct()
+          .write.mode("overwrite").parquet(s"$target/hashes")
+    }
+    Tables.parquet(s, s"$root/hashes")
   }
 
   /** D31 `agg_kmv` (round 14): KMV / theta-style distinct sketch with set

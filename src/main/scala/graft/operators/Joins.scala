@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Staging, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import graft.functions.OracleSort._
@@ -62,12 +62,7 @@ object Joins {
     */
   private def stagedBucketed(s: SparkSession, dir: String, src: String,
                              key: String, df: => DataFrame): String = {
-    val fp = Relational.sourceFingerprint(s"$dir/$src.parquet")
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      // 12 hex chars (48 bits), matching Relational.stageInto's prefix —
-      // the 8-char form had a needlessly higher collision chance between
-      // distinct (dir, fingerprint) keys (round-6 advice)
-      .digest(s"$dir|$fp".getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
+    val digest = Staging.digest(s"$dir|${Staging.fingerprint(s"$dir/$src.parquet")}")
     val name = s"graft_${src}_bkt_$digest"
     bucketLock.synchronized {
       if (!s.catalog.tableExists(name)) {
@@ -114,8 +109,7 @@ object Joins {
     // one-row-group scan task. Decimal sums are associative; results
     // partition-count independent.
     Tables.orders(s, dir)
-      .join(Relational.fanOutIfSingleSplit(s, Tables.lineitem(s, dir), dir,
-          "lineitem", col("l_orderkey")),
+      .join(Relational.fanOutIfSingleSplit(Tables.lineitem(s, dir), col("l_orderkey")),
         col("o_orderkey") === col("l_orderkey"), "inner")
       .groupBy("o_orderstatus")
       .agg(
@@ -127,8 +121,7 @@ object Joins {
   /** C2: multi-way star join with broadcast dimensions — revenue by region. */
   def joinStar(s: SparkSession, dir: String): DataFrame =
     // round-17 single-split fan-out on the fact side — see joinInner
-    Relational.fanOutIfSingleSplit(s, Tables.orders(s, dir), dir, "orders",
-        col("o_custkey"))
+    Relational.fanOutIfSingleSplit(Tables.orders(s, dir), col("o_custkey"))
       .join(Tables.customer(s, dir), col("o_custkey") === col("c_custkey"))
       .join(broadcast(Tables.nation(s, dir)), col("c_nationkey") === col("n_nationkey"))
       .join(broadcast(Tables.region(s, dir)), col("n_regionkey") === col("r_regionkey"))
@@ -157,8 +150,7 @@ object Joins {
       .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
       .select("o_orderkey", "o_orderdate", "o_orderpriority")
     // round-17 single-split fan-out on the fact side — see joinInner
-    Relational.fanOutIfSingleSplit(s, Tables.lineitem(s, dir), dir, "lineitem",
-        col("l_orderkey"))
+    Relational.fanOutIfSingleSplit(Tables.lineitem(s, dir), col("l_orderkey"))
       .filter(col("l_shipdate") > cutoff)
       .select(col("l_orderkey"),
         graft.functions.Num.discounted(col("l_extendedprice"), col("l_discount")).as("disc"))
@@ -189,8 +181,7 @@ object Joins {
         col("o_orderdate") < lit("1996-01-01").cast("timestamp"))
       .select("o_orderkey", "o_custkey")
     // round-17 single-split fan-out on the fact side — see joinInner
-    val li = Relational.fanOutIfSingleSplit(s, Tables.lineitem(s, dir), dir,
-        "lineitem", col("l_orderkey"))
+    val li = Relational.fanOutIfSingleSplit(Tables.lineitem(s, dir), col("l_orderkey"))
       .select("l_orderkey", "l_suppkey", "l_extendedprice", "l_discount")
     val supp = Tables.supplier(s, dir).select("s_suppkey", "s_nationkey")
     val natAsia = Tables.nation(s, dir)

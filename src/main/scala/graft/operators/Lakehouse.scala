@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Staging, Tables}
 import graft.functions.OracleSort._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -159,7 +159,7 @@ object Lakehouse {
   }
 
   /** `compact_files` staging root, fragment count, and per-file target. */
-  private val CompactStageDir =
+  private[graft] val CompactStageDir =
     s"${System.getProperty("java.io.tmpdir")}/graft_compact"
   val CompactSmallFiles = 32
   val CompactTargetBytes: Long = 128L * 1024 * 1024
@@ -194,18 +194,17 @@ object Lakehouse {
     // stage key folds BOTH tuning constants in (round-7 ADVICE #5): editing
     // either invalidates the staged layout automatically instead of silently
     // reusing a layout built under the old constants
-    Relational.stageInto(CompactStageDir,
-      s"$dir|compact1|n=$CompactSmallFiles|t=$CompactTargetBytes|" +
-        Relational.sourceFingerprint(s"$dir/documents.parquet")) { root =>
+    val root = Staging.stage(CompactStageDir, dir,
+        s"compact1|n=$CompactSmallFiles|t=$CompactTargetBytes",
+        s"$dir/documents.parquet") { target =>
       // the fragmented state a micro-batch ingest leaves behind
       Tables.documents(s, dir).repartition(CompactSmallFiles)
-        .write.mode("overwrite").parquet(s"$root/small")
-      val bytes = parquetFiles(s"$root/small").map(Files.size(_)).sum
-      val target = math.max(1L, (bytes + CompactTargetBytes - 1) / CompactTargetBytes).toInt
-      Tables.parquet(s, s"$root/small").repartition(target)
-        .write.mode("overwrite").parquet(s"$root/compacted")
+        .write.mode("overwrite").parquet(s"$target/small")
+      val bytes = parquetFiles(s"$target/small").map(Files.size(_)).sum
+      val files = math.max(1L, (bytes + CompactTargetBytes - 1) / CompactTargetBytes).toInt
+      Tables.parquet(s, s"$target/small").repartition(files)
+        .write.mode("overwrite").parquet(s"$target/compacted")
     }
-    val root = Relational.stagedRoot(CompactStageDir)
     val nBefore = parquetFiles(s"$root/small").size
     val nAfter = parquetFiles(s"$root/compacted").size
     val bytes = parquetFiles(s"$root/small").map(Files.size(_)).sum
@@ -500,9 +499,8 @@ object Lakehouse {
   // M10 scan_timetravel: versioned snapshots, AS-OF reads
   // ------------------------------------------------------------------
 
-  /** Versioned-table staging root (the `MrlStageDir` discipline:
-    * `by/<digest>` + `current`, keyed on the source fingerprint). Each
-    * version is a FULL copy-on-write snapshot directory `v0/ v1/ v2/` —
+  /** Fixed stage dir of the versioned table (see [[graft.Staging.stage]]).
+    * Each version is a FULL copy-on-write snapshot directory `v0/ v1/ v2/` —
     * the Delta/Iceberg v1 model, where a committed version is an
     * immutable file set and time travel is directory selection, never
     * reconstruction.
@@ -528,18 +526,6 @@ object Lakehouse {
     }
   }
 
-  private def stageTimeTravel(s: SparkSession, dir: String): Unit = synchronized {
-    Relational.withStageLock(TtStageDir) {
-      Relational.stageInto(TtStageDir,
-        s"$dir|tt1|${Relational.sourceFingerprint(s"$dir/orders.parquet")}") {
-        target =>
-          (0 until TtVersions).foreach { v =>
-            ttSnapshot(s, dir, v).write.mode("overwrite").parquet(s"$target/v$v")
-          }
-      }
-    }
-  }
-
   /** M10 `scan_timetravel` (round 14): AS-OF version reads over a
     * copy-on-write versioned table — the lakehouse time-travel surface
     * (audit "what did the table say when the model trained", reproduce a
@@ -555,8 +541,11 @@ object Lakehouse {
     * pins the staged snapshot round trip.
     */
   def scanTimetravel(s: SparkSession, dir: String): DataFrame = {
-    stageTimeTravel(s, dir)
-    val root = Relational.stagedRoot(TtStageDir)
+    val root = Staging.stage(TtStageDir, dir, "tt1", s"$dir/orders.parquet") { target =>
+      (0 until TtVersions).foreach { v =>
+        ttSnapshot(s, dir, v).write.mode("overwrite").parquet(s"$target/v$v")
+      }
+    }
     (0 until TtVersions).map { v =>
       Tables.parquet(s, s"$root/v$v")
         .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("sum_cents"),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Staging, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import graft.functions.OracleSort._
 import org.apache.spark.sql.functions._
@@ -66,132 +66,30 @@ object Relational {
     StructField("p_retailprice", DoubleType),
   ))
 
-  /** Fixed staging root of the CSV mirror `scan_csv` reads — fixed because
-    * the DuckDB oracle (a static SQL string) must `read_csv` the same
-    * files; the `current` symlink under it points at the immutable
-    * digest-keyed stage of the active (sfDir, dialect, content) — see
-    * `stageInto`.
+  /** Fixed stage dir of the CSV mirror `scan_csv` reads; see
+    * [[graft.Staging.stage]] for the layout and locking of every stage dir.
     */
   val CsvStageDir = "/tmp/graft_scan_csv"
 
-  /** Content fingerprint of a source parquet path (file or directory), see
-    * [[Tables.fingerprint]]. Included in stage markers so that REGENERATED
-    * testdata at the same path invalidates the stage (round-4 ADVICE #1 — a
-    * path-only marker would let both engines read the same stale mirror,
-    * which the hash gate can never catch because they agree).
+  /** Stage the part table as CSV (the testdata ships parquet only; the
+    * staging is fixture plumbing, not the measured capability). The tag
+    * names the dialect, so a dialect change re-stages.
     */
-  private[graft] def sourceFingerprint(path: String): String =
-    Tables.fingerprint(stageFs, new org.apache.hadoop.fs.Path(path))
-
-  /** Staging reads its sources and writes its stages on the local disk. */
-  private lazy val stageFs =
-    org.apache.hadoop.fs.FileSystem.getLocal(new org.apache.hadoop.conf.Configuration())
-
-  /** OS-level exclusive lock around a stage-check-and-write (round-4 ADVICE
-    * #2: two JVMs — e.g. Bench and Verify — could otherwise interleave
-    * stage-and-read on the fixed /tmp stage dirs). The lock makes each
-    * JVM's check+write atomic; callers also hold the JVM-local
-    * `synchronized` because `FileChannel.lock` throws on overlapping locks
-    * from the SAME JVM.
-    */
-  private[graft] def withStageLock[T](stageDir: String)(body: => T): T = {
-    import java.nio.file.{Files, Paths, StandardOpenOption}
-    Files.createDirectories(Paths.get(stageDir))
-    val ch = java.nio.channels.FileChannel.open(Paths.get(stageDir, ".lock"),
-      StandardOpenOption.CREATE, StandardOpenOption.WRITE)
-    try {
-      val lock = ch.lock()
-      try body finally lock.release()
-    } finally ch.close()
-  }
-
-  /** Immutable-target staging with an atomic `current` symlink: each
-    * (source dir, dialect/version, content fingerprint) stages ONCE into
-    * `<stageDir>/by/<digest>/` — a directory that is never rewritten (a
-    * regenerated source changes the fingerprint, hence the digest, hence
-    * the directory) — and `<stageDir>/current` is atomically re-linked to
-    * it. The oracle's static SQL globs through `current`, so runs at
-    * DIFFERENT scale factors no longer clobber each other's staged bytes
-    * (the round-4/round-5 residual: an interleaved Bench at sf0.1 used to
-    * overwrite the fixed path a Verify dump at sf0.01 was compared
-    * against); a reader that already resolved the old target keeps reading
-    * intact files. `_GRAFT_DONE` inside the target gates trust — a crashed
-    * partial stage is rebuilt, never read.
-    */
-  /** Digest staged by THIS JVM per stage root — lets both engines read the
-    * immutable `by/<digest>` path directly instead of chasing `current`.
-    * `current` exists only as the fallback for a reader that never staged
-    * (it then points at whatever was staged last, the round-5 interleave
-    * residual: a later run at a different SF re-links it). Verify dumps
-    * `oracle_sql.json` AFTER running the queries, so the `def oracleSql`
-    * snapshot resolves to the digest the Spark side actually read.
-    */
-  private val stagedDigests = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Root both engines should read for a stage dir: the digest-pinned
-    * immutable path when this JVM staged it, else the `current` symlink.
-    */
-  def stagedRoot(stageDir: String): String =
-    Option(stagedDigests.get(stageDir))
-      .map(d => s"$stageDir/by/$d").getOrElse(s"$stageDir/current")
-
-  private[graft] def stageInto(stageDir: String, key: String)(write: String => Unit): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    stagedDigests.put(stageDir, digest)
-    val target = Paths.get(stageDir, "by", digest)
-    val done = target.resolve("_GRAFT_DONE")
-    if (!Files.exists(done)) {
-      Files.createDirectories(target)
-      write(target.toString)
-      Files.writeString(done, key)
+  private def stageCsv(s: SparkSession, dir: String): String =
+    Staging.stage(CsvStageDir, dir, "rfc4180", s"$dir/part.parquet") { target =>
+      // escape = '"' → RFC-4180 doubled-quote escaping. Spark's default
+      // escape is backslash, which DuckDB's read_csv (escape = '"') would
+      // parse differently the moment a field contains a quote; pinning both
+      // engines to the RFC dialect makes the quoting claim true, and
+      // SourcesSpec round-trips a quote/comma-bearing frame under these
+      // options. The write is parallel (one CSV file per task): the
+      // oracle's `read_csv` globs the directory and handles one header per
+      // file.
+      Tables.part(s, dir)
+        .write.mode("overwrite")
+        .option("header", "true").option("escape", "\"")
+        .csv(s"$target/part")
     }
-    val current = Paths.get(stageDir, "current")
-    if (!(Files.isSymbolicLink(current) &&
-          Files.readSymbolicLink(current) == current.getParent.relativize(target))) {
-      val tmp = Paths.get(stageDir, s".current_tmp_${java.util.UUID.randomUUID()}")
-      Files.createSymbolicLink(tmp, current.getParent.relativize(target))
-      Files.move(tmp, current, StandardCopyOption.REPLACE_EXISTING,
-        StandardCopyOption.ATOMIC_MOVE)
-    }
-  }
-
-  /** Stage the part table as CSV once per (sfDir, dialect, source content)
-    * (the driver testdata ships parquet only, so the CSV input is
-    * materialized here; the staging is fixture plumbing, not the measured
-    * capability). Re-staged only when the marker changes, so bench passes
-    * pay the write once.
-    */
-  private def stageCsv(s: SparkSession, dir: String): Unit = synchronized {
-    withStageLock(CsvStageDir) {
-      // the stage key carries the DIALECT and a source-content fingerprint
-      // alongside the source dir: a dialect change must invalidate a stage
-      // written by an older build, and a regenerated source at the same
-      // path must invalidate a stale mirror (both failure modes are
-      // oracle-invisible — the two engines would mis-read identically)
-      stageInto(CsvStageDir, s"$dir|rfc4180|${sourceFingerprint(s"$dir/part.parquet")}") {
-        target =>
-          // escape = '"' → RFC-4180 doubled-quote escaping. Spark's DEFAULT
-          // escape is backslash, which DuckDB's read_csv (escape = '"') would
-          // parse differently the moment a field contains a quote — a silent
-          // cross-engine divergence the part data doesn't currently exercise
-          // (round-4 review finding); pinning both engines to the RFC dialect
-          // makes the quoting claim true, and SourcesSpec round-trips a
-          // quote/comma-bearing frame under these options.
-          //
-          // The write is PARALLEL (one CSV file per task — round-4 VERDICT
-          // "What's wrong" #2 flagged the old `coalesce(1)` as off-story for
-          // a path documented as scale discipline): the oracle's `read_csv`
-          // globs the directory and multi-file reads handle one header per
-          // file, so nothing requires a single file.
-          Tables.part(s, dir)
-            .write.mode("overwrite")
-            .option("header", "true").option("escape", "\"")
-            .csv(s"$target/part")
-      }
-    }
-  }
 
   /** A2 `scan_csv`: CSV scan with explicit programmatic schema — the
     * reference's delimited-text ingestion path as a first-class registered
@@ -203,10 +101,10 @@ object Relational {
     * quoting, header handling), not just the row count.
     */
   def scanCsv(s: SparkSession, dir: String): DataFrame = {
-    stageCsv(s, dir)
+    val root = stageCsv(s, dir)
     s.read.schema(partCsvSchema)
       .option("header", "true").option("escape", "\"")
-      .csv(s"${stagedRoot(CsvStageDir)}/part")
+      .csv(s"$root/part")
       .oracleSorted("p_partkey")
   }
 
@@ -219,9 +117,8 @@ object Relational {
     StructField("n_chars", LongType),
   ))
 
-  /** Fixed staging root of the JSONL mirror `scan_json` reads (fixed for
-    * the same oracle-path reason as `CsvStageDir`; same `by/<digest>` +
-    * `current` indirection).
+  /** Fixed stage dir of the JSONL mirror `scan_json` reads (see
+    * [[graft.Staging.stage]]).
     */
   val JsonStageDir = "/tmp/graft_scan_json"
 
@@ -232,16 +129,12 @@ object Relational {
     * arrive in. Parallel write (one file per task); the oracle globs the
     * directory.
     */
-  private def stageJson(s: SparkSession, dir: String): Unit = synchronized {
-    withStageLock(JsonStageDir) {
-      stageInto(JsonStageDir, s"$dir|jsonl1|${sourceFingerprint(s"$dir/documents.parquet")}") {
-        target =>
-          Tables.documents(s, dir)
-            .write.mode("overwrite")
-            .json(s"$target/documents")
-      }
+  private def stageJson(s: SparkSession, dir: String): String =
+    Staging.stage(JsonStageDir, dir, "jsonl1", s"$dir/documents.parquet") { target =>
+      Tables.documents(s, dir)
+        .write.mode("overwrite")
+        .json(s"$target/documents")
     }
-  }
 
   /** A2′ `scan_json`: newline-delimited JSON scan with explicit
     * programmatic schema — no inference (at 100 TB inference samples the
@@ -252,14 +145,13 @@ object Relational {
     * binding, string unescaping, integer width — not just the row count.
     */
   def scanJson(s: SparkSession, dir: String): DataFrame = {
-    stageJson(s, dir)
     s.read.schema(docsJsonSchema)
-      .json(s"${stagedRoot(JsonStageDir)}/documents")
+      .json(s"${stageJson(s, dir)}/documents")
       .oracleSorted("doc_id")
   }
 
-  /** Fixed staging root of the ORC mirror `scan_orc` reads (same
-    * `by/<digest>` + `current` indirection as `CsvStageDir`).
+  /** Fixed stage dir of the ORC mirror `scan_orc` reads (see
+    * [[graft.Staging.stage]]).
     */
   val OrcStageDir = "/tmp/graft_scan_orc"
 
@@ -270,17 +162,13 @@ object Relational {
     * parquet instant micros) — the round trip must be value-exact under
     * the pinned-UTC session. Parallel write, one ORC file per task.
     */
-  private def stageOrc(s: SparkSession, dir: String): Unit = synchronized {
-    withStageLock(OrcStageDir) {
-      stageInto(OrcStageDir, s"$dir|orc1|${sourceFingerprint(s"$dir/orders.parquet")}") {
-        target =>
-          Tables.orders(s, dir)
-            .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate")
-            .write.mode("overwrite")
-            .orc(s"$target/orders")
-      }
+  private def stageOrc(s: SparkSession, dir: String): String =
+    Staging.stage(OrcStageDir, dir, "orc1", s"$dir/orders.parquet") { target =>
+      Tables.orders(s, dir)
+        .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate")
+        .write.mode("overwrite")
+        .orc(s"$target/orders")
     }
-  }
 
   /** A2″′ `scan_orc`: ORC scan — the second columnar format a lake-scale
     * engine must ingest (ORC files arrive from Hive/Trino-era pipelines;
@@ -293,13 +181,12 @@ object Relational {
     * against the parquet original.
     */
   def scanOrc(s: SparkSession, dir: String): DataFrame = {
-    stageOrc(s, dir)
-    s.read.orc(s"${stagedRoot(OrcStageDir)}/orders")
+    s.read.orc(s"${stageOrc(s, dir)}/orders")
       .oracleSorted("o_orderkey")
   }
 
-  /** Fixed staging root of the nested mirror `scan_nested` reads (same
-    * `by/<digest>` + `current` indirection as `CsvStageDir`).
+  /** Fixed stage dir of the nested mirror `scan_nested` reads (see
+    * [[graft.Staging.stage]]).
     */
   val NestedStageDir = "/tmp/graft_scan_nested"
 
@@ -309,18 +196,14 @@ object Relational {
     * annotations); an engine that only reads flat tables makes users
     * flatten 100 TB first.
     */
-  private def stageNested(s: SparkSession, dir: String): Unit = synchronized {
-    withStageLock(NestedStageDir) {
-      stageInto(NestedStageDir, s"$dir|nested1|${sourceFingerprint(s"$dir/documents.parquet")}") {
-        target =>
-          Tables.documents(s, dir)
-            .select(col("doc_id"),
-              struct(col("lang"), col("source"), col("n_chars")).as("meta"),
-              split(col("text"), " ").as("tokens"))
-            .write.mode("overwrite").parquet(s"$target/documents")
-      }
+  private def stageNested(s: SparkSession, dir: String): String =
+    Staging.stage(NestedStageDir, dir, "nested1", s"$dir/documents.parquet") { target =>
+      Tables.documents(s, dir)
+        .select(col("doc_id"),
+          struct(col("lang"), col("source"), col("n_chars")).as("meta"),
+          split(col("text"), " ").as("tokens"))
+        .write.mode("overwrite").parquet(s"$target/documents")
     }
-  }
 
   /** A1⁗ `scan_nested`: nested parquet scan — STRUCT field access and
     * ARRAY element access straight off the columnar layout. Parquet stores
@@ -333,8 +216,7 @@ object Relational {
     * decoding to value-exactness.
     */
   def scanNested(s: SparkSession, dir: String): DataFrame = {
-    stageNested(s, dir)
-    Tables.parquet(s, s"${stagedRoot(NestedStageDir)}/documents")
+    Tables.parquet(s, s"${stageNested(s, dir)}/documents")
       .select(col("doc_id"),
         col("meta.lang").as("lang"), col("meta.source").as("source"),
         col("meta.n_chars").as("n_chars"),
@@ -344,8 +226,8 @@ object Relational {
       .oracleSorted("doc_id")
   }
 
-  /** Fixed staging root of the schema-evolution mirror `scan_evolved`
-    * reads (same `by/<digest>` + `current` indirection).
+  /** Fixed stage dir of the schema-evolution mirror `scan_evolved` reads
+    * (see [[graft.Staging.stage]]).
     */
   val EvoStageDir = "/tmp/graft_scan_evo"
 
@@ -354,20 +236,16 @@ object Relational {
     * the data-lake reality every long-lived ingest hits: columns get added
     * mid-stream and old files are never rewritten.
     */
-  private def stageEvolved(s: SparkSession, dir: String): Unit = synchronized {
-    withStageLock(EvoStageDir) {
-      stageInto(EvoStageDir, s"$dir|evo1|${sourceFingerprint(s"$dir/documents.parquet")}") {
-        target =>
-          val docs = Tables.documents(s, dir)
-          docs.filter(col("doc_id") % 2 === 0)
-            .select("doc_id", "lang", "n_chars")
-            .write.mode("overwrite").parquet(s"$target/batch1")
-          docs.filter(col("doc_id") % 2 === 1)
-            .select("doc_id", "lang", "n_chars", "source")
-            .write.mode("overwrite").parquet(s"$target/batch2")
-      }
+  private def stageEvolved(s: SparkSession, dir: String): String =
+    Staging.stage(EvoStageDir, dir, "evo1", s"$dir/documents.parquet") { target =>
+      val docs = Tables.documents(s, dir)
+      docs.filter(col("doc_id") % 2 === 0)
+        .select("doc_id", "lang", "n_chars")
+        .write.mode("overwrite").parquet(s"$target/batch1")
+      docs.filter(col("doc_id") % 2 === 1)
+        .select("doc_id", "lang", "n_chars", "source")
+        .write.mode("overwrite").parquet(s"$target/batch2")
     }
-  }
 
   /** A1‴ `scan_evolved` (round 6): schema-evolution scan — `mergeSchema`
     * unions the per-file schemas at read time, so pre-evolution rows
@@ -380,16 +258,14 @@ object Relational {
     * NULL backfill.
     */
   def scanEvolved(s: SparkSession, dir: String): DataFrame = {
-    stageEvolved(s, dir)
-    s.read.option("mergeSchema", "true")
-      .parquet(s"${stagedRoot(EvoStageDir)}/batch1", s"${stagedRoot(EvoStageDir)}/batch2")
+    val root = stageEvolved(s, dir)
+    s.read.option("mergeSchema", "true").parquet(s"$root/batch1", s"$root/batch2")
       .select("doc_id", "lang", "n_chars", "source")
       .oracleSorted("doc_id")
   }
 
-  /** Fixed staging root of the file-per-payload mirror `scan_binaryfile`
-    * reads (same `by/<digest>` + `current` indirection as the other stage
-    * dirs).
+  /** Fixed stage dir of the file-per-payload mirror `scan_binaryfile`
+    * reads (see [[graft.Staging.stage]]).
     */
   val BinStageDir = "/tmp/graft_scan_bin"
 
@@ -399,24 +275,20 @@ object Relational {
     * files, not rows). The write is parallel (executors write their
     * partitions' files; local FS here, shared storage on a cluster).
     */
-  private def stageBinary(s: SparkSession, dir: String): Unit = synchronized {
-    withStageLock(BinStageDir) {
-      stageInto(BinStageDir, s"$dir|bin1|${sourceFingerprint(s"$dir/documents.parquet")}") {
-        target =>
-          import java.nio.file.{Files, Paths}
-          val docsDir = s"$target/documents"
-          Files.createDirectories(Paths.get(docsDir))
-          Tables.documents(s, dir).select("doc_id", "text")
-            .foreachPartition { it: Iterator[org.apache.spark.sql.Row] =>
-              it.foreach { r =>
-                java.nio.file.Files.write(
-                  java.nio.file.Paths.get(docsDir, f"${r.getLong(0)}%08d.txt"),
-                  r.getString(1).getBytes("UTF-8"))
-              }
-            }
-      }
+  private def stageBinary(s: SparkSession, dir: String): String =
+    Staging.stage(BinStageDir, dir, "bin1", s"$dir/documents.parquet") { target =>
+      import java.nio.file.{Files, Paths}
+      val docsDir = s"$target/documents"
+      Files.createDirectories(Paths.get(docsDir))
+      Tables.documents(s, dir).select("doc_id", "text")
+        .foreachPartition { it: Iterator[org.apache.spark.sql.Row] =>
+          it.foreach { r =>
+            java.nio.file.Files.write(
+              java.nio.file.Paths.get(docsDir, f"${r.getLong(0)}%08d.txt"),
+              r.getString(1).getBytes("UTF-8"))
+          }
+        }
     }
-  }
 
   /** A2″ `scan_binaryfile` (round 6): whole-file binary ingest via Spark's
     * `binaryFile` source — the entry point of every multimodal pipeline
@@ -435,9 +307,8 @@ object Relational {
     * content bytes never shuffle (narrow projection → aggregate-free plan).
     */
   def scanBinaryfile(s: SparkSession, dir: String): DataFrame = {
-    stageBinary(s, dir)
     s.read.format("binaryFile").option("pathGlobFilter", "*.txt")
-      .load(s"${stagedRoot(BinStageDir)}/documents")
+      .load(s"${stageBinary(s, dir)}/documents")
       .select(
         regexp_extract(col("path"), "([0-9]+)\\.txt$", 1).cast("long").as("doc_id"),
         col("length").as("n_bytes"),
@@ -445,8 +316,8 @@ object Relational {
       .oracleSorted("doc_id")
   }
 
-  /** Fixed staging root of the packed-payload parquet mirror `scan_packed`
-    * reads (same indirection discipline as the other staged families).
+  /** Fixed stage dir of the packed-payload parquet mirror `scan_packed`
+    * reads (see [[graft.Staging.stage]]).
     */
   val PackStageDir = "/tmp/graft_scan_packed"
 
@@ -458,20 +329,15 @@ object Relational {
     * footer-pruned, a few thousand row groups) instead of per-file
     * open/list cost over millions of objects.
     */
-  private def stagePacked(s: SparkSession, dir: String): Unit = synchronized {
-    withStageLock(PackStageDir) {
-      stageInto(PackStageDir,
-        s"$dir|pack1|${sourceFingerprint(s"$dir/documents.parquet")}") { target =>
-        stageBinary(s, dir)
-        s.read.format("binaryFile").option("pathGlobFilter", "*.txt")
-          .load(s"${stagedRoot(BinStageDir)}/documents")
-          .select(
-            regexp_extract(col("path"), "([0-9]+)\\.txt$", 1).cast("long").as("doc_id"),
-            col("content"))
-          .write.mode("overwrite").parquet(s"$target/packed")
-      }
+  private def stagePacked(s: SparkSession, dir: String): String =
+    Staging.stage(PackStageDir, dir, "pack1", s"$dir/documents.parquet") { target =>
+      s.read.format("binaryFile").option("pathGlobFilter", "*.txt")
+        .load(s"${stageBinary(s, dir)}/documents")
+        .select(
+          regexp_extract(col("path"), "([0-9]+)\\.txt$", 1).cast("long").as("doc_id"),
+          col("content"))
+        .write.mode("overwrite").parquet(s"$target/packed")
     }
-  }
 
   /** A2‴′ `scan_packed` (round 17 — round-16 VERDICT #5): the EXECUTED
     * packing swap. Same feature derivation as `scan_binaryfile` (size +
@@ -484,17 +350,15 @@ object Relational {
     * `scan_binaryfile`'s per-file IO floor.
     */
   def scanPacked(s: SparkSession, dir: String): DataFrame = {
-    stagePacked(s, dir)
-    Tables.parquet(s, s"${stagedRoot(PackStageDir)}/packed")
+    Tables.parquet(s, s"${stagePacked(s, dir)}/packed")
       .select(col("doc_id"),
         octet_length(col("content")).cast("long").as("n_bytes"),
         md5(col("content")).as("checksum"))
       .oracleSorted("doc_id")
   }
 
-  /** Fixed staging root of the hive-partitioned mirror `scan_partitioned`
-    * and `scan_dpp` read (fixed for the same oracle-path reason as
-    * `CsvStageDir`; same `current`-symlink indirection).
+  /** Fixed stage dir of the hive-partitioned mirror `scan_partitioned`
+    * and `scan_dpp` read (see [[graft.Staging.stage]]).
     */
   val PartStageDir = "/tmp/graft_scan_part"
 
@@ -505,26 +369,22 @@ object Relational {
   val DppGroupOf: Column => Column =
     l => when(l === "zh", "cjk").otherwise("latin")
 
-  private def stagePartitioned(s: SparkSession, dir: String): Unit = synchronized {
-    withStageLock(PartStageDir) {
-      // v2: the lang dimension joined by `scan_dpp` stages alongside the
-      // partitioned mirror (bumping the key version re-stages mirrors
-      // written by older builds); content fingerprint per ADVICE #1
-      stageInto(PartStageDir, s"$dir|v2|${sourceFingerprint(s"$dir/documents.parquet")}") {
-        target =>
-          Tables.documents(s, dir).select("doc_id", "lang", "source", "n_chars")
-            .write.partitionBy("lang").mode("overwrite")
-            .parquet(s"$target/documents")
-          // tiny lang dimension (|distinct langs| rows) with a derived
-          // attribute the fact side cannot see at plan time — the input that
-          // makes dynamic partition pruning the ONLY way to prune
-          Tables.documents(s, dir).select(col("lang")).distinct()
-            .select(col("lang"), DppGroupOf(col("lang")).as("lang_group"))
-            .write.mode("overwrite")
-            .parquet(s"$target/langdim")
-      }
+  /** Stage the partitioned mirror and the lang dimension `scan_dpp` joins.
+    * Tag `v2`: the dimension joined the layout after the first version.
+    */
+  private def stagePartitioned(s: SparkSession, dir: String): String =
+    Staging.stage(PartStageDir, dir, "v2", s"$dir/documents.parquet") { target =>
+      Tables.documents(s, dir).select("doc_id", "lang", "source", "n_chars")
+        .write.partitionBy("lang").mode("overwrite")
+        .parquet(s"$target/documents")
+      // tiny lang dimension (|distinct langs| rows) with a derived
+      // attribute the fact side cannot see at plan time — the input that
+      // makes dynamic partition pruning the ONLY way to prune
+      Tables.documents(s, dir).select(col("lang")).distinct()
+        .select(col("lang"), DppGroupOf(col("lang")).as("lang_group"))
+        .write.mode("overwrite")
+        .parquet(s"$target/langdim")
     }
-  }
 
   /** A1′ `scan_partitioned`: selective scan over a hive-partitioned layout
     * — documents staged once as `lang=<v>/` partition directories, then
@@ -537,8 +397,7 @@ object Relational {
     * match also proves the partitioned round-trip preserves the data.
     */
   def scanPartitioned(s: SparkSession, dir: String): DataFrame = {
-    stagePartitioned(s, dir)
-    Tables.parquet(s, s"${stagedRoot(PartStageDir)}/documents")
+    Tables.parquet(s, s"${stagePartitioned(s, dir)}/documents")
       .filter(col("lang") === "en")
       .select("doc_id", "lang", "source", "n_chars")
       .oracleSorted("doc_id")
@@ -560,9 +419,9 @@ object Relational {
     * proves the staged dimension derivation.
     */
   def scanDpp(s: SparkSession, dir: String): DataFrame = {
-    stagePartitioned(s, dir)
-    val fact = Tables.parquet(s, s"${stagedRoot(PartStageDir)}/documents")
-    val dim = Tables.parquet(s, s"${stagedRoot(PartStageDir)}/langdim")
+    val root = stagePartitioned(s, dir)
+    val fact = Tables.parquet(s, s"$root/documents")
+    val dim = Tables.parquet(s, s"$root/langdim")
       .filter(col("lang_group") === "cjk")
     fact.join(dim, "lang")
       .select("doc_id", "lang", "source", "n_chars")
@@ -615,8 +474,7 @@ object Relational {
     // twice, because the terminal sort's range-sampling pass re-executes the
     // pre-exchange subtree. Per-row projection: row placement is irrelevant
     // (the terminal sort fixes the order), results identical.
-    fanOutIfSingleSplit(s, Tables.lineitem(s, dir), dir, "lineitem",
-        col("l_orderkey"), col("l_linenumber"))
+    fanOutIfSingleSplit(Tables.lineitem(s, dir), col("l_orderkey"), col("l_linenumber"))
       .select(
         col("l_orderkey"), col("l_linenumber"),
         graft.functions.Num.money(
@@ -649,8 +507,7 @@ object Relational {
     require(money.nonEmpty && rates.nonEmpty && qty.nonEmpty,
       s"classification must cover all three groups, got $money / $rates / $qty")
     // round-17 single-split fan-out — same rationale and proof as projectArith
-    fanOutIfSingleSplit(s, li, dir, "lineitem",
-        col("l_orderkey"), col("l_linenumber"))
+    fanOutIfSingleSplit(li, col("l_orderkey"), col("l_linenumber"))
       .select(
         col("l_orderkey"), col("l_linenumber"),
         Num.money(money.map(c => Num.dec2(col(c))).reduce(_ + _)).as("money_sum"),
@@ -663,8 +520,7 @@ object Relational {
   /** H3: math scalars [ref: stackoverflow/…/StackOverflow.scala#euclideanDistance]. */
   def scalarMath(s: SparkSession, dir: String): DataFrame =
     // round-17 single-split fan-out — same rationale and proof as projectArith
-    fanOutIfSingleSplit(s, Tables.lineitem(s, dir), dir, "lineitem",
-        col("l_orderkey"), col("l_linenumber"))
+    fanOutIfSingleSplit(Tables.lineitem(s, dir), col("l_orderkey"), col("l_linenumber"))
       .select(
         col("l_orderkey"), col("l_linenumber"),
         round(sqrt(col("l_extendedprice")), 4).as("sqrt_price"),
@@ -1033,25 +889,34 @@ object Relational {
   /** Columns profiled by `stats_profile`. */
   val ProfileCols: Seq[String] = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
 
-  /** Round-17 (guide §2.5 "unsplittable file"): fan a SINGLE-SPLIT scan out
-    * before compute-heavy map-side work. The sf fixtures ship each table as
-    * one parquet row group, so every scan is one task and everything below
-    * the first exchange runs serial — for stats_moments that serializes the
-    * exact-decimal quartic arithmetic over the whole
-    * table. The repartition is applied ONLY when the table's total bytes fit
-    * inside one scan split (`spark.sql.files.maxPartitionBytes`): at
-    * production scale the condition is false and the plan is byte-for-byte
-    * unchanged — the knob derives from input size, it is not a local[32]
-    * constant. Results are partition-independent (the host queries are
-    * global aggregates with exact-sum discipline).
+  /** Fan a SINGLE-SPLIT scan out before compute-heavy map-side work. The
+    * sf fixtures ship each table as one parquet row group, so every scan is
+    * one task and everything below the first exchange runs serial — for
+    * stats_moments that serializes the exact-decimal quartic arithmetic
+    * over the whole table. The repartition is applied ONLY when the frame's
+    * input bytes fit inside one scan split
+    * (`spark.sql.files.maxPartitionBytes`): at production scale the
+    * condition is false and the plan is byte-for-byte unchanged — the knob
+    * derives from input size, it is not a core-count constant. Results are
+    * partition-independent (the host queries are global aggregates with
+    * exact-sum discipline).
+    *
+    * The input bytes are the summed sizes of the file indexes behind the
+    * frame's analyzed plan, which Spark listed when the frame was read. A
+    * frame with a leaf that is not a file scan has no known size and is
+    * returned unchanged.
     */
-  private[graft] def fanOutIfSingleSplit(s: SparkSession, df: DataFrame,
-                                         dir: String, table: String,
-                                         keys: Column*): DataFrame = {
+  private[graft] def fanOutIfSingleSplit(df: DataFrame, keys: Column*): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val s = df.sparkSession
     val bytes = try {
-      val path = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
-      val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.getContentSummary(path).getLength
+      val sizes = df.queryExecution.analyzed.collectLeaves().map {
+        case l: LogicalRelation => Some(l.relation).collect {
+          case fs: HadoopFsRelation => fs.location.sizeInBytes
+        }
+        case _ => None
+      }
+      if (sizes.forall(_.nonEmpty)) sizes.flatten.sum else Long.MaxValue
     } catch { case scala.util.control.NonFatal(_) => Long.MaxValue }
     val maxSplit = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       s.conf.get("spark.sql.files.maxPartitionBytes", "128MB"))
@@ -1098,8 +963,7 @@ object Relational {
     // fan-out keyed by the profiled columns themselves (they exist on any
     // lineitem-shaped input, incl. the spec's inline fixture; the near-
     // unique extendedprice spreads the hash)
-    val li = fanOutIfSingleSplit(s, Tables.lineitem(s, dir), dir, "lineitem",
-        ProfileCols.map(col): _*)
+    val li = fanOutIfSingleSplit(Tables.lineitem(s, dir), ProfileCols.map(col): _*)
     val perVal = li
       .select(explode(array(ProfileCols.zipWithIndex.map { case (c, i) =>
         struct(lit(i).as("cid"), col(c).as("v")) }: _*)).as("p"))
@@ -1143,7 +1007,7 @@ object Relational {
         sum((c2 * c).cast(DecimalType(38, 0))).cast("double").as(s"${name}_s3"),
         sum((c2 * c2).cast(DecimalType(38, 0))).cast("double").as(s"${name}_s4"))
     }
-    fanOutIfSingleSplit(s, Tables.lineitem(s, dir), dir, "lineitem")
+    fanOutIfSingleSplit(Tables.lineitem(s, dir))
       .agg(count(lit(1)).as("n"), aggs: _*)
       .select(explode(array(MomentCols.map { c =>
         struct(lit(c).as("col_name"), col("n"),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Staging, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import graft.functions.OracleSort._
@@ -451,8 +451,7 @@ object TextOps {
     // common-subexpression elimination); via an attribute it runs once.
     // round-17 single-split fan-out (guide §2.5): tokenization + the tf
     // partial aggregation otherwise run inside the one-row-group scan task
-    val tok = Relational.fanOutIfSingleSplit(s, chunkFrame(s, dir), dir, "documents",
-        col("doc_id"), col("chunk_id"))
+    val tok = Relational.fanOutIfSingleSplit(chunkFrame(s, dir), col("doc_id"), col("chunk_id"))
       .select(col("doc_id"), col("chunk_id"), realToks(col("chunk")).as("toks"))
       .select(col("doc_id"), col("chunk_id"),
         size(col("toks")).cast("long").as("dl"),
@@ -566,9 +565,9 @@ object TextOps {
       .oracleSorted("query_doc", "rnk")
   }
 
-  /** Fixed staging root of the corpus n-gram LM statistics SHARED by
-    * `text_ngrams`, `text_collocations`, `text_logprob` and
-    * `text_logprob2` (round 16, VERDICT #3 — the `agg_kmv`/`stream_kmv`
+  /** Fixed stage dir (see [[graft.Staging.stage]]) of the corpus n-gram
+    * LM statistics SHARED by `text_ngrams`, `text_collocations`,
+    * `text_logprob` and `text_logprob2` (round 16, VERDICT #3 — the `agg_kmv`/`stream_kmv`
     * shared-family discipline): all four consume the same unigram- and
     * bigram-occurrence count tables, and at 100× each was independently
     * paying the identical corpus explode+aggregate (`text_logprob2`
@@ -588,27 +587,19 @@ object TextOps {
     */
   val NgramStageDir = "/tmp/graft_ngram_lm"
 
-  private def stageNgramCounts(s: SparkSession, dir: String): Unit = synchronized {
-    Relational.withStageLock(NgramStageDir) {
-      Relational.stageInto(NgramStageDir,
-        s"$dir|ngram1|${Relational.sourceFingerprint(s"$dir/documents.parquet")}") {
-        target =>
-          val docs = Tables.documents(s, dir)
-          docs.select(explode(words(col("text"))).as("token"))
-            .groupBy("token").agg(count(lit(1)).as("c_w"))
-            .write.mode("overwrite").parquet(s"$target/uni")
-          docs.select(explode(shingles(col("text"), 2)).as("bigram"))
-            .groupBy("bigram").agg(count(lit(1)).as("c_xy"))
-            .write.mode("overwrite").parquet(s"$target/bi")
-      }
-    }
-  }
-
   /** The staged (uni, bi) count families all LM-statistics consumers read. */
   private[graft] def ngramCounts(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
-    stageNgramCounts(s, dir)
-    val root = Relational.stagedRoot(NgramStageDir)
+    val root = Staging.stage(NgramStageDir, dir, "ngram1", s"$dir/documents.parquet") {
+      target =>
+        val docs = Tables.documents(s, dir)
+        docs.select(explode(words(col("text"))).as("token"))
+          .groupBy("token").agg(count(lit(1)).as("c_w"))
+          .write.mode("overwrite").parquet(s"$target/uni")
+        docs.select(explode(shingles(col("text"), 2)).as("bigram"))
+          .groupBy("bigram").agg(count(lit(1)).as("c_xy"))
+          .write.mode("overwrite").parquet(s"$target/bi")
+    }
     (Tables.parquet(s, s"$root/uni"), Tables.parquet(s, s"$root/bi"))
   }
 
@@ -2079,8 +2070,7 @@ object TextOps {
   def textPii(s: SparkSession, dir: String): DataFrame =
     // round-17 single-split fan-out — the three regex passes are the per-row
     // cost; same rationale and proof as textRepetition
-    Relational.fanOutIfSingleSplit(s, Tables.documents(s, dir), dir,
-        "documents", col("doc_id"))
+    Relational.fanOutIfSingleSplit(Tables.documents(s, dir), col("doc_id"))
       .select(
         col("doc_id"),
         size(expr(s"regexp_extract_all(text, '$EmailRe', 0)")).as("n_emails"),
@@ -2126,8 +2116,7 @@ object TextOps {
     // TopGramCount kernels otherwise run serially in the one-row-group scan
     // task — twice, since the terminal sort's range sampling re-executes the
     // pre-exchange subtree. Per-row projection; results identical.
-    Relational.fanOutIfSingleSplit(s, Tables.documents(s, dir), dir,
-        "documents", col("doc_id"))
+    Relational.fanOutIfSingleSplit(Tables.documents(s, dir), col("doc_id"))
       .select(col("doc_id"), repFrac(2).as("rep2"), repFrac(3).as("rep3"),
         round(graft.plans.TopGramCount.of(col("text"), 2).cast("double") / total(2), 4)
           .as("top_bigram_frac"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Staging, Tables}
 import graft.functions.Vec
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -1155,40 +1155,32 @@ object VectorOps {
     */
   val MrlCandidates = 50
 
-  /** Fixed staging root of the prefix-column-family mirror `sim_mrl` reads
-    * (same `by/<digest>` + `current` indirection as the Relational stage
-    * dirs). The mirror is the embeddings table with the `MrlPrefixDims`-
-    * float prefix materialized as its OWN parquet column next to the full
-    * embedding — parquet stores each column as separate chunks, so stage 1
-    * reads the 16-float family and never touches the 64-float one (the
+  /** Fixed stage dir of the prefix-column-family mirror `sim_mrl` reads
+    * (see [[graft.Staging.stage]]). The mirror is the embeddings table
+    * with the `MrlPrefixDims`-float prefix materialized as its OWN parquet
+    * column next to the full embedding — parquet stores each column as
+    * separate chunks, so stage 1 reads the 16-float family and never
+    * touches the 64-float one (the
     * scan-schema assertion in SourcesSpec; footer-measured bytes cut in
     * `mrl_bytes_r14.json`: 3.8× at sf0.1, 4.0× at 100×).
     */
   val MrlStageDir = "/tmp/graft_mrl_prefix"
 
-  private def stageMrlPrefix(s: SparkSession, dir: String): Unit = synchronized {
-    Relational.withStageLock(MrlStageDir) {
-      Relational.stageInto(MrlStageDir,
-        s"$dir|mrl1|${Relational.sourceFingerprint(s"$dir/embeddings.parquet")}") {
-        target =>
-          Tables.embeddings(s, dir)
-            .select(col("vec_id"), col("label"),
-              slice(col("embedding"), 1, MrlPrefixDims).as("prefix"),
-              col("embedding"))
-            .write.mode("overwrite").parquet(s"$target/embeddings")
-      }
-    }
-  }
-
-  /** The staged embeddings mirror with the prefix column family (staging
-    * is once per source content; readers get the digest-pinned immutable
-    * path). Float arrays round-trip parquet bit-exactly, so every query
-    * over the mirror still hash-gates against an oracle that reads the
-    * ORIGINAL table — the match also pins the mirror round trip.
+  /** The staged embeddings mirror with the prefix column family. Float
+    * arrays round-trip parquet bit-exactly, so every query over the mirror
+    * still hash-gates against an oracle that reads the ORIGINAL table —
+    * the match also pins the mirror round trip.
     */
   private[graft] def mrlStaged(s: SparkSession, dir: String): DataFrame = {
-    stageMrlPrefix(s, dir)
-    Tables.parquet(s, s"${Relational.stagedRoot(MrlStageDir)}/embeddings")
+    val root = Staging.stage(MrlStageDir, dir, "mrl1", s"$dir/embeddings.parquet") {
+      target =>
+        Tables.embeddings(s, dir)
+          .select(col("vec_id"), col("label"),
+            slice(col("embedding"), 1, MrlPrefixDims).as("prefix"),
+            col("embedding"))
+          .write.mode("overwrite").parquet(s"$target/embeddings")
+    }
+    Tables.parquet(s, s"$root/embeddings")
   }
 
   /** K3g `sim_mrl` (round 13): Matryoshka / truncation two-stage retrieval
@@ -1269,31 +1261,15 @@ object VectorOps {
     */
   val HamWordBits = 32
 
-  /** Fixed staging root of the signature column family `sim_hamming`
-    * reads (the `MrlStageDir` discipline: `by/<digest>` + `current`
-    * indirection, keyed on the source fingerprint). The mirror carries
-    * the two signature words as their OWN parquet columns next to the
-    * full embedding, so stage 1's scan schema is `(vec_id, bits_lo,
-    * bits_hi)` — 2 longs instead of `Dim` floats, a ~16× column-family
-    * byte cut (footer-measured in `ham_bytes_r14.json`: 15.1× at sf0.1,
-    * 18.6× at 100×; asserted in SourcesSpec).
+  /** Fixed stage dir of the signature column family `sim_hamming` reads
+    * (see [[graft.Staging.stage]]). The mirror carries the two signature
+    * words as their OWN parquet columns next to the full embedding, so
+    * stage 1's scan schema is `(vec_id, bits_lo, bits_hi)` — 2 longs
+    * instead of `Dim` floats, a ~16× column-family byte cut
+    * (footer-measured in `ham_bytes_r14.json`: 15.1× at sf0.1, 18.6× at
+    * 100×; asserted in SourcesSpec).
     */
   val HamStageDir = "/tmp/graft_ham_bits"
-
-  private def stageHamBits(s: SparkSession, dir: String): Unit = synchronized {
-    Relational.withStageLock(HamStageDir) {
-      Relational.stageInto(HamStageDir,
-        s"$dir|ham1|${Relational.sourceFingerprint(s"$dir/embeddings.parquet")}") {
-        target =>
-          Tables.embeddings(s, dir)
-            .select(col("vec_id"), col("label"),
-              Vec.signBucket(col("embedding"), HamWordBits).as("bits_lo"),
-              Vec.signBucket(col("embedding"), HamWordBits, HamWordBits).as("bits_hi"),
-              col("embedding"))
-            .write.mode("overwrite").parquet(s"$target/embeddings")
-      }
-    }
-  }
 
   /** The staged embeddings mirror with the sign-signature column family.
     * Signatures are integers and float arrays round-trip parquet
@@ -1301,8 +1277,16 @@ object VectorOps {
     * that recomputes the signature from the ORIGINAL table.
     */
   private[graft] def hamStaged(s: SparkSession, dir: String): DataFrame = {
-    stageHamBits(s, dir)
-    Tables.parquet(s, s"${Relational.stagedRoot(HamStageDir)}/embeddings")
+    val root = Staging.stage(HamStageDir, dir, "ham1", s"$dir/embeddings.parquet") {
+      target =>
+        Tables.embeddings(s, dir)
+          .select(col("vec_id"), col("label"),
+            Vec.signBucket(col("embedding"), HamWordBits).as("bits_lo"),
+            Vec.signBucket(col("embedding"), HamWordBits, HamWordBits).as("bits_hi"),
+            col("embedding"))
+          .write.mode("overwrite").parquet(s"$target/embeddings")
+    }
+    Tables.parquet(s, s"$root/embeddings")
   }
 
   /** K3j `sim_hamming` (round 14): binary-quantization two-stage retrieval
@@ -1390,9 +1374,8 @@ object VectorOps {
   /** Beam width: unexpanded nodes expanded per round per query. */
   val HnswBeam = 8
 
-  /** Fixed staging root of the graph column family `sim_hnsw` reads (the
-    * `MrlStageDir` discipline: immutable `by/<digest>` targets + `current`
-    * indirection, keyed on the source fingerprint). Two families:
+  /** Fixed stage dir of the graph column family `sim_hnsw` reads (see
+    * [[graft.Staging.stage]]). Two families:
     * `portals` (one row per populated bucket, embedding inline) and
     * `edges` — (src, dst, dst_emb) with the DESTINATION embedding stored
     * inline next to the adjacency pair, the layout a serving-side HNSW
@@ -1421,8 +1404,7 @@ object VectorOps {
     * time). One footer-sized parquet read per call.
     */
   private[graft] def hnswCorpusBits(s: SparkSession, dir: String): Int = {
-    stageHnswGraph(s, dir)
-    Tables.parquet(s, s"${Relational.stagedRoot(HnswStageDir)}/meta")
+    Tables.parquet(s, s"${stageHnswGraph(s, dir)}/meta")
       .head().getInt(0)
   }
 
@@ -1495,89 +1477,83 @@ object VectorOps {
       .select("src", "dst")
   }
 
-  private def stageHnswGraph(s: SparkSession, dir: String): Unit = synchronized {
-    Relational.withStageLock(HnswStageDir) {
-      Relational.stageInto(HnswStageDir,
-        // the build constants are part of the key: a constant change must
-        // re-stage, not silently reuse the old family
-        s"$dir|hnsw5|M=$HnswM|C=$HnswCand|" +
-          Relational.sourceFingerprint(s"$dir/embeddings.parquet")) {
-        target =>
-          val bits = hnswBits(
-            corpusOf(Tables.embeddings(s, dir)).count())
-          // the bucket exponent is part of the index: persisted with the
-          // families so the query side reads it back instead of re-counting
-          // the corpus on every invocation (round-15 ADVICE — the count was
-          // a full filtered scan per sim_hnsw call)
-          import s.implicits._
-          Seq(bits).toDF("bits").coalesce(1)
-            .write.mode("overwrite").parquet(s"$target/meta")
-          // corpus nodes with their sign bucket — multi-consumer (kNN
-          // self-join both sides, portal argmin, shortcut fan, dst_emb
-          // join): cut so the scan runs once
-          val nodes = corpusOf(Tables.embeddings(s, dir))
-            .select(col("vec_id"), col("embedding"),
-              Vec.signBucket(col("embedding"), bits).as("b"))
-            .lineageCut(eager = false)
-          // bucketed-corpus family: the serving layout (vectors keyed by
-          // their bucket) the query-time own-bucket entry scan key-joins
-          // against — see simHnsw (round 16)
-          nodes.select("b", "vec_id", "embedding")
-            .sort("b").write.mode("overwrite").parquet(s"$target/buckets")
-          // portal per populated bucket: its min-vec_id node (an arbitrary
-          // but deterministic hub — HNSW's own top-layer entry is the
-          // first-inserted node, equally arbitrary)
-          val portals = nodes.groupBy("b").agg(min(col("vec_id")).as("vec_id"))
-            .join(nodes.select(col("vec_id"), col("embedding")), "vec_id")
-            .select("b", "vec_id", "embedding")
-            .lineageCut(eager = false)
-          portals.write.mode("overwrite").parquet(s"$target/portals")
-          // within-bucket kNN by cosine: candidate mass Σ|bucket|² ≈
-          // n·HnswTargetList — linear, never all-pairs (the dedup_embed
-          // bucketing discipline applied to graph build)
-          val knn = diversifiedKnn(nodes
-            .select(col("b"), col("vec_id").as("src"), col("embedding").as("emb_a"))
-            .join(nodes.select(col("b"), col("vec_id").as("dst"),
-              col("embedding").as("emb_b")), "b")
-            .filter(col("src") =!= col("dst")))
-          // long-range shortcuts: node → portal of each 1-bit-flip bucket
-          // (existing buckets only; `bits` ≈ log n edges per node — the
-          // HNSW logarithmic-degree shape)
-          val shortcuts = nodes
-            .select(col("vec_id").as("src"),
-              explode(array(hnswFlips(col("b"), bits): _*)).as("fb"))
-            .join(portals.select(col("b").as("fb"), col("vec_id").as("dst")), "fb")
-            .select("src", "dst")
-          // hub spokes: every bucket member ↔ its portal (degree bounded
-          // by the bucket target). kNN alone fragments duplicate-heavy
-          // buckets into cos=1.0 cliques disconnected from the portal —
-          // the classic NSW pathology HNSW's neighbor-diversity heuristic
-          // exists for; the hub guarantees intra-bucket connectivity, so
-          // any node in an entered bucket is ≤2 hops from its portal
-          // (measured: exhaustive-beam recall at 100× was stuck at 0.60
-          // visiting 61% of the corpus before the hub; see BASELINE)
-          val hub = nodes
-            .join(portals.select(col("b"), col("vec_id").as("dst")), "b")
-            .filter(col("vec_id") =!= col("dst"))
-            .select(col("vec_id").as("src"), col("dst"))
-          knn.union(knn.select(col("dst").as("src"), col("src").as("dst")))
-            .union(hub)
-            .union(hub.select(col("dst").as("src"), col("src").as("dst")))
-            .union(shortcuts)
-            .distinct()
-            .join(nodes.select(col("vec_id").as("dst"),
-              col("embedding").as("dst_emb")), "dst")
-            .select("src", "dst", "dst_emb")
-            .write.mode("overwrite").parquet(s"$target/edges")
-      }
+  private def stageHnswGraph(s: SparkSession, dir: String): String =
+    // the build constants are part of the tag: a constant change must
+    // re-stage, not silently reuse the old family
+    Staging.stage(HnswStageDir, dir, s"hnsw5|M=$HnswM|C=$HnswCand",
+        s"$dir/embeddings.parquet") { target =>
+      val bits = hnswBits(
+        corpusOf(Tables.embeddings(s, dir)).count())
+      // the bucket exponent is part of the index: persisted with the
+      // families so the query side reads it back instead of re-counting
+      // the corpus on every invocation (round-15 ADVICE — the count was
+      // a full filtered scan per sim_hnsw call)
+      import s.implicits._
+      Seq(bits).toDF("bits").coalesce(1)
+        .write.mode("overwrite").parquet(s"$target/meta")
+      // corpus nodes with their sign bucket — multi-consumer (kNN
+      // self-join both sides, portal argmin, shortcut fan, dst_emb
+      // join): cut so the scan runs once
+      val nodes = corpusOf(Tables.embeddings(s, dir))
+        .select(col("vec_id"), col("embedding"),
+          Vec.signBucket(col("embedding"), bits).as("b"))
+        .lineageCut(eager = false)
+      // bucketed-corpus family: the serving layout (vectors keyed by
+      // their bucket) the query-time own-bucket entry scan key-joins
+      // against — see simHnsw (round 16)
+      nodes.select("b", "vec_id", "embedding")
+        .sort("b").write.mode("overwrite").parquet(s"$target/buckets")
+      // portal per populated bucket: its min-vec_id node (an arbitrary
+      // but deterministic hub — HNSW's own top-layer entry is the
+      // first-inserted node, equally arbitrary)
+      val portals = nodes.groupBy("b").agg(min(col("vec_id")).as("vec_id"))
+        .join(nodes.select(col("vec_id"), col("embedding")), "vec_id")
+        .select("b", "vec_id", "embedding")
+        .lineageCut(eager = false)
+      portals.write.mode("overwrite").parquet(s"$target/portals")
+      // within-bucket kNN by cosine: candidate mass Σ|bucket|² ≈
+      // n·HnswTargetList — linear, never all-pairs (the dedup_embed
+      // bucketing discipline applied to graph build)
+      val knn = diversifiedKnn(nodes
+        .select(col("b"), col("vec_id").as("src"), col("embedding").as("emb_a"))
+        .join(nodes.select(col("b"), col("vec_id").as("dst"),
+          col("embedding").as("emb_b")), "b")
+        .filter(col("src") =!= col("dst")))
+      // long-range shortcuts: node → portal of each 1-bit-flip bucket
+      // (existing buckets only; `bits` ≈ log n edges per node — the
+      // HNSW logarithmic-degree shape)
+      val shortcuts = nodes
+        .select(col("vec_id").as("src"),
+          explode(array(hnswFlips(col("b"), bits): _*)).as("fb"))
+        .join(portals.select(col("b").as("fb"), col("vec_id").as("dst")), "fb")
+        .select("src", "dst")
+      // hub spokes: every bucket member ↔ its portal (degree bounded
+      // by the bucket target). kNN alone fragments duplicate-heavy
+      // buckets into cos=1.0 cliques disconnected from the portal —
+      // the classic NSW pathology HNSW's neighbor-diversity heuristic
+      // exists for; the hub guarantees intra-bucket connectivity, so
+      // any node in an entered bucket is ≤2 hops from its portal
+      // (measured: exhaustive-beam recall at 100× was stuck at 0.60
+      // visiting 61% of the corpus before the hub; see BASELINE)
+      val hub = nodes
+        .join(portals.select(col("b"), col("vec_id").as("dst")), "b")
+        .filter(col("vec_id") =!= col("dst"))
+        .select(col("vec_id").as("src"), col("dst"))
+      knn.union(knn.select(col("dst").as("src"), col("src").as("dst")))
+        .union(hub)
+        .union(hub.select(col("dst").as("src"), col("src").as("dst")))
+        .union(shortcuts)
+        .distinct()
+        .join(nodes.select(col("vec_id").as("dst"),
+          col("embedding").as("dst_emb")), "dst")
+        .select("src", "dst", "dst_emb")
+        .write.mode("overwrite").parquet(s"$target/edges")
     }
-  }
 
   /** The staged graph families (edges, portals). */
   private[graft] def hnswStaged(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
-    stageHnswGraph(s, dir)
-    val root = Relational.stagedRoot(HnswStageDir)
+    val root = stageHnswGraph(s, dir)
     (Tables.parquet(s, s"$root/edges"), Tables.parquet(s, s"$root/portals"))
   }
 
@@ -1585,8 +1561,7 @@ object VectorOps {
     * serving layout the own-bucket entry scan key-joins against.
     */
   private[graft] def hnswBuckets(s: SparkSession, dir: String): DataFrame = {
-    stageHnswGraph(s, dir)
-    Tables.parquet(s, s"${Relational.stagedRoot(HnswStageDir)}/buckets")
+    Tables.parquet(s, s"${stageHnswGraph(s, dir)}/buckets")
   }
 
   /** K3n `sim_hnsw` (round 15): graph-based ANN — the NSW/HNSW family

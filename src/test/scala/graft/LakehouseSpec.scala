@@ -240,7 +240,7 @@ class LakehouseSpec extends AnyFunSuite {
     // staged AS-OF reads equal the in-memory derivation row-for-row
     (0 until Lakehouse.TtVersions).foreach { v =>
       val staged = spark.read
-        .parquet(s"${graft.operators.Relational.stagedRoot(Lakehouse.TtStageDir)}/v$v")
+        .parquet(s"${graft.Staging.stagedRoot(Lakehouse.TtStageDir)}/v$v")
         .collect().map(_.toSeq).toSet
       val derived = Lakehouse.ttSnapshot(spark, sfDir, v).collect().map(_.toSeq).toSet
       assert(staged == derived, s"v$v staged snapshot drifted from its derivation")

@@ -32,8 +32,9 @@ class OrderTotalitySpec extends AnyFunSuite {
     // path-only marker let testdata regenerated in place silently reuse
     // the stale mirror), the same discipline as the CSV/JSON stage keys
     val marker = new java.io.File(s"$out/.staged_from")
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(new org.apache.hadoop.conf.Configuration())
     val want = sfDir + "|" + Tables.all.map { case (name, _) =>
-      s"$name=${graft.operators.Relational.sourceFingerprint(s"$sfDir/$name.parquet")}"
+      s"$name=${Tables.fingerprint(fs, new org.apache.hadoop.fs.Path(s"$sfDir/$name.parquet"))}"
     }.mkString(",")
     if (!marker.exists() ||
         new String(java.nio.file.Files.readAllBytes(marker.toPath)) != want) {

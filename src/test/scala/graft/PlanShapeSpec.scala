@@ -81,7 +81,7 @@ class PlanShapeSpec extends AnyFunSuite {
       executedScan.partitionFilters.mkString("; "))
     val partsRead = executedScan.metrics("numPartitions").value
     val totalParts = spark.read.parquet(
-        s"${graft.operators.Relational.stagedRoot(graft.operators.Relational.PartStageDir)}/documents")
+        s"${graft.Staging.stagedRoot(graft.operators.Relational.PartStageDir)}/documents")
       .select("lang").distinct().count()
     assert(partsRead < totalParts, s"read $partsRead of $totalParts partitions — no runtime pruning")
     assert(partsRead == 1L, s"expected exactly the cjk partition, read $partsRead")

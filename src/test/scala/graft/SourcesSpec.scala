@@ -179,7 +179,7 @@ class SourcesSpec extends AnyFunSuite {
     // a projection touching ONLY meta.lang must prune the struct: the scan
     // schema carries the one leaf, not source/n_chars (nor tokens)
     val pruned = spark.read
-      .parquet(s"${operators.Relational.stagedRoot(operators.Relational.NestedStageDir)}/documents")
+      .parquet(s"${Staging.stagedRoot(operators.Relational.NestedStageDir)}/documents")
       .select(col("doc_id"), col("meta.lang").as("lang"))
     val scan = pruned.queryExecution.executedPlan.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f
