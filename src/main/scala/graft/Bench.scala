@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicLong
@@ -80,23 +79,10 @@ object Bench {
     // decoupled from core count so scale-stress runs can measure the
     // partition-sizing knob (spill ∝ per-partition workspace) directly
     val shufP = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", shufP)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      // Round-17 (optimization guide §1.2 step 2 — per-task work): the
-      // whole-stage-codegen class cache is 100 entries by default, far
-      // below this inventory's ~1000 distinct generated classes, so every
-      // interleaved pass recompiled every stage (janino ~10-100 ms per
-      // class — pure fixed overhead, identical bytecode each time). A
-      // 10k-entry cache lets the warm-up pass compile each class once and
-      // every measured pass reuse it. Static conf (must be set at session
-      // build); sized ≪ heap (generated classes are KB-scale). The same
-      // setting helps any long-lived production session or executor JVM —
-      // it is not a local[32] artifact.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // SPARK_GRAFT_TERMINAL_SORT=false measures the DEPLOYMENT shape (the

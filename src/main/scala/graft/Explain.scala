@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan-audit utility: `sbt "runMain graft.Explain q1,q2"` prints each
   * query's formatted physical plan at sf0.001 — the iteration loop for
@@ -8,16 +7,13 @@ import org.apache.spark.sql.SparkSession
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
+    val spark = GraftSession.builder().master("local[8]")
       .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "10000") // see graft.Bench
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // GRAFT_TERMINAL_SORT=false prints the deployment-shape plans (oracle
-    // ordering contract elided) — the PLANS.md before/after artifact.
-    sys.env.get("GRAFT_TERMINAL_SORT")
+    // SPARK_GRAFT_TERMINAL_SORT=false prints the deployment-shape plans
+    // (oracle ordering contract elided) — the PLANS.md before/after artifact.
+    sys.env.get("SPARK_GRAFT_TERMINAL_SORT")
       .foreach(v => spark.conf.set("graft.terminalSort", v))
     val names = args.headOption.map(_.split(",").toSeq)
       .getOrElse(SparkEntry.queries.keys.toSeq.sorted)

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Library entry point: a `SparkSession.Builder` pre-configured the way the
-  * engine expects, for users embedding graft in their own application
-  * (the driver-contract mains Verify/Bench configure themselves).
+  * engine expects, for users embedding graft in their own application.
+  * Verify, Bench, Explain, ScaleGen and the test session start from it too.
   *
   *  - `graft.plans.GraftExtensions` injected → every native kernel
   *    (`vec_dot`, `vec_sq_dist`, `hashed_word_grams`, `hashed_char_grams`,
@@ -27,8 +27,9 @@ object GraftSession {
       .withExtensions(new graft.plans.GraftExtensions)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.session.timeZone", "UTC")
-      // codegen class cache sized for a many-operator inventory (the
-      // 100-entry default thrashes once a session runs more than a few
-      // dozen distinct plans; see graft.Bench for the measurement)
+      // The whole-stage-codegen class cache holds 100 classes by default,
+      // far below the ~1000 distinct classes the registry generates, so a
+      // long-lived session recompiles (janino, ~10-100 ms per class)
+      // identical bytecode on every reuse. Static conf; classes are KB-scale.
       .config("spark.sql.codegen.cache.maxEntries", "10000")
 }

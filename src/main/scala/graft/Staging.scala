@@ -9,7 +9,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 /** Content-keyed staging of derived mirrors under fixed stage dirs.
   *
   * Some queries read a mirror derived from a source table: a CSV or JSON
-  * copy, a nested or partitioned layout, a precomputed column family. The
+  * copy, a nested or partitioned layout, a precomputed column family, or
+  * the N-file copy [[Tables]] loads a single-row-group table from. The
   * stage dir is fixed because the DuckDB oracle is a static SQL string that
   * must read the same files. [[stage]] is the only way a mirror is written.
   */

@@ -2,7 +2,18 @@ package graft
 
 import java.util.concurrent.ConcurrentHashMap
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.example.data.{Group, GroupWriter}
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader, ParquetWriter}
+import org.apache.parquet.hadoop.api.WriteSupport
+import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.metadata.{CompressionCodecName, FileMetaData, ParquetMetadata}
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+import org.apache.parquet.io.OutputFile
+import org.apache.parquet.io.api.RecordConsumer
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
@@ -15,15 +26,22 @@ import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, Times
   * directory layout (partitioned datasets instead of single files) — the
   * operator code is unaffected because everything downstream is declarative.
   *
-  * Every plain parquet read — these loaders and the operators' reads of
-  * their staged roots — goes through [[parquet]], which infers a path's
-  * schema once instead of once per load. Its cache entry is keyed by the
-  * path, the path's file listing (paths, lengths, modification times) and
-  * the session's parquet-inference confs, so rewriting the data or changing
-  * those confs re-infers; a failed inference is never cached.
+  * Partition sizing: a scan runs at most one task per parquet row group,
+  * and Spark never splits a file below `spark.sql.files.openCostInBytes`,
+  * so a small single-row-group file scans in one task. A named loader
+  * therefore reads a table whose files hold fewer row groups than the
+  * session's `defaultParallelism` (N) from a copy: N files of contiguous
+  * source rows with the source's parquet schema and key-value metadata,
+  * staged once per (source, N) under `CopyStageDir/<table>/by/<digest>`. A
+  * table with N or more files or row groups loads in place, as does one
+  * that is not a flat directory of local files sharing one schema. Every
+  * read, in place or from a copy, goes through [[parquet]].
   */
 object Tables {
   private def p(dir: String, name: String) = s"$dir/$name.parquet"
+
+  /** Parent of the named loaders' per-table copy stage dirs. */
+  val CopyStageDir = "/tmp/graft_tables"
 
   /** Session confs that change what parquet schema inference returns. */
   private val InferenceConfs = Seq(
@@ -38,6 +56,9 @@ object Tables {
   /** (qualified path, inference conf values) -> (listing fingerprint, schema). */
   private val schemas =
     new ConcurrentHashMap[(String, Seq[String]), (String, StructType)]()
+
+  /** (qualified path, N) -> (listing fingerprint, root the loader reads). */
+  private val layouts = new ConcurrentHashMap[(String, Int), (String, String)]()
 
   /** `s.read.parquet(path)` without the per-load inference job.
     *
@@ -57,24 +78,133 @@ object Tables {
     * from Spark exactly as an uncached read does, at every load.
     */
   private[graft] def parquet(s: SparkSession, path: String): DataFrame = {
+    val (fs, qualified) = qualify(s, path)
+    listing(fs, qualified) match {
+      case None => s.read.parquet(path) // throws Spark's own PATH_NOT_FOUND
+      case Some(files) => inferOnce(s, path, qualified, fingerprint(files))
+    }
+  }
+
+  private def inferOnce(s: SparkSession, path: String, qualified: Path, fp: String): DataFrame = {
+    val key = (qualified.toString, InferenceConfs.map(s.conf.get))
+    Option(schemas.get(key)) match {
+      case Some((`fp`, schema)) => s.read.schema(schema).parquet(path)
+      case _ =>
+        val df = s.read.parquet(path)
+        schemas.put(key, (fp, df.schema))
+        df
+    }
+  }
+
+  /** Table `name` of `dir`, from the root [[layout]] picks. */
+  private def table(s: SparkSession, dir: String, name: String): DataFrame = {
+    val path = p(dir, name)
+    val (fs, qualified) = qualify(s, path)
+    listing(fs, qualified) match {
+      case None => s.read.parquet(path)
+      case Some(files) =>
+        val fp = fingerprint(files)
+        val n = s.sparkContext.defaultParallelism
+        val key = (qualified.toString, n)
+        val root = Option(layouts.get(key)).collect { case (`fp`, r) => r }.getOrElse {
+          val r = layout(s, dir, name, fs, qualified, files, n)
+          layouts.put(key, (fp, r))
+          r
+        }
+        if (root == path) inferOnce(s, path, qualified, fp) else parquet(s, root)
+    }
+  }
+
+  /** `p(dir, name)`, or the root of its staged `n`-file copy (see [[Tables]]).
+    * Footers are read only when there are fewer than `n` data files.
+    */
+  private def layout(s: SparkSession, dir: String, name: String, fs: FileSystem,
+                     qualified: Path, files: Seq[FileStatus], n: Int): String = {
+    val path = p(dir, name)
+    val data = files.filterNot(f => f.getPath.getName.startsWith("_") ||
+      f.getPath.getName.startsWith("."))
+    if (data.isEmpty || data.size >= n || fs.getScheme != "file" ||
+        data.exists(f => f.getPath != qualified && f.getPath.getParent != qualified)) path
+    else {
+      val conf = s.sessionState.newHadoopConf()
+      val footers = data.map { f =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+        try r.getFooter finally r.close()
+      }
+      val shapes = footers.map(f => (f.getFileMetaData.getSchema, f.getFileMetaData.getKeyValueMetaData))
+      if (footers.map(_.getBlocks.size).sum >= n || shapes.distinct.size != 1) path
+      else Staging.stage(s"$CopyStageDir/$name", dir, s"rows-in-$n-files", path) { root =>
+        copy(conf, data, footers, n, root)
+      }
+    }
+  }
+
+  /** Writes the rows of `files`, in listing order, as `n` parquet files of
+    * contiguous rows under `root`, with the sources' schema, key-value
+    * metadata and compression codec. File i holds the rows r with
+    * `r * n / total == i`, so some files are empty when `total < n`.
+    */
+  private def copy(conf: Configuration, files: Seq[FileStatus], footers: Seq[ParquetMetadata],
+                   n: Int, root: String): Unit = {
+    val meta = footers.head.getFileMetaData
+    val codec = footers.flatMap(_.getBlocks.asScala).flatMap(_.getColumns.asScala)
+      .headOption.fold(CompressionCodecName.UNCOMPRESSED)(_.getCodec)
+    val total = footers.map(_.getBlocks.asScala.map(_.getRowCount).sum).sum
+    var part = -1
+    var out: ParquetWriter[Group] = null
+    def advanceTo(i: Int): Unit = while (part < i) {
+      if (out != null) out.close()
+      out = null
+      part += 1
+      out = new CopyWriter(HadoopOutputFile.fromPath(new Path(root, f"part-$part%05d.parquet"), conf), meta)
+        .withConf(conf).withCompressionCodec(codec).build()
+    }
+    try {
+      var row = 0L
+      files.foreach { f =>
+        val in = ParquetReader.builder(new GroupReadSupport, f.getPath).withConf(conf).build()
+        try Iterator.continually(in.read()).takeWhile(_ != null).foreach { g =>
+          advanceTo((row * n / total).toInt)
+          out.write(g)
+          row += 1
+        } finally in.close()
+      }
+      advanceTo(n - 1)
+    } finally if (out != null) out.close()
+  }
+
+  /** A `Group` writer whose footer carries exactly `meta`'s schema and
+    * key-value metadata. parquet-hadoop's `ExampleParquetWriter` would add
+    * its own `writer.model.name` key, and refuses a source that has one.
+    */
+  private final class CopyWriter(out: OutputFile, meta: FileMetaData)
+      extends ParquetWriter.Builder[Group, CopyWriter](out) {
+    override protected def self(): CopyWriter = this
+    override protected def getWriteSupport(conf: Configuration): WriteSupport[Group] =
+      new WriteSupport[Group] {
+        private var groups: GroupWriter = _
+        override def init(conf: Configuration) =
+          new WriteSupport.WriteContext(meta.getSchema, meta.getKeyValueMetaData)
+        override def prepareForWrite(rc: RecordConsumer): Unit =
+          groups = new GroupWriter(rc, meta.getSchema)
+        override def write(g: Group): Unit = groups.write(g)
+      }
+  }
+
+  private def qualify(s: SparkSession, path: String): (FileSystem, Path) = {
     val hpath = new Path(path)
     val fs = hpath.getFileSystem(s.sessionState.newHadoopConf())
-    val qualified = fs.makeQualified(hpath)
-    val listed =
-      try Some(fingerprint(fs, qualified))
-      catch { case _: java.io.FileNotFoundException => None }
-    listed match {
-      case None => s.read.parquet(path) // throws Spark's own PATH_NOT_FOUND
-      case Some(fp) =>
-        val key = (qualified.toString, InferenceConfs.map(s.conf.get))
-        Option(schemas.get(key)) match {
-          case Some((`fp`, schema)) => s.read.schema(schema).parquet(path)
-          case _ =>
-            val df = s.read.parquet(path)
-            schemas.put(key, (fp, df.schema))
-            df
-        }
-    }
+    (fs, fs.makeQualified(hpath))
+  }
+
+  /** Every file under `root` (or `root` itself when it is a file), or None
+    * when `root` does not exist.
+    */
+  private def listing(fs: FileSystem, root: Path): Option[Seq[FileStatus]] = {
+    def files(p: Path): Seq[FileStatus] = fs.listStatus(p).toSeq
+      .flatMap(st => if (st.isDirectory) files(st.getPath) else Seq(st))
+    try Some(files(root).sortBy(_.getPath.toString))
+    catch { case _: java.io.FileNotFoundException => None }
   }
 
   /** Content fingerprint of a path: SHA-256 over the sorted (path, length,
@@ -83,24 +213,25 @@ object Tables {
     * markers, so data rewritten in place invalidates both. Throws
     * `FileNotFoundException` for a missing path.
     */
-  private[graft] def fingerprint(fs: FileSystem, root: Path): String = {
-    def files(p: Path): Seq[FileStatus] = fs.listStatus(p).toSeq
-      .flatMap(st => if (st.isDirectory) files(st.getPath) else Seq(st))
+  private[graft] def fingerprint(fs: FileSystem, root: Path): String =
+    fingerprint(listing(fs, root).getOrElse(throw new java.io.FileNotFoundException(root.toString)))
+
+  private def fingerprint(files: Seq[FileStatus]): String = {
     val md = java.security.MessageDigest.getInstance("SHA-256")
-    files(root).map(f => s"${f.getPath}\t${f.getLen}\t${f.getModificationTime}\n")
+    files.map(f => s"${f.getPath}\t${f.getLen}\t${f.getModificationTime}\n")
       .sorted.foreach(line => md.update(line.getBytes("UTF-8")))
     md.digest().map("%02x".format(_)).mkString
   }
 
-  def region(s: SparkSession, dir: String): DataFrame   = parquet(s, p(dir, "region"))
-  def nation(s: SparkSession, dir: String): DataFrame   = parquet(s, p(dir, "nation"))
-  def customer(s: SparkSession, dir: String): DataFrame = parquet(s, p(dir, "customer"))
-  def supplier(s: SparkSession, dir: String): DataFrame = parquet(s, p(dir, "supplier"))
-  def part(s: SparkSession, dir: String): DataFrame     = parquet(s, p(dir, "part"))
-  def orders(s: SparkSession, dir: String): DataFrame   = parquet(s, p(dir, "orders"))
-  def lineitem(s: SparkSession, dir: String): DataFrame = parquet(s, p(dir, "lineitem"))
-  def documents(s: SparkSession, dir: String): DataFrame = parquet(s, p(dir, "documents"))
-  def embeddings(s: SparkSession, dir: String): DataFrame = parquet(s, p(dir, "embeddings"))
+  def region(s: SparkSession, dir: String): DataFrame   = table(s, dir, "region")
+  def nation(s: SparkSession, dir: String): DataFrame   = table(s, dir, "nation")
+  def customer(s: SparkSession, dir: String): DataFrame = table(s, dir, "customer")
+  def supplier(s: SparkSession, dir: String): DataFrame = table(s, dir, "supplier")
+  def part(s: SparkSession, dir: String): DataFrame     = table(s, dir, "part")
+  def orders(s: SparkSession, dir: String): DataFrame   = table(s, dir, "orders")
+  def lineitem(s: SparkSession, dir: String): DataFrame = table(s, dir, "lineitem")
+  def documents(s: SparkSession, dir: String): DataFrame = table(s, dir, "documents")
+  def embeddings(s: SparkSession, dir: String): DataFrame = table(s, dir, "embeddings")
 
   /** `events.ts` has shipped in two physical encodings across testdata
     * generations, and the loader normalizes both to Spark's native
@@ -122,7 +253,7 @@ object Tables {
     */
   def events(s: SparkSession, dir: String): DataFrame = {
     val raw =
-      try parquet(s, p(dir, "events"))
+      try table(s, dir, "events")
       catch {
         // nanos data in a session missing the legacy conf dies inside
         // schema inference, before our dispatch can run — keep the old

@@ -14,15 +14,10 @@ object Verify {
     }
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      // see Bench: the 100-entry default recompiles every generated class
-      // on every reuse once the inventory exceeds the cache
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // SPARK_GRAFT_TERMINAL_SORT=false dumps the DEPLOYMENT shape (terminal

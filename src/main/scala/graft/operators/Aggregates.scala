@@ -22,10 +22,7 @@ object Aggregates {
     * [ref: timeusage/…/TimeUsage.scala#timeUsageGrouped].
     */
   def aggAvg(s: SparkSession, dir: String): DataFrame =
-    // round-17 single-split fan-out (guide §2.5): the four exact-decimal
-    // money sums otherwise run serially inside the one-row-group scan
-    // task; exact sums are associative — partition-count independent
-    Relational.fanOutIfSingleSplit(Tables.lineitem(s, dir), col("l_orderkey"), col("l_linenumber"))
+    Tables.lineitem(s, dir)
       .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
       .groupBy("l_returnflag", "l_linestatus")
       .agg(
@@ -76,9 +73,6 @@ object Aggregates {
 
   /** D6: max-per-group [ref: stackoverflow/…/StackOverflow.scala#scoredPostings]. */
   def aggMaxGroup(s: SparkSession, dir: String): DataFrame =
-    // round-17: group-keyed fan-out probed and REJECTED (0.67 -> 0.85 s —
-    // shuffling raw rows by the near-input-cardinality group key costs
-    // more than the serial partial agg it replaces)
     Tables.lineitem(s, dir)
       .groupBy("l_orderkey")
       .agg(round(max("l_extendedprice"), 2).as("max_price"),
@@ -164,9 +158,7 @@ object Aggregates {
 
   /** D14: rollup over the Q1 grouping. */
   def aggRollup(s: SparkSession, dir: String): DataFrame =
-    // round-17 single-split fan-out — Expand (3 replicas/row) + the decimal
-    // partial agg otherwise run serially in the scan task; see aggAvg
-    Relational.fanOutIfSingleSplit(Tables.lineitem(s, dir), col("l_orderkey"), col("l_linenumber"))
+    Tables.lineitem(s, dir)
       // compute the per-row decimal money expression BEFORE the rollup:
       // Expand replicates each row once per grouping set (3× here), and an
       // aggregate-side expression would be re-evaluated per replica —
@@ -224,8 +216,7 @@ object Aggregates {
     * engines. One partial-agg pass.
     */
   def aggWeighted(s: SparkSession, dir: String): DataFrame =
-    // round-17 single-split fan-out — same rationale as aggAvg
-    Relational.fanOutIfSingleSplit(Tables.lineitem(s, dir), col("l_orderkey"), col("l_linenumber"))
+    Tables.lineitem(s, dir)
       .groupBy("l_returnflag")
       .agg(
         round(sum(Num.dec2(col("l_extendedprice")) * Num.rate2(col("l_discount"))).cast("double") /
@@ -505,10 +496,7 @@ object Aggregates {
     //     concentration is the same asymptotic class as the old plan's —
     //     exactness at scale is exactly why this query's POINT is the
     //     mergeable-histogram path; the exact arm exists to gate it.)
-    // round-17: single-split fan-out keyed by c — the distinct-value grid's
-    // dedup otherwise runs serially in the scan task, and hash(c) satisfies
-    // groupBy(c)'s clustering (probed: grid build 0.85 → 0.45 s warm). A
-    // full parallel-prefix rework of `cum` was probed and REJECTED (2.87 →
+    // A full parallel-prefix rework of `cum` was probed and REJECTED (2.87 →
     // 3.40 s — the added stages cost more than this one bounded window).
     // Round-18 (VERDICT r17 #6) — the two-level exact prefix was BUILT AND
     // REJECTED at 100× with numbers: order-preserving ranges r = c >> 16
@@ -524,7 +512,7 @@ object Aggregates {
     // regardless of corpus size — so it is a bounded-constant structure
     // (the 256-bin cumulative's class, bigger constant), not a data-sized
     // single partition.
-    val grid = Relational.fanOutIfSingleSplit(x, col("c"))
+    val grid = x
       .groupBy("c").agg(count(lit(1)).as("cnt"))
       .withColumn("cum", sum("cnt").over(Window.orderBy("c")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
@@ -649,8 +637,6 @@ object Aggregates {
     * produced by aggregation from a NULL in the data.
     */
   def aggGroupingSets(s: SparkSession, dir: String): DataFrame =
-    // round-17: fan-out probed and REJECTED here (0.71 -> 0.89 s — unlike
-    // aggRollup, the raw-row exchange cost more than the serial Expand+agg)
     Tables.lineitem(s, dir)
       .withColumn("price2", Num.dec2(col("l_extendedprice")))
       .groupingSets(
@@ -676,11 +662,7 @@ object Aggregates {
     */
   def aggCorr(s: SparkSession, dir: String): DataFrame = {
     val (x, y) = (Num.dec2(col("l_quantity")), Num.dec2(col("l_extendedprice")))
-    // round-17 (guide §2.5 single-split fan-out, the stats_moments case):
-    // the five exact-decimal product sums otherwise run serially inside the
-    // one-row-group scan task; hash fan-out parallelizes the partial agg.
-    // Sums are exact decimals — associative, partition-count independent.
-    Relational.fanOutIfSingleSplit(Tables.lineitem(s, dir), col("l_orderkey"), col("l_linenumber"))
+    Tables.lineitem(s, dir)
       .groupBy("l_returnflag")
       .agg(
         count(lit(1)).as("n"),
@@ -713,8 +695,7 @@ object Aggregates {
     */
   def aggRegression(s: SparkSession, dir: String): DataFrame = {
     val (x, y) = (Num.dec2(col("l_quantity")), Num.dec2(col("l_extendedprice")))
-    // round-17 single-split fan-out — same rationale and proof as aggCorr
-    Relational.fanOutIfSingleSplit(Tables.lineitem(s, dir), col("l_orderkey"), col("l_linenumber"))
+    Tables.lineitem(s, dir)
       .groupBy("l_returnflag")
       .agg(
         count(lit(1)).as("n"),

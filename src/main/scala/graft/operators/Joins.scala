@@ -104,12 +104,8 @@ object Joins {
 
   /** C1: inner equi-join orders⋈lineitem, aggregated per order status. */
   def joinInner(s: SparkSession, dir: String): DataFrame =
-    // round-17 (guide §2.5 single-split fan-out): with orders broadcast, the
-    // probe + exact-decimal partial agg otherwise run serially in lineitem's
-    // one-row-group scan task. Decimal sums are associative; results
-    // partition-count independent.
     Tables.orders(s, dir)
-      .join(Relational.fanOutIfSingleSplit(Tables.lineitem(s, dir), col("l_orderkey")),
+      .join(Tables.lineitem(s, dir),
         col("o_orderkey") === col("l_orderkey"), "inner")
       .groupBy("o_orderstatus")
       .agg(
@@ -120,8 +116,7 @@ object Joins {
 
   /** C2: multi-way star join with broadcast dimensions — revenue by region. */
   def joinStar(s: SparkSession, dir: String): DataFrame =
-    // round-17 single-split fan-out on the fact side — see joinInner
-    Relational.fanOutIfSingleSplit(Tables.orders(s, dir), col("o_custkey"))
+    Tables.orders(s, dir)
       .join(Tables.customer(s, dir), col("o_custkey") === col("c_custkey"))
       .join(broadcast(Tables.nation(s, dir)), col("c_nationkey") === col("n_nationkey"))
       .join(broadcast(Tables.region(s, dir)), col("n_regionkey") === col("r_regionkey"))
@@ -149,8 +144,7 @@ object Joins {
       .filter(col("o_orderdate") < cutoff)
       .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
       .select("o_orderkey", "o_orderdate", "o_orderpriority")
-    // round-17 single-split fan-out on the fact side — see joinInner
-    Relational.fanOutIfSingleSplit(Tables.lineitem(s, dir), col("l_orderkey"))
+    Tables.lineitem(s, dir)
       .filter(col("l_shipdate") > cutoff)
       .select(col("l_orderkey"),
         graft.functions.Num.discounted(col("l_extendedprice"), col("l_discount")).as("disc"))
@@ -180,8 +174,7 @@ object Joins {
       .where(col("o_orderdate") >= lit("1995-01-01").cast("timestamp") &&
         col("o_orderdate") < lit("1996-01-01").cast("timestamp"))
       .select("o_orderkey", "o_custkey")
-    // round-17 single-split fan-out on the fact side — see joinInner
-    val li = Relational.fanOutIfSingleSplit(Tables.lineitem(s, dir), col("l_orderkey"))
+    val li = Tables.lineitem(s, dir)
       .select("l_orderkey", "l_suppkey", "l_extendedprice", "l_discount")
     val supp = Tables.supplier(s, dir).select("s_suppkey", "s_nationkey")
     val natAsia = Tables.nation(s, dir)
@@ -243,8 +236,6 @@ object Joins {
     * checks via its native ASOF LEFT JOIN.
     */
   def joinAsof(s: SparkSession, dir: String): DataFrame = {
-    // round-17: group-keyed fan-out of the orders pre-reduction probed and
-    // REJECTED (flat on join_asof, 1.34 -> 1.95 s on the salted variant).
     // Round-18 (guide §2.4): the (key, date) pre-reduction groupBy is GONE —
     // it bought almost nothing (o_orderdate is near-unique per customer, so
     // the partial agg barely reduced rows) and cost a full extra exchange of

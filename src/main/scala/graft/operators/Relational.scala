@@ -469,12 +469,7 @@ object Relational {
     * [ref: timeusage/…/TimeUsage.scala#timeUsageSummary].
     */
   def projectArith(s: SparkSession, dir: String): DataFrame =
-    // round-17 (guide §2.5 single-split fan-out): the exact-decimal charged()
-    // arithmetic otherwise runs serially in the one-row-group scan task —
-    // twice, because the terminal sort's range-sampling pass re-executes the
-    // pre-exchange subtree. Per-row projection: row placement is irrelevant
-    // (the terminal sort fixes the order), results identical.
-    fanOutIfSingleSplit(Tables.lineitem(s, dir), col("l_orderkey"), col("l_linenumber"))
+    Tables.lineitem(s, dir)
       .select(
         col("l_orderkey"), col("l_linenumber"),
         graft.functions.Num.money(
@@ -506,8 +501,7 @@ object Relational {
     val (money, rates, qty) = classifiedColumns(li.columns.toSeq)
     require(money.nonEmpty && rates.nonEmpty && qty.nonEmpty,
       s"classification must cover all three groups, got $money / $rates / $qty")
-    // round-17 single-split fan-out — same rationale and proof as projectArith
-    fanOutIfSingleSplit(li, col("l_orderkey"), col("l_linenumber"))
+    li
       .select(
         col("l_orderkey"), col("l_linenumber"),
         Num.money(money.map(c => Num.dec2(col(c))).reduce(_ + _)).as("money_sum"),
@@ -519,8 +513,7 @@ object Relational {
 
   /** H3: math scalars [ref: stackoverflow/…/StackOverflow.scala#euclideanDistance]. */
   def scalarMath(s: SparkSession, dir: String): DataFrame =
-    // round-17 single-split fan-out — same rationale and proof as projectArith
-    fanOutIfSingleSplit(Tables.lineitem(s, dir), col("l_orderkey"), col("l_linenumber"))
+    Tables.lineitem(s, dir)
       .select(
         col("l_orderkey"), col("l_linenumber"),
         round(sqrt(col("l_extendedprice")), 4).as("sqrt_price"),
@@ -889,47 +882,6 @@ object Relational {
   /** Columns profiled by `stats_profile`. */
   val ProfileCols: Seq[String] = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
 
-  /** Fan a SINGLE-SPLIT scan out before compute-heavy map-side work. The
-    * sf fixtures ship each table as one parquet row group, so every scan is
-    * one task and everything below the first exchange runs serial — for
-    * stats_moments that serializes the exact-decimal quartic arithmetic
-    * over the whole table. The repartition is applied ONLY when the frame's
-    * input bytes fit inside one scan split
-    * (`spark.sql.files.maxPartitionBytes`): at production scale the
-    * condition is false and the plan is byte-for-byte unchanged — the knob
-    * derives from input size, it is not a core-count constant. Results are
-    * partition-independent (the host queries are global aggregates with
-    * exact-sum discipline).
-    *
-    * The input bytes are the summed sizes of the file indexes behind the
-    * frame's analyzed plan, which Spark listed when the frame was read. A
-    * frame with a leaf that is not a file scan has no known size and is
-    * returned unchanged.
-    */
-  private[graft] def fanOutIfSingleSplit(df: DataFrame, keys: Column*): DataFrame = {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    val s = df.sparkSession
-    val bytes = try {
-      val sizes = df.queryExecution.analyzed.collectLeaves().map {
-        case l: LogicalRelation => Some(l.relation).collect {
-          case fs: HadoopFsRelation => fs.location.sizeInBytes
-        }
-        case _ => None
-      }
-      if (sizes.forall(_.nonEmpty)) sizes.flatten.sum else Long.MaxValue
-    } catch { case scala.util.control.NonFatal(_) => Long.MaxValue }
-    val maxSplit = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-      s.conf.get("spark.sql.files.maxPartitionBytes", "128MB"))
-    if (bytes >= maxSplit) df
-    // hash keys when given (skips round-robin's sort-before-repartition —
-    // SPARK-23207 makes every keyless repartition pre-sort its input so
-    // retries are deterministic; a deterministic key needs no such sort),
-    // round-robin otherwise. The explicit partition count makes this a
-    // REPARTITION_BY_NUM shuffle, which AQE never coalesces back down.
-    else if (keys.nonEmpty) df.repartition(s.sparkContext.defaultParallelism, keys: _*)
-    else df.repartition(s.sparkContext.defaultParallelism)
-  }
-
   /** `stats_profile`: per-column data-quality profile (row count, nulls,
     * exact distinct count, min/max) for a set of numeric columns, in ONE
     * scan — the validation stage that gates a training-data ingest.
@@ -946,25 +898,18 @@ object Relational {
   def statsProfile(s: SparkSession, dir: String): DataFrame = {
     // Round-17 restructure (guide §2.3/§2.5). The round-7 form was ONE
     // global aggregate with four exact count_distincts, which rewrites to
-    // Expand (5 replicas/row) + a value-map partial aggregate running
-    // serially inside the one-row-group scan task; a plain fan-out was
-    // probed and REJECTED there (the per-partition partial-distinct maps
-    // inflate the merge shuffle). This form computes the SAME four numbers
+    // Expand (5 replicas/row) + a value-map partial aggregate. This form computes the SAME four numbers
     // per column from an explicit (col, value) two-level aggregation —
     // the textbook distinct-agg decomposition:
-    //   level 1  groupBy(col, value) → per-value count   (parallel after
-    //            the keyed fan-out; shuffle ∝ distinct (col, value) pairs)
+    //   level 1  groupBy(col, value) → per-value count   (shuffle ∝
+    //            distinct (col, value) pairs)
     //   level 2  groupBy(col): n = Σcnt, nulls = Σcnt[v IS NULL],
     //            distinct = COUNT(v) over the per-value rows (non-null
     //            distinct values, = count_distinct's semantics),
     //            min/max over the value domain (null-ignoring, same as
     //            min/max over rows).
     // Identical output, exact integers — and both levels partial-aggregate.
-    // fan-out keyed by the profiled columns themselves (they exist on any
-    // lineitem-shaped input, incl. the spec's inline fixture; the near-
-    // unique extendedprice spreads the hash)
-    val li = fanOutIfSingleSplit(Tables.lineitem(s, dir), ProfileCols.map(col): _*)
-    val perVal = li
+    val perVal = Tables.lineitem(s, dir)
       .select(explode(array(ProfileCols.zipWithIndex.map { case (c, i) =>
         struct(lit(i).as("cid"), col(c).as("v")) }: _*)).as("p"))
       .groupBy(col("p.cid").as("cid"), col("p.v").as("v"))
@@ -1007,7 +952,7 @@ object Relational {
         sum((c2 * c).cast(DecimalType(38, 0))).cast("double").as(s"${name}_s3"),
         sum((c2 * c2).cast(DecimalType(38, 0))).cast("double").as(s"${name}_s4"))
     }
-    fanOutIfSingleSplit(Tables.lineitem(s, dir))
+    Tables.lineitem(s, dir)
       .agg(count(lit(1)).as("n"), aggs: _*)
       .select(explode(array(MomentCols.map { c =>
         struct(lit(c).as("col_name"), col("n"),

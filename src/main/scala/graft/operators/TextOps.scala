@@ -338,12 +338,7 @@ object TextOps {
     // (scale-adaptive: defaultParallelism), because a bare repartition(col)
     // is AQE-coalescible and the embedding table is small enough that AQE
     // folded it to one partition — serializing the |queries| × |chunks|
-    // scoring stage and the top-k window above it. A fan-out of the chunk
-    // frame BELOW the embedding was probed and REJECTED at 100× (13 → 29 s:
-    // the single-split condition reads the documents FILE size, but the
-    // chunk explode is ~10× that, so the extra exchange ships ~600 MB of
-    // chunk text); the barrier alone is also the fastest form at sf0.1
-    // (1.15 → 0.55 s warm vs 0.82 s with the fan-out).
+    // scoring stage and the top-k window above it.
     val chunks = chunkFrame(s, dir)
       .select(col("doc_id"), col("chunk_id"),
         graft.plans.HashedBow.of(col("chunk"), RagDims).as("vec"))
@@ -449,9 +444,7 @@ object TextOps {
     // split+filter HOF TWICE per chunk row (the generator input is
     // evaluated in the Generate node, outside the child project's
     // common-subexpression elimination); via an attribute it runs once.
-    // round-17 single-split fan-out (guide §2.5): tokenization + the tf
-    // partial aggregation otherwise run inside the one-row-group scan task
-    val tok = Relational.fanOutIfSingleSplit(chunkFrame(s, dir), col("doc_id"), col("chunk_id"))
+    val tok = chunkFrame(s, dir)
       .select(col("doc_id"), col("chunk_id"), realToks(col("chunk")).as("toks"))
       .select(col("doc_id"), col("chunk_id"),
         size(col("toks")).cast("long").as("dl"),
@@ -1154,17 +1147,6 @@ object TextOps {
     * A parity law (TextOpsSpec) pins the driver-local loop to the
     * round-8 distributed form merge-for-merge.
     */
-  /** Word-type table (word, n, syms): the corpus collapsed once — the
-    * distributed base of the round-8 k-step loop, kept as the parity
-    * reference for [[bpeLearnLocal]].
-    */
-  private def bpeWordTypes(s: SparkSession, dir: String): DataFrame =
-    Tables.documents(s, dir)
-      .select(explode(split(col("text"), " ")).as("word"))
-      .where(length(col("word")) > 0)
-      .groupBy("word").agg(count(lit(1)).as("n"))
-      .select(col("word"), col("n"), split(col("word"), "").as("syms"))
-
   /** The ONE distributed pass of the production BPE path: word-type
     * counts, collected (vocabulary-sized — 31 types on the synthetic
     * corpus, ~10^6-10^7 on a real one; Heaps' law keeps it driver-sized
@@ -2068,9 +2050,7 @@ object TextOps {
     * terminal sort; at 100 TB this is embarrassingly parallel scan work.
     */
   def textPii(s: SparkSession, dir: String): DataFrame =
-    // round-17 single-split fan-out — the three regex passes are the per-row
-    // cost; same rationale and proof as textRepetition
-    Relational.fanOutIfSingleSplit(Tables.documents(s, dir), col("doc_id"))
+    Tables.documents(s, dir)
       .select(
         col("doc_id"),
         size(expr(s"regexp_extract_all(text, '$EmailRe', 0)")).as("n_emails"),
@@ -2112,11 +2092,7 @@ object TextOps {
     def total(n: Int): Column = greatest(nW - (n - 1), lit(1))
     def repFrac(n: Int): Column =
       round(lit(1.0) - size(hashedShingles(col("text"), n)).cast("double") / total(n), 4)
-    // round-17 (guide §2.5 single-split fan-out): the HashedGrams /
-    // TopGramCount kernels otherwise run serially in the one-row-group scan
-    // task — twice, since the terminal sort's range sampling re-executes the
-    // pre-exchange subtree. Per-row projection; results identical.
-    Relational.fanOutIfSingleSplit(Tables.documents(s, dir), col("doc_id"))
+    Tables.documents(s, dir)
       .select(col("doc_id"), repFrac(2).as("rep2"), repFrac(3).as("rep3"),
         round(graft.plans.TopGramCount.of(col("text"), 2).cast("double") / total(2), 4)
           .as("top_bigram_frac"))

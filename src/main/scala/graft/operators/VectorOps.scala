@@ -941,7 +941,7 @@ object VectorOps {
     * each slice SHUFFLE-FREE via a literal-centers HOF argmin indexed by
     * `s`, recomputes means with the house exact-decimal cross-row sums
     * (associative-exact ⇒ the movement sequence and exit iteration are
-    * run-independent — the `kmeansCentersTraced` rationale), and collects
+    * run-independent — the `recenterSums` rationale), and collects
     * only `PqSubspaces`×k×`PqSubDim` (sum, count) cells to the driver. So
     * training costs ONE corpus pass per iteration — not one per subspace.
     *
@@ -2615,6 +2615,22 @@ object VectorOps {
     emb.select(col("vec_id"), col("label"), col("embedding"),
       nearestCenter(cs).getField("cid").as("cid"))
 
+  /** One k-means re-center step: per (cid, pos), the sum `sv` of the
+    * dimension-`pos` components of the vectors assigned to `cs(cid)`, and
+    * their count `n`. The sums are exact DECIMAL(28,20), so the loop's
+    * movement sequence and exit iteration are run-independent: double
+    * partial sums merge in shuffle-arrival order, and an ulp of that noise
+    * near the convergence tolerance would flip whole iterations.
+    */
+  private def recenterSums(emb: DataFrame, cs: Array[Seq[Double]]): DataFrame = {
+    import org.apache.spark.sql.types.DecimalType
+    assignedTo(emb, cs)
+      .select(col("cid"), posexplode(col("embedding")))
+      .groupBy("cid", "pos")
+      .agg(sum(col("col").cast("double").cast(DecimalType(28, 20)))
+        .cast("double").as("sv"), count(lit(1)).as("n"))
+  }
+
   /** `kmeans_assign`: ONE k-means assignment step — classify every vector to
     * its nearest init centroid (round-2 VERDICT #7: a single
     * classify-to-literal-centroids pass is pure SQL, so this converts part
@@ -2678,26 +2694,13 @@ object VectorOps {
     // re-planning only adds a per-iteration driver round trip — see
     // graft.functions.Confs. Results are unaffected (physical-only).
     graft.functions.Confs.kBoundedLoop(emb.sparkSession) {
-    import org.apache.spark.sql.types.DecimalType
     var centers = initCenters(emb)
     var moved = Double.MaxValue
     var trace = List.empty[Double]
     var it = 0
     while (it < maxIters && moved > tol) {
       it += 1
-      // EXACT decimal cross-row sums (same discipline as simIvf's centroid
-      // build): double partial-sums merge in shuffle-arrival order, and
-      // with a convergence threshold in the loop condition an ulp of merge
-      // noise near the tol boundary would flip WHOLE iterations —
-      // nondeterministic centers from a deterministic contract (round-5
-      // review finding). Decimal sums are associative-exact, so the
-      // movement sequence and the exit iteration are run-independent.
-      val sums = assignedTo(emb, centers)
-        .select(col("cid"), posexplode(col("embedding")))
-        .groupBy("cid", "pos")
-        .agg(sum(col("col").cast("double").cast(DecimalType(28, 20)))
-          .cast("double").as("sv"), count(lit(1)).as("n"))
-        .collect()
+      val sums = recenterSums(emb, centers).collect()
       val byCluster = sums.groupBy(_.getInt(0))
       val next = centers.zipWithIndex.map { case (old, cid) =>
         byCluster.get(cid) match {
@@ -2717,17 +2720,6 @@ object VectorOps {
     (centers, trace.reverse)
   }
 
-  // round-17 probe shims (graft.Probe) — same bodies the loop runs
-  private[graft] def probeInit(emb: DataFrame): Array[Seq[Double]] = initCenters(emb)
-  private[graft] def probeIterFrame(emb: DataFrame, centers: Array[Seq[Double]]): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    assignedTo(emb, centers)
-      .select(col("cid"), posexplode(col("embedding")))
-      .groupBy("cid", "pos")
-      .agg(sum(col("col").cast("double").cast(DecimalType(28, 20)))
-        .cast("double").as("sv"), count(lit(1)).as("n"))
-  }
-
   def kmeansClusters(s: SparkSession, dir: String): DataFrame = {
     // A5: cached across the iteration loop; the cache is dropped before
     // returning (round-2 VERDICT #5 — no cached frame outlives its query
@@ -2740,7 +2732,7 @@ object VectorOps {
       // the full convergence trajectory, identical on every row: the gate
       // artifact records WHICH path the loop took, not just where it
       // landed (round-7; deterministic because the center sums are exact
-      // decimals — see kmeansCentersTraced). Each movement renders as
+      // decimals — see recenterSums). Each movement renders as
       // floor(m·10¹²) — an integer both engines produce bit-identically
       // from the identical double (the graph_pagerank floor trick; the
       // previous %.6e format was NOT cross-engine replayable — Java
@@ -2796,15 +2788,9 @@ object VectorOps {
     * map-side partial aggregation — the loop's own per-pass cost.
     */
   def kmeansIter1(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label"), col("embedding"))
-    val centers = initCenters(emb)
-    assignedTo(emb, centers)
-      .select(col("cid"), posexplode(col("embedding")))
-      .groupBy("cid", "pos")
-      .agg(sum(col("col").cast("double").cast(DecimalType(28, 20)))
-        .cast("double").as("sv"), count(lit(1)).as("n"))
+    recenterSums(emb, initCenters(emb))
       .select(col("cid"), col("pos"),
         round(col("sv") / col("n"), 6).as("center_val"), col("n"))
       .oracleSorted("cid", "pos")

@@ -4,18 +4,16 @@ import org.apache.spark.sql.SparkSession
 
 /** Shared local session for all suites (mirrors the reference suites'
   * single-SparkContext style [ref: wikipedia/…/WikipediaSuite.scala]).
-  * Config matches Verify/Bench so plan assertions see the same physical
-  * plans the driver harness produces.
+  * Built from `GraftSession.builder()`, like Verify and Bench, so the
+  * specs run the same session configuration as the mains and library users.
   */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    val s = GraftSession.builder()
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir", "/tmp/graft_test_warehouse")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

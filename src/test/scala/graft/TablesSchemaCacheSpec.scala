@@ -1,25 +1,31 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, SparkSession}
 import org.apache.spark.sql.types.TimestampType
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** `Tables.parquet` infers a path's schema once: later loads plan the same
   * relation without a Spark job, and any change to the path's files or to
-  * the session's inference confs re-infers.
+  * the session's inference confs re-infers. The named loaders read a table
+  * with fewer row groups than cores from an N-file copy.
   */
-class TablesSchemaCacheSpec extends AnyFunSuite {
+class TablesSchemaCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
   import SparkTestSession.{spark, sfDir}
 
   private val sf01Dir = sfDir.replace("sf0.001", "sf0.1")
@@ -48,8 +54,36 @@ class TablesSchemaCacheSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  private def tempDir(): String =
-    Files.createTempDirectory("graft-schema-cache").toString
+  private val temps = new ConcurrentLinkedQueue[String]()
+
+  private def tempDir(): String = {
+    val p = Files.createTempDirectory("graft-schema-cache").toString
+    temps.add(p)
+    p
+  }
+
+  /** The staged copies of tables under source dir `dir`: the `by/<digest>`
+    * roots whose `_GRAFT_DONE` key (`dir|tag|fingerprint`) names `dir`.
+    */
+  private def stagedCopies(dir: String): Seq[java.nio.file.Path] =
+    Tables.all.map(_._1).flatMap { name =>
+      val by = new java.io.File(s"${Tables.CopyStageDir}/$name/by")
+      Option(by.listFiles()).toSeq.flatten.map(_.toPath).filter { root =>
+        val done = root.resolve("_GRAFT_DONE")
+        Files.exists(done) && Files.readString(done).startsWith(s"$dir|")
+      }
+    }
+
+  override def afterAll(): Unit = temps.asScala.foreach { dir =>
+    stagedCopies(dir).foreach(Staging.deleteTree)
+    Staging.deleteTree(Paths.get(dir))
+  }
+
+  private def footer(path: String) = {
+    val r = ParquetFileReader.open(
+      HadoopInputFile.fromPath(new Path(path), spark.sessionState.newHadoopConf()))
+    try r.getFooter finally r.close()
+  }
 
   test("after one warm call, building agg_cube and join_outer starts no Spark job") {
     Seq("agg_cube", "join_outer").foreach { name =>
@@ -59,7 +93,8 @@ class TablesSchemaCacheSpec extends AnyFunSuite {
     }
   }
 
-  test("every loader's cached schema equals a fresh inference (nullability, metadata) at sf0.001 and sf0.1") {
+  test("every loader at sf0.001 and sf0.1: schema as inferred fresh, rows and footers as the source from an N-file copy, no job when warm") {
+    val n = spark.sparkContext.defaultParallelism
     for (dir <- Seq(sfDir, sf01Dir); (name, load) <- Tables.all) {
       val path = s"$dir/$name.parquet"
       val fresh = spark.read.parquet(path).schema
@@ -70,7 +105,36 @@ class TablesSchemaCacheSpec extends AnyFunSuite {
       assert(cached == fresh, s"$path: cached\n${cached.treeString}\nfresh\n${fresh.treeString}")
       if (name == "events") assert(load(spark, dir).schema("ts").dataType == TimestampType)
       else assert(load(spark, dir).schema == fresh, s"$path: loader schema diverges")
+
+      // the single-row-group fixture loads from a staged N-file copy
+      val source = footer(path)
+      assert(source.getBlocks.size < n, s"$path: the fixture is expected to be one row group")
+      val df = load(spark, dir)
+      assert(df.rdd.getNumPartitions == n, s"$path: scan partitions")
+      val files = df.inputFiles.toSeq
+      assert(files.size == n && files.forall(_.contains(s"${Tables.CopyStageDir}/$name/by/")),
+        s"$path loaded from $files")
+      files.foreach { f =>
+        val staged = footer(f).getFileMetaData
+        assert(staged.getSchema == source.getFileMetaData.getSchema, f)
+        assert(staged.getKeyValueMetaData == source.getFileMetaData.getKeyValueMetaData, f)
+      }
+      val (copy, orig) = (spark.read.parquet(files: _*), spark.read.parquet(path))
+      assert(copy.count() == orig.count(), path)
+      assert(copy.exceptAll(orig).isEmpty && orig.exceptAll(copy).isEmpty, s"$path: rows differ")
+      val (_, loadJobs) = jobsDuring(load(spark, dir))
+      assert(loadJobs == 0, s"$path: a warm loader call started $loadJobs job(s)")
     }
+  }
+
+  test("a table with N or more files loads in place and stages nothing") {
+    val dir = tempDir()
+    Tables.lineitem(spark, sfDir).repartition(7).write.parquet(s"$dir/lineitem.parquet")
+    val df = Tables.lineitem(spark, dir)
+    assert(df.inputFiles.length == 7 && df.inputFiles.forall(_.contains(s"$dir/lineitem.parquet")),
+      df.inputFiles.toSeq)
+    assert(df.count() == Tables.lineitem(spark, sfDir).count())
+    assert(stagedCopies(dir).isEmpty)
   }
 
   test("rewriting a dataset at the same path re-infers its schema and reads the new rows") {
