@@ -33,11 +33,11 @@ object Staging {
   /** Stage the mirror of `source` for source dir `dir` and return its root.
     *
     * The stage key is `dir|tag|fingerprint(source)`, where `tag` names the
-    * mirror's layout version (and any build constants it depends on), and
-    * the fingerprint is [[Tables.fingerprint]] of the source path. A
-    * regenerated source therefore gets a new key; a path-only key would let
-    * both engines read the same stale mirror, which the oracle hash cannot
-    * catch because they agree.
+    * mirror's layout version and what else it depends on (build constants,
+    * [[Tables.scanTag]]), and the fingerprint is [[Tables.fingerprint]] of
+    * the source path. A regenerated source therefore gets a new key; a
+    * path-only key would let both engines read the same stale mirror, which
+    * the oracle hash cannot catch because they agree.
     *
     * Each key stages once into the immutable `<stageDir>/by/<digest>/`,
     * which `write` receives as its argument, and is trusted only once

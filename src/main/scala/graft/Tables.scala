@@ -29,13 +29,15 @@ import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, Times
   * Partition sizing: a scan runs at most one task per parquet row group,
   * and Spark never splits a file below `spark.sql.files.openCostInBytes`,
   * so a small single-row-group file scans in one task. A named loader
-  * therefore reads a table whose files hold fewer row groups than the
-  * session's `defaultParallelism` (N) from a copy: N files of contiguous
-  * source rows with the source's parquet schema and key-value metadata,
-  * staged once per (source, N) under `CopyStageDir/<table>/by/<digest>`. A
-  * table with N or more files or row groups loads in place, as does one
-  * that is not a flat directory of local files sharing one schema. Every
-  * read, in place or from a copy, goes through [[parquet]].
+  * therefore reads a table that fits in one scan split
+  * (`spark.sql.files.maxPartitionBytes`) and whose files hold fewer row
+  * groups than the session's `defaultParallelism` (N) from a copy: N files
+  * of contiguous source rows with the source's parquet schema and
+  * key-value metadata, staged once per (source, N) under
+  * `CopyStageDir/<table>/by/<digest>`. A table of a split or more, or with
+  * N or more files or row groups, loads in place, as does one that is not
+  * a flat directory of local files sharing one schema. Every read, in
+  * place or from a copy, goes through [[parquet]].
   */
 object Tables {
   private def p(dir: String, name: String) = s"$dir/$name.parquet"
@@ -57,8 +59,8 @@ object Tables {
   private val schemas =
     new ConcurrentHashMap[(String, Seq[String]), (String, StructType)]()
 
-  /** (qualified path, N) -> (listing fingerprint, root the loader reads). */
-  private val layouts = new ConcurrentHashMap[(String, Int), (String, String)]()
+  /** (qualified path, N, max split bytes) -> (listing fingerprint, root read). */
+  private val layouts = new ConcurrentHashMap[(String, Int, Long), (String, String)]()
 
   /** `s.read.parquet(path)` without the per-load inference job.
     *
@@ -105,9 +107,10 @@ object Tables {
       case Some(files) =>
         val fp = fingerprint(files)
         val n = s.sparkContext.defaultParallelism
-        val key = (qualified.toString, n)
+        val maxSplit = s.sessionState.conf.filesMaxPartitionBytes
+        val key = (qualified.toString, n, maxSplit)
         val root = Option(layouts.get(key)).collect { case (`fp`, r) => r }.getOrElse {
-          val r = layout(s, dir, name, fs, qualified, files, n)
+          val r = layout(s, dir, name, fs, qualified, files, n, maxSplit)
           layouts.put(key, (fp, r))
           r
         }
@@ -116,14 +119,16 @@ object Tables {
   }
 
   /** `p(dir, name)`, or the root of its staged `n`-file copy (see [[Tables]]).
-    * Footers are read only when there are fewer than `n` data files.
+    * Footers are read only when there are fewer than `n` data files holding
+    * fewer than `maxSplit` bytes.
     */
   private def layout(s: SparkSession, dir: String, name: String, fs: FileSystem,
-                     qualified: Path, files: Seq[FileStatus], n: Int): String = {
+                     qualified: Path, files: Seq[FileStatus], n: Int, maxSplit: Long): String = {
     val path = p(dir, name)
     val data = files.filterNot(f => f.getPath.getName.startsWith("_") ||
       f.getPath.getName.startsWith("."))
-    if (data.isEmpty || data.size >= n || fs.getScheme != "file" ||
+    if (data.isEmpty || data.size >= n || data.map(_.getLen).sum >= maxSplit ||
+        fs.getScheme != "file" ||
         data.exists(f => f.getPath != qualified && f.getPath.getParent != qualified)) path
     else {
       val conf = s.sessionState.newHadoopConf()
@@ -222,6 +227,11 @@ object Tables {
       .sorted.foreach(line => md.update(line.getBytes("UTF-8")))
     md.digest().map("%02x".format(_)).mkString
   }
+
+  /** Stage-tag suffix of a mirror written straight from a named loader: its
+    * files follow the loader's scan partitions, so the session's N.
+    */
+  private[graft] def scanTag(s: SparkSession): String = s"n=${s.sparkContext.defaultParallelism}"
 
   def region(s: SparkSession, dir: String): DataFrame   = table(s, dir, "region")
   def nation(s: SparkSession, dir: String): DataFrame   = table(s, dir, "nation")

@@ -541,7 +541,7 @@ object Lakehouse {
     * pins the staged snapshot round trip.
     */
   def scanTimetravel(s: SparkSession, dir: String): DataFrame = {
-    val root = Staging.stage(TtStageDir, dir, "tt1", s"$dir/orders.parquet") { target =>
+    val root = Staging.stage(TtStageDir, dir, s"tt1|${Tables.scanTag(s)}", s"$dir/orders.parquet") { target =>
       (0 until TtVersions).foreach { v =>
         ttSnapshot(s, dir, v).write.mode("overwrite").parquet(s"$target/v$v")
       }

@@ -76,7 +76,7 @@ object Relational {
     * names the dialect, so a dialect change re-stages.
     */
   private def stageCsv(s: SparkSession, dir: String): String =
-    Staging.stage(CsvStageDir, dir, "rfc4180", s"$dir/part.parquet") { target =>
+    Staging.stage(CsvStageDir, dir, s"rfc4180|${Tables.scanTag(s)}", s"$dir/part.parquet") { target =>
       // escape = '"' → RFC-4180 doubled-quote escaping. Spark's default
       // escape is backslash, which DuckDB's read_csv (escape = '"') would
       // parse differently the moment a field contains a quote; pinning both
@@ -130,7 +130,7 @@ object Relational {
     * directory.
     */
   private def stageJson(s: SparkSession, dir: String): String =
-    Staging.stage(JsonStageDir, dir, "jsonl1", s"$dir/documents.parquet") { target =>
+    Staging.stage(JsonStageDir, dir, s"jsonl1|${Tables.scanTag(s)}", s"$dir/documents.parquet") { target =>
       Tables.documents(s, dir)
         .write.mode("overwrite")
         .json(s"$target/documents")
@@ -163,7 +163,7 @@ object Relational {
     * the pinned-UTC session. Parallel write, one ORC file per task.
     */
   private def stageOrc(s: SparkSession, dir: String): String =
-    Staging.stage(OrcStageDir, dir, "orc1", s"$dir/orders.parquet") { target =>
+    Staging.stage(OrcStageDir, dir, s"orc1|${Tables.scanTag(s)}", s"$dir/orders.parquet") { target =>
       Tables.orders(s, dir)
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate")
         .write.mode("overwrite")
@@ -197,7 +197,7 @@ object Relational {
     * flatten 100 TB first.
     */
   private def stageNested(s: SparkSession, dir: String): String =
-    Staging.stage(NestedStageDir, dir, "nested1", s"$dir/documents.parquet") { target =>
+    Staging.stage(NestedStageDir, dir, s"nested1|${Tables.scanTag(s)}", s"$dir/documents.parquet") { target =>
       Tables.documents(s, dir)
         .select(col("doc_id"),
           struct(col("lang"), col("source"), col("n_chars")).as("meta"),
@@ -237,7 +237,7 @@ object Relational {
     * mid-stream and old files are never rewritten.
     */
   private def stageEvolved(s: SparkSession, dir: String): String =
-    Staging.stage(EvoStageDir, dir, "evo1", s"$dir/documents.parquet") { target =>
+    Staging.stage(EvoStageDir, dir, s"evo1|${Tables.scanTag(s)}", s"$dir/documents.parquet") { target =>
       val docs = Tables.documents(s, dir)
       docs.filter(col("doc_id") % 2 === 0)
         .select("doc_id", "lang", "n_chars")
@@ -373,7 +373,7 @@ object Relational {
     * Tag `v2`: the dimension joined the layout after the first version.
     */
   private def stagePartitioned(s: SparkSession, dir: String): String =
-    Staging.stage(PartStageDir, dir, "v2", s"$dir/documents.parquet") { target =>
+    Staging.stage(PartStageDir, dir, s"v2|${Tables.scanTag(s)}", s"$dir/documents.parquet") { target =>
       Tables.documents(s, dir).select("doc_id", "lang", "source", "n_chars")
         .write.partitionBy("lang").mode("overwrite")
         .parquet(s"$target/documents")

@@ -1172,7 +1172,7 @@ object VectorOps {
     * the match also pins the mirror round trip.
     */
   private[graft] def mrlStaged(s: SparkSession, dir: String): DataFrame = {
-    val root = Staging.stage(MrlStageDir, dir, "mrl1", s"$dir/embeddings.parquet") {
+    val root = Staging.stage(MrlStageDir, dir, s"mrl1|${Tables.scanTag(s)}", s"$dir/embeddings.parquet") {
       target =>
         Tables.embeddings(s, dir)
           .select(col("vec_id"), col("label"),
@@ -1277,7 +1277,7 @@ object VectorOps {
     * that recomputes the signature from the ORIGINAL table.
     */
   private[graft] def hamStaged(s: SparkSession, dir: String): DataFrame = {
-    val root = Staging.stage(HamStageDir, dir, "ham1", s"$dir/embeddings.parquet") {
+    val root = Staging.stage(HamStageDir, dir, s"ham1|${Tables.scanTag(s)}", s"$dir/embeddings.parquet") {
       target =>
         Tables.embeddings(s, dir)
           .select(col("vec_id"), col("label"),

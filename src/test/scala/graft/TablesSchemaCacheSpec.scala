@@ -137,6 +137,24 @@ class TablesSchemaCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(stagedCopies(dir).isEmpty)
   }
 
+  test("a table of one scan split or more loads in place; below a split it loads from the copy") {
+    val dir = tempDir()
+    val path = s"$dir/lineitem.parquet"
+    Files.copy(Paths.get(s"$sfDir/lineitem.parquet"), Paths.get(path))
+    val splitBelowTable = spark.newSession()
+    splitBelowTable.conf.set("spark.sql.files.maxPartitionBytes",
+      (Files.size(Paths.get(path)) - 1).toString)
+    val inPlace = Tables.lineitem(splitBelowTable, dir)
+    assert(inPlace.inputFiles.length == 1 && inPlace.inputFiles.head.endsWith(path),
+      inPlace.inputFiles.toSeq)
+    assert(stagedCopies(dir).isEmpty)
+    // the same listing under the default split: the layout cache keys the split size
+    val copied = Tables.lineitem(spark, dir)
+    assert(copied.rdd.getNumPartitions == spark.sparkContext.defaultParallelism)
+    assert(stagedCopies(dir).size == 1)
+    assert(inPlace.count() == copied.count())
+  }
+
   test("rewriting a dataset at the same path re-infers its schema and reads the new rows") {
     import spark.implicits._
     val path = s"${tempDir()}/t.parquet"
