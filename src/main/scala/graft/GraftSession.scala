@@ -8,9 +8,9 @@ import org.apache.spark.sql.SparkSession
   *
   *  - `graft.plans.GraftExtensions` injected → every native kernel
   *    (`vec_dot`, `vec_sq_dist`, `hashed_word_grams`, `hashed_char_grams`,
-  *    `hashed_char_grams_wide`,
-  *    `min_gram_md5`, `top_gram_count`, `band_sigs`, `simhash16`,
-  *    `simhash60`) available on the SQL path;
+  *    `hashed_char_grams_wide`, `min_gram_md5`, `top_gram_count`,
+  *    `band_sigs`, `winnowed_gram_pos`, `simhash16`, `simhash60`)
+  *    available on the SQL path;
   *  - nanosecond-parquet handling for the events table (see Tables.events);
   *  - UTC session timezone — date/timestamp semantics independent of the
   *    submitting machine (and of where each executor runs);

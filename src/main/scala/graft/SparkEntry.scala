@@ -546,7 +546,7 @@ object SparkEntry {
     "list_distinct(list_transform(generate_series(1, greatest(length(text) - 3, 1)), i -> text[i:i+3]))"
 
   /** Full 60-bit md5 prefix, NO mod-p reduction (mirror of
-    * HashedGrams.charGramsWide — dedup_substring's fingerprint space).
+    * Kernels.charGramsWide — dedup_substring's fingerprint space).
     */
   private def hash60Wide(x: String) =
     s"CAST(('0x' || substr(md5($x), 1, 15)) AS BIGINT)"
@@ -913,7 +913,7 @@ object SparkEntry {
   private val bandBucket =
     s"list_sum(list_transform(generate_series(1, ${VectorOps.EmbedBandBits}), i -> CASE WHEN embedding[g.band * ${VectorOps.EmbedBandBits} + i] >= 0 THEN 1 << (i - 1) ELSE 0 END))"
 
-  /** SimHash-per-doc CTE chain (mirror of TextOps.dedupSimhash/SimHash16):
+  /** SimHash-per-doc CTE chain (mirror of TextOps.dedupSimhash):
     * defines `sh(doc_id, simhash)`.
     */
   private val simhashShSql = simhashShChain(8, 16)
@@ -2198,7 +2198,7 @@ object SparkEntry {
     "sim_hnsw_incremental" -> hnswIncSql,
     "sample_fps" -> fpsSql,
     // MIPS: same brute scan as sim_topk ranked by the RAW dot product —
-    // the float fold mirrors FloatVecDot term for term (dotSql)
+    // the float fold mirrors Vec.dotF term for term (dotSql)
     "sim_mips" ->
       s"WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < ${VectorOps.QuerySetSize}), c AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id >= ${VectorOps.QuerySetSize}), s AS (SELECT q_id, vec_id, ${dotSql("q_emb", "embedding")} AS dot FROM c CROSS JOIN q), r AS (SELECT q_id, vec_id, dot, row_number() OVER (PARTITION BY q_id ORDER BY dot DESC, vec_id) AS rn FROM s) SELECT q_id, vec_id, dot, CAST(rn AS INT) AS rn FROM r WHERE rn <= ${VectorOps.TopK} ORDER BY q_id, rn",
     // sim_mips_ivf: the sim_ivf CTE chain rebuilt in the norm-AUGMENTED

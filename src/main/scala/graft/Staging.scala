@@ -41,11 +41,15 @@ object Staging {
     *
     * Each key stages once into the immutable `<stageDir>/by/<digest>/`,
     * which `write` receives as its argument, and is trusted only once
-    * `_GRAFT_DONE` exists in it: a partial target left by a crashed run is
-    * deleted and rebuilt, never read. `<stageDir>/current` is then
-    * atomically re-linked to the target. A target is never rewritten, so
-    * stages of different source dirs or contents coexist, and a reader
-    * keeps reading the root it was returned while another key is staged.
+    * `_GRAFT_DONE` exists in it. A `write` that throws deletes its target
+    * before the exception propagates, and every target under `by/` without
+    * the marker (left by a crashed run, of this key or another) is deleted
+    * under the locks below, where no writer can be running. So a partial
+    * target is never read and does not outlive the next stage of its dir.
+    * `<stageDir>/current` is then atomically re-linked to the target. A
+    * target is never rewritten, so stages of different source dirs or
+    * contents coexist, and a reader keeps reading the root it was returned
+    * while another key is staged.
     *
     * The check-and-write runs under a JVM monitor per stage dir and an OS
     * file lock on `<stageDir>/.lock`. The file lock serializes separate JVMs
@@ -70,10 +74,16 @@ object Staging {
         try {
           val target = Paths.get(root)
           val done = target.resolve(Done)
+          val by = target.getParent
+          if (Files.isDirectory(by)) {
+            val targets = Files.list(by)
+            try targets.filter(t => !Files.exists(t.resolve(Done))).forEach(t => deleteTree(t))
+            finally targets.close()
+          }
           if (!Files.exists(done)) {
-            deleteTree(target)
             Files.createDirectories(target)
-            write(root)
+            try write(root)
+            catch { case e: Throwable => deleteTree(target); throw e }
             Files.writeString(done, key)
           }
           val current = Paths.get(stageDir, "current")

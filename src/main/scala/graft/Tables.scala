@@ -83,12 +83,13 @@ object Tables {
     val (fs, qualified) = qualify(s, path)
     listing(fs, qualified) match {
       case None => s.read.parquet(path) // throws Spark's own PATH_NOT_FOUND
-      case Some(files) => inferOnce(s, path, qualified, fingerprint(files))
+      case Some(files) => inferOnce(s, path, qualified.toString, fingerprint(files))
     }
   }
 
-  private def inferOnce(s: SparkSession, path: String, qualified: Path, fp: String): DataFrame = {
-    val key = (qualified.toString, InferenceConfs.map(s.conf.get))
+  /** Reads `path` with the schema cached under `id` while `fp` matches. */
+  private def inferOnce(s: SparkSession, path: String, id: String, fp: String): DataFrame = {
+    val key = (id, InferenceConfs.map(s.conf.get))
     Option(schemas.get(key)) match {
       case Some((`fp`, schema)) => s.read.schema(schema).parquet(path)
       case _ =>
@@ -114,7 +115,9 @@ object Tables {
           layouts.put(key, (fp, r))
           r
         }
-        if (root == path) inferOnce(s, path, qualified, fp) else parquet(s, root)
+        // A copy root is named by the digest of the source fingerprint and
+        // never rewritten, so `fp` also fingerprints the copy: no second listing.
+        inferOnce(s, root, if (root == path) qualified.toString else root, fp)
     }
   }
 

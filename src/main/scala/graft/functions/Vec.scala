@@ -32,23 +32,23 @@ object Vec {
   /** Cosine similarity. */
   def cosine(a: Column, b: Column): Column = dot(a, b) / (l2(a) * l2(b))
 
-  // Codegen'd variants for dense float vectors (graft.plans.FloatVecDot):
+  // Codegen'd variants for dense float vectors (graft.plans.VecOp):
   // bitwise-identical results (same sequential float64 accumulation), but a
   // generated primitive loop instead of the HOFs' interpreted CodegenFallback
   // path — used on the similarity hot paths where per-row closure overhead
   // would dominate at corpus scale.
 
-  def dotF(a: Column, b: Column): Column = graft.plans.FloatVecDot.dot(a, b)
+  def dotF(a: Column, b: Column): Column = graft.plans.VecOp.dot(a, b)
 
   def l2F(a: Column): Column = sqrt(dotF(a, a))
 
   def cosineF(a: Column, b: Column): Column = dotF(a, b) / (l2F(a) * l2F(b))
 
-  /** Codegen'd squared euclidean distance (graft.plans.VecSqDist) — the
+  /** Codegen'd squared euclidean distance (graft.plans.VecOp) — the
     * k-means / IVF assignment kernel, evaluated once per row per centroid;
     * bitwise-equal to `sqDist`'s HOF fold (NativeVecSpec).
     */
-  def sqDistF(a: Column, b: Column): Column = graft.plans.VecSqDist.sqDist(a, b)
+  def sqDistF(a: Column, b: Column): Column = graft.plans.VecOp.sqDist(a, b)
 
   /** Squared euclidean distance (k-means kernel). */
   def sqDist(a: Column, b: Column): Column =

@@ -929,8 +929,8 @@ object Aggregates {
     * hash-gates where Misra-Gries-style counter summaries cannot), and
     * mergeable: k-smallest-of(k-smallest(A) ∪ k-smallest(B)) ≡
     * k-smallest(A ∪ B) (the merge law in AggregatesSpec). Per language
-    * pair over the distinct 3-word-shingle sets (the `WordShingles`
-    * kernel feed): the pair's UNION sketch is built from the two per-lang
+    * pair over the distinct 3-word-shingle sets (the
+    * `Kernels.wordShingles` feed): the pair's UNION sketch is built from the two per-lang
     * sketches ALONE (never the raw sets — at 100 TB the sketches are the
     * only thing shards ship), distinct-of-union estimated as
     * (k−1)·2⁶⁰/h_k, Jaccard as n_common/kk (union-sketch hashes present

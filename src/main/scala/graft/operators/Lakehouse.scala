@@ -377,13 +377,13 @@ object Lakehouse {
   }
 
   /** Attach `hkey` = Hilbert index of (`x`, `y`) (each masked to `HBits`),
-    * via the fused native `HilbertKey` kernel (round 10: the fragment
+    * via the fused native `Kernels.hilbertKey` (round 10: the fragment
     * chain's 80-expression projection cost ~1.1 µs/row — 1.7 s over 600k
     * orders; the kernel is one loop, parity-pinned to the fragment form in
     * NativeVecSpec). Narrow per-row map either way, no shuffle.
     */
   def hilbertKey(df: DataFrame, x: String, y: String): DataFrame =
-    df.withColumn("hkey", graft.plans.HilbertKey.of(
+    df.withColumn("hkey", graft.plans.Kernels.hilbertKey(
       expr(s"CAST($x AS BIGINT)"), expr(s"CAST($y AS BIGINT)"), HBits))
 
   /** The per-level fragment-chain form of the encode — the oracle's exact

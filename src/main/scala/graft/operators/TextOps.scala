@@ -53,13 +53,13 @@ object TextOps {
 
   /** n-word shingles (all occurrences, in order); short docs yield one
     * whole-text shingle so the expression never produces an empty array.
-    * Computed by the native `WordShingles` codegen kernel — the HOF chain
+    * Computed by the native `Kernels.wordShingles` kernel — the HOF chain
     * below is kept as `shinglesHof` for the bitwise parity law in
     * NativeVecSpec (round-11 verdict #1: the interpreted HOF was the last
     * CodegenFallback on a hot path, 49.7 s at 100× for text_collocations).
     */
   def shingles(text: Column, n: Int): Column =
-    graft.plans.WordShingles.of(text, n)
+    graft.plans.Kernels.wordShingles(text, n)
 
   /** Reference HOF form of `shingles` (1-based `slice`; parity-test oracle). */
   def shinglesHof(text: Column, n: Int): Column = {
@@ -276,10 +276,10 @@ object TextOps {
     * side, corpus scanned once, zero shuffle for scoring); per-query top-k
     * via a window partitioned by query (bounded partitions — one row per
     * corpus chunk per query enters, k leave). Both hot stages run native
-    * kernels: embedding via the fused `HashedBow` expression (one
+    * kernels: embedding via the fused `Kernels.hashedBow` (one
     * md5+count loop per row; the HOF form's per-dimension interpreted
     * filters cost 3.9 s for 12k chunks at sf0.1 — parity law in
-    * NativeVecSpec) and scoring via `FloatVecDot` (codegen'd; the float
+    * NativeVecSpec) and scoring via `Vec.dotF` (codegen'd; the float
     * lanes are exact for these small-integer counts, so the long-cast
     * scores still hash-gate). For a real float-embedding corpus the
     * IVF/LSH index (`sim_ivf`/`sim_ann`) replaces the brute-force scan —
@@ -302,13 +302,13 @@ object TextOps {
   /** Hashed-BoW embedding of a text column: md5-prefix hash per token
     * (house portable-hash idiom), then per-dimension counts — emitted as
     * `array<float>` so the scoring stage can run the codegen'd
-    * `FloatVecDot` kernel. Counts are small integers (≤ tokens per doc ≪
+    * `Vec.dotF` kernel. Counts are small integers (≤ tokens per doc ≪
     * 2^24), so the float lanes, the float64-accumulated dot, and the
     * terminal long cast are all EXACT — the oracle stays pure-integer.
     */
   /** The HOF reference form of the embedding (md5 per token → per-dim
     * filter counts) — kept for the bitwise parity law in NativeVecSpec;
-    * the production path is the fused `HashedBow` kernel (the `dims`
+    * the production path is the fused `Kernels.hashedBow` (the `dims`
     * interpreted filter lambdas per row cost 3.9 s for 12k rows at sf0.1).
     */
   private[graft] def hashedBowHof(textCol: String): Column = {
@@ -341,12 +341,12 @@ object TextOps {
     // scoring stage and the top-k window above it.
     val chunks = chunkFrame(s, dir)
       .select(col("doc_id"), col("chunk_id"),
-        graft.plans.HashedBow.of(col("chunk"), RagDims).as("vec"))
+        graft.plans.Kernels.hashedBow(col("chunk"), RagDims).as("vec"))
       .repartition(s.sparkContext.defaultParallelism, col("doc_id"), col("chunk_id"))
     val queries = Tables.documents(s, dir)
       .where(col("doc_id") % RagQueryMod === 0 && col("doc_id") < RagMaxQueryDoc)
       .select(col("doc_id").as("query_doc"),
-        graft.plans.HashedBow.of(col("text"), RagDims).as("qvec"))
+        graft.plans.Kernels.hashedBow(col("text"), RagDims).as("qvec"))
     val w = Window.partitionBy("query_doc")
       .orderBy(desc("score"), asc("doc_id"), asc("chunk_id"))
     chunks.crossJoin(broadcast(queries))
@@ -846,7 +846,7 @@ object TextOps {
         // native fused min-digest kernel; == the HOF form
         // array_min(transform(array_distinct(shingles), md5)) bitwise
         // (NativeVecSpec parity test)
-        graft.plans.MinGramMd5.minWordGramMd5(col("text"), 3).as("min_shingle_fp"))
+        graft.plans.Kernels.minGramMd5(col("text"), 3).as("min_shingle_fp"))
       .oracleSorted("doc_id")
 
   // ------------------------------------------------------------------
@@ -881,12 +881,12 @@ object TextOps {
     * comparisons — and stay engine-reproducible: DuckDB computes identical
     * hashes, so even the (negligible, ~n²/2^60) collisions agree.
     *
-    * Computed by the native `HashedGrams` kernel (one fused pass; the HOF
+    * Computed by the native `Kernels.wordGrams` (one fused pass; the HOF
     * chain below it is kept as `hashedShinglesHof` for the bitwise parity
     * test in NativeVecSpec).
     */
   def hashedShingles(text: Column, n: Int): Column =
-    graft.plans.HashedGrams.wordGrams(text, n)
+    graft.plans.Kernels.wordGrams(text, n)
 
   /** Reference HOF form of `hashedShingles` (parity-test oracle). */
   def hashedShinglesHof(text: Column, n: Int): Column =
@@ -899,7 +899,7 @@ object TextOps {
     */
   private[graft] def bandSignatures(hvDf: DataFrame): DataFrame =
     hvDf.select(col("doc_id"),
-        posexplode(graft.plans.BandSigs.of(col("hv"), MinhashBands)))
+        posexplode(graft.plans.Kernels.bandSigs(col("hv"), MinhashBands)))
       .select(col("doc_id"), col("pos").as("band"), col("col").as("sig"))
 
   /** Reference HOF form of `bandSignatures` (parity-test oracle).
@@ -1594,9 +1594,9 @@ object TextOps {
     * the log-likelihood ratio of a TARGET domain's hashed-n-gram unigram
     * model against the raw pool's, then an exact-k weighted sample is
     * drawn by Gumbel-top-k. Composes three proven parts:
-    *  - features: word unigrams + 2-word shingles (the `WordShingles`
-    *    kernel), hashed into `DsirBuckets` buckets with the md5-60-bit
-    *    gram hash both engines share;
+    *  - features: word unigrams + 2-word shingles (the
+    *    `Kernels.wordShingles` kernel), hashed into `DsirBuckets` buckets
+    *    with the md5-60-bit gram hash both engines share;
     *  - exact ratios: per bucket, ln((pc+1)/(PT+B)) − ln((qc+1)/(QT+B))
     *    (add-one smoothing) on identical doubles, quantized
     *    DECIMAL(20,18) — the `text_logprob` ln discipline; per-doc
@@ -1786,7 +1786,7 @@ object TextOps {
     * Models Better", 2021 — re-expressed as fingerprint joins instead of
     * a suffix array).
     *
-    * Scale shape: fused `HashedGrams` kernel (one codegen'd pass per doc)
+    * Scale shape: fused `Kernels.charGramsWide` (one codegen'd pass per doc)
     * → explode → winnow filter (drops 7/8 of rows BEFORE the shuffle) →
     * fingerprint self-join. The join key is the full 60-bit hash of an
     * exact 32-char window, so bucket sizes = documents sharing that
@@ -1800,7 +1800,7 @@ object TextOps {
         // WIDE (full 60-bit) fingerprints, not the mod-2^31 MinHash form:
         // the join key must make spurious collisions negligible at corpus
         // scale (~n²/2^60, engine-identical), or fake pairs dominate
-        explode(graft.plans.HashedGrams.charGramsWide(col("text"), SubstrGramN)).as("g"))
+        explode(graft.plans.Kernels.charGramsWide(col("text"), SubstrGramN)).as("g"))
       .filter(pmod(col("g"), lit(SubstrWinnowMod)) === 0)
       .lineageCut(eager = false) // feeds both sides of the fingerprint join
     fps.as("a")
@@ -1848,7 +1848,7 @@ object TextOps {
     // join, hence the cut.
     val w = docs
       .select(col("doc_id"),
-        explode(graft.plans.WinnowedGramPos.of(col("text"), n, SubstrWinnowMod)).as("w"))
+        explode(graft.plans.Kernels.winnowedGramPos(col("text"), n, SubstrWinnowMod)).as("w"))
       .select(col("doc_id"), col("w.pos").as("pos"), col("w.g").as("g"))
       .lineageCut(eager = false)
     // windows shared VERBATIM by ≥2 documents (full 60-bit key, as in
@@ -2078,10 +2078,10 @@ object TextOps {
     * frequent bigram.
     *
     * Scale shape: a NARROW ZERO-SHUFFLE PROJECTION — distinct counts via
-    * the fused `HashedGrams` kernel (one codegen'd pass; 60-bit collisions
+    * the fused `Kernels.charGramsWide` (one codegen'd pass; 60-bit collisions
     * ~n²/2^60 and engine-identical, DuckDB dedups the same hashes), totals
     * by arithmetic (#words − n + 1, floored at the whole-text fallback),
-    * and the top-bigram count via the `TopGramCount` kernel (exact string
+    * and the top-bigram count via `Kernels.topGramCount` (exact string
     * counting per row). Measured at sf0.1: the naive raw-string-HOF +
     * explode→groupBy form was 5.15 s — the slowest query in the inventory —
     * because it shuffled every bigram occurrence of the corpus to take a
@@ -2094,7 +2094,7 @@ object TextOps {
       round(lit(1.0) - size(hashedShingles(col("text"), n)).cast("double") / total(n), 4)
     Tables.documents(s, dir)
       .select(col("doc_id"), repFrac(2).as("rep2"), repFrac(3).as("rep3"),
-        round(graft.plans.TopGramCount.of(col("text"), 2).cast("double") / total(2), 4)
+        round(graft.plans.Kernels.topGramCount(col("text"), 2).cast("double") / total(2), 4)
           .as("top_bigram_frac"))
       .withColumn("flagged",
         when(col("rep2") > 0.2 || col("top_bigram_frac") > 0.18, 1).otherwise(0))
@@ -2252,7 +2252,7 @@ object TextOps {
   def dedupSimhash(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir)
       // native fused kernel; == simhashHof bitwise (NativeVecSpec)
-      .select(col("doc_id"), graft.plans.SimHash16.of(col("text")).as("simhash"))
+      .select(col("doc_id"), graft.plans.Kernels.simhash(col("text"), 8, 16).as("simhash"))
       .groupBy("simhash")
       .agg(count(lit(1)).as("n_docs"), min("doc_id").as("min_doc"))
       .oracleSorted("simhash")
@@ -2283,7 +2283,7 @@ object TextOps {
   def dedupSimhashPairs(s: SparkSession, dir: String): DataFrame =
     simhashRadiusPairs(
       Tables.documents(s, dir)
-        .select(col("doc_id"), graft.plans.SimHash16.of(col("text")).as("sig")),
+        .select(col("doc_id"), graft.plans.Kernels.simhash(col("text"), 8, 16).as("sig")),
       bits = 16)
 
   /** Wide-signature variant of the pairing for corpus scale: the 16-bit
@@ -2300,7 +2300,7 @@ object TextOps {
   def dedupSimhashWide(s: SparkSession, dir: String): DataFrame =
     simhashBandPairs(
       Tables.documents(s, dir)
-        .select(col("doc_id"), graft.plans.SimHash60.of(col("text")).as("sig")),
+        .select(col("doc_id"), graft.plans.Kernels.simhash(col("text"), 15, 60).as("sig")),
       bandBits = 15)
 
   /** Round-18 (guide §1.1 first-principles / §2.4): bounded-radius XOR
@@ -2374,7 +2374,9 @@ object TextOps {
       .oracleSorted("doc_a", "doc_b")
   }
 
-  /** Reference HOF SimHash column (parity-test oracle for SimHash16). */
+  /** Reference HOF SimHash column (parity-test oracle for
+    * `Kernels.simhash(text, 8, 16)`).
+    */
   private[graft] def simhashHof(text: Column): Column = {
     val bits = 16
     def hv(t: Column): Column = conv(substring(md5s(t), 1, 8), 16, 10).cast("long")
@@ -2389,7 +2391,8 @@ object TextOps {
       lit(0.0), (a, x) => a + x).cast("long")
   }
 
-  /** Reference HOF 60-bit SimHash column (parity-test oracle for SimHash60).
+  /** Reference HOF 60-bit SimHash column (parity-test oracle for
+    * `Kernels.simhash(text, 15, 60)`).
     * All arithmetic stays in LONG: bit i of the 60-bit token hash is read
     * with pmod(h, 2^(i+1)) ≥ 2^i (casting h to double would lose bits above
     * 2^53), and the signature accumulates long powers of two — `pow(2, i)`
@@ -2441,7 +2444,7 @@ object TextOps {
     // hashed char-gram sets: Jaccard over longs (identical in both engines);
     // native fused kernel, same value as the HOF chain (NativeVecSpec)
     val g = docs.select(col("doc_id"),
-        graft.plans.HashedGrams.charGrams(col("text"), 4).as("cg"))
+        graft.plans.Kernels.charGrams(col("text"), 4).as("cg"))
       .lineageCut(eager = false)
     cand
       .join(g.select(col("doc_id").as("doc_a"), col("cg").as("cg_a")), "doc_a")

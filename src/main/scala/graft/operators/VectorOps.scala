@@ -975,23 +975,9 @@ object VectorOps {
         slice(col("embedding"), i * PqSubDim + 1, PqSubDim)): _*))
         .as(Seq("s", "subv"))).cache()
     try {
-      // one complex-typed Literal (codegen source stays identical across
-      // iterations → compiled class reused; see centersLit's round-17 note)
-      def centersLitBySub(): Column = {
-        import org.apache.spark.sql.catalyst.InternalRow
-        import org.apache.spark.sql.catalyst.expressions.Literal
-        import org.apache.spark.sql.catalyst.util.GenericArrayData
-        import org.apache.spark.sql.types._
-        val dt = ArrayType(ArrayType(StructType(Seq(
-          StructField("cid", IntegerType, nullable = false),
-          StructField("center", ArrayType(DoubleType, containsNull = false),
-            nullable = false))), containsNull = false), containsNull = false)
-        val v = new GenericArrayData(centers.map(sub =>
-          new GenericArrayData(sub.zipWithIndex.map { case (c, j) =>
-            InternalRow(j, new GenericArrayData(c.toArray)): Any
-          }): Any))
-        org.apache.spark.sql.GraftSqlBridge.column(Literal(v, dt))
-      }
+      // one complex-typed literal per iteration (see centersLit)
+      def centersLitBySub(): Column =
+        typedLit(centers.toSeq.map(sub => sub.toSeq.zipWithIndex.map { case (c, j) => Center(j, c) }))
       var moved = Double.MaxValue
       var it = 0
       while (it < maxIters && moved > tol) {
@@ -1888,7 +1874,7 @@ object VectorOps {
     * least(d²(x, c₁), …, d²(x, c_j)) over the cached corpus plus a
     * TakeOrdered(1) by (d2 desc, vec_id) — no shuffle anywhere; total
     * arithmetic O(k²·n·Dim) with k fixed. Ties break on vec_id, d² folds
-    * are the shared `VecSqDist` kernel, and `least` is min (association-
+    * are the shared `Vec.sqDistF` kernel, and `least` is min (association-
     * free), so the oracle — the same greedy unrolled as chained
     * MATERIALIZED CTEs (the `sim_mmr` discipline) — reproduces the pick
     * TRAJECTORY bitwise, including each step's covering radius.
@@ -2047,7 +2033,7 @@ object VectorOps {
     * confidence — not noise to normalize away; a cosine index silently
     * mis-ranks a MIPS workload). Same exact brute-force shape as
     * `sim_topk` (broadcast query set, corpus streams past once, scored
-    * with the codegen'd `FloatVecDot` kernel whose sequential float64
+    * with the codegen'd `Vec.dotF` kernel whose sequential float64
     * fold the oracle mirrors term for term), per-query top-k window.
     *
     * The scale path is the norm-augmentation reduction (Shrivastava &
@@ -2579,29 +2565,18 @@ object VectorOps {
     * to the corpus — vs the k-row crossJoin form, which blows the row count
     * up k× and argmin-shuffles by vec_id every iteration.
     */
-  private def centersLit(cs: Array[Seq[Double]]): Column = {
-    // Round-17 (guide §1.2 step 2): ONE complex-typed Literal instead of an
-    // array(struct(lit, lit…)) tree. Primitive literals are inlined into the
-    // generated Java source, so every k-means iteration's new centers used
-    // to produce NEW source → a janino recompile per iteration (the codegen
-    // cache keys on source text). A complex-typed Literal enters codegen as
-    // `references[i]` — the source is IDENTICAL across iterations and the
-    // compiled class is reused; only the reference array changes. The VALUES
-    // are the same doubles either way, so every distance/argmin result is
-    // bit-identical (the oracle trajectory replay is untouched).
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
-    import org.apache.spark.sql.types._
-    val dt = ArrayType(StructType(Seq(
-      StructField("cid", IntegerType, nullable = false),
-      StructField("center", ArrayType(DoubleType, containsNull = false),
-        nullable = false))), containsNull = false)
-    val v = new GenericArrayData(cs.zipWithIndex.map { case (c, i) =>
-      InternalRow(i, new GenericArrayData(c.toArray)): Any
-    })
-    org.apache.spark.sql.GraftSqlBridge.column(Literal(v, dt))
-  }
+  private def centersLit(cs: Array[Seq[Double]]): Column =
+    // One complex-typed literal, which generated code reads from
+    // `references[i]`: the source, and so the compiled class (the codegen
+    // cache keys on source text), is the same in every iteration
+    // (VectorOpsSpec).
+    typedLit(cs.toSeq.zipWithIndex.map { case (c, i) => Center(i, c) })
+
+  /** One k-means center, the element type of the centers literals. */
+  private case class Center(cid: Int, center: Seq[Double])
+
+  /** One integer k-means center of `kmeans_int_trace`. */
+  private case class IntCenter(cid: Int, cx: Long, cy: Long)
 
   /** Nearest-centroid argmin as a (dist, cid) struct — ties break on the
     * lower cid, exactly like SQL `ORDER BY dist, cid`.
@@ -2864,20 +2839,7 @@ object VectorOps {
       for (it <- 1 to KmIntIters) {
         // one complex-typed Literal — identical generated source across the
         // 8 iterations, so the argmin stage compiles once (see centersLit)
-        val centLit = {
-          import org.apache.spark.sql.catalyst.InternalRow
-          import org.apache.spark.sql.catalyst.expressions.Literal
-          import org.apache.spark.sql.catalyst.util.GenericArrayData
-          import org.apache.spark.sql.types._
-          val dt = ArrayType(StructType(Seq(
-            StructField("cid", IntegerType, nullable = false),
-            StructField("cx", LongType, nullable = false),
-            StructField("cy", LongType, nullable = false))), containsNull = false)
-          val v = new GenericArrayData(centers.map { case (cid, cx, cy) =>
-            InternalRow(cid, cx, cy): Any
-          })
-          org.apache.spark.sql.GraftSqlBridge.column(Literal(v, dt))
-        }
+        val centLit = typedLit(centers.toSeq.map { case (cid, cx, cy) => IntCenter(cid, cx, cy) })
         // packed ordinal argmin: min over (sqdist·k + cid) — total order,
         // ties to the lower cid, all-integer (see header)
         val packed = array_min(transform(centLit, c =>

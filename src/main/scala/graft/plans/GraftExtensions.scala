@@ -1,108 +1,58 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{Column, GraftSqlBridge, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.types.IntegerType
 
 /** Library entry point for `spark.sql.extensions=graft.plans.GraftExtensions`.
   *
-  * Registers the engine's native Catalyst expressions as SQL functions so
-  * the SQL-string path (§2.D8 parity) reaches them too — a user can write
-  * `SELECT vec_dot(a, b)` and get the codegen'd primitive loop, not an
-  * interpreted HOF. This is the standard packaging for a Spark-native
-  * extension library: nothing here changes planning for the DataFrame path,
-  * which constructs the expression directly (Vec.dotF).
+  * Registers the engine's native kernels as SQL functions so the SQL-string
+  * path reaches them too — a user can write `SELECT vec_dot(a, b)` and get
+  * the codegen'd primitive loop, not an interpreted HOF. This is the
+  * standard packaging for a Spark-native extension library: nothing here
+  * changes planning for the DataFrame path, which builds the expressions
+  * directly ([[VecOp]], [[Kernels]]).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[FloatVecDot].getName, "vec_dot"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "vec_dot(a, b) takes exactly two arguments")
-        FloatVecDot(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("vec_sq_dist"),
-      new ExpressionInfo(classOf[VecSqDist].getName, "vec_sq_dist"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "vec_sq_dist(a, b) takes exactly two arguments")
-        VecSqDist(children.head, children(1))
-      }))
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach { case (name, args, build) =>
+      val cls = if (name.startsWith("vec_")) classOf[VecOp] else Kernels.getClass
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
+        (children: Seq[Expression]) => {
+          require(children.length == args.length,
+            s"$name(${args.mkString(", ")}) takes ${args.length} argument(s)")
+          build(children)
+        }))
+    }
+}
 
-    // --- fused text kernels (the dedup/fingerprint/repetition hot paths) ---
+object GraftExtensions {
+  private def col(e: Expression): Column = GraftSqlBridge.column(e)
 
-    def intLit(e: Expression, fn: String): Int = e match {
+  private def vec(sqDist: Boolean)(c: Seq[Expression]): Expression = VecOp(c(0), c(1), sqDist)
+
+  /** `fn(c(0), int(c(1)), …)` for the kernels with literal int parameters. */
+  private def kernel(fn: (Column, Seq[Int]) => Column)(c: Seq[Expression]): Expression =
+    GraftSqlBridge.expression(fn(col(c.head), c.tail.map {
       case Literal(v: Int, IntegerType) => v
       case other => throw new IllegalArgumentException(
-        s"$fn: n must be an integer literal, got $other")
-    }
-    ext.injectFunction((
-      FunctionIdentifier("hashed_word_grams"),
-      new ExpressionInfo(classOf[HashedGrams].getName, "hashed_word_grams"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "hashed_word_grams(text, n) takes two arguments")
-        HashedGrams(children.head, intLit(children(1), "hashed_word_grams"), word = true)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("hashed_char_grams"),
-      new ExpressionInfo(classOf[HashedGrams].getName, "hashed_char_grams"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "hashed_char_grams(text, n) takes two arguments")
-        HashedGrams(children.head, intLit(children(1), "hashed_char_grams"), word = false)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("hashed_char_grams_wide"),
-      new ExpressionInfo(classOf[HashedGrams].getName, "hashed_char_grams_wide"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "hashed_char_grams_wide(text, n) takes two arguments")
-        HashedGrams(children.head, intLit(children(1), "hashed_char_grams_wide"),
-          word = false, modP = false)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("min_gram_md5"),
-      new ExpressionInfo(classOf[MinGramMd5].getName, "min_gram_md5"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "min_gram_md5(text, n) takes two arguments")
-        MinGramMd5(children.head, intLit(children(1), "min_gram_md5"))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("top_gram_count"),
-      new ExpressionInfo(classOf[TopGramCount].getName, "top_gram_count"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "top_gram_count(text, n) takes two arguments")
-        TopGramCount(children.head, intLit(children(1), "top_gram_count"))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("band_sigs"),
-      new ExpressionInfo(classOf[BandSigs].getName, "band_sigs"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "band_sigs(hv, bands) takes two arguments")
-        BandSigs(children.head, intLit(children(1), "band_sigs"))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("winnowed_gram_pos"),
-      new ExpressionInfo(classOf[WinnowedGramPos].getName, "winnowed_gram_pos"),
-      (children: Seq[Expression]) => {
-        require(children.length == 3,
-          "winnowed_gram_pos(text, n, winnow_mod) takes three arguments")
-        WinnowedGramPos(children.head, intLit(children(1), "winnowed_gram_pos"),
-          intLit(children(2), "winnowed_gram_pos"))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("simhash16"),
-      new ExpressionInfo(classOf[SimHash16].getName, "simhash16"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "simhash16(text) takes one argument")
-        SimHash16(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("simhash60"),
-      new ExpressionInfo(classOf[SimHash60].getName, "simhash60"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "simhash60(text) takes one argument")
-        SimHash60(children.head)
-      }))
-  }
+        s"integer parameters must be integer literals, got $other")
+    }))
+
+  /** SQL name, argument names, builder. */
+  private val functions: Seq[(String, Seq[String], Seq[Expression] => Expression)] = Seq(
+    ("vec_dot", Seq("a", "b"), vec(sqDist = false)),
+    ("vec_sq_dist", Seq("a", "b"), vec(sqDist = true)),
+    ("hashed_word_grams", Seq("text", "n"), kernel((t, p) => Kernels.wordGrams(t, p(0)))),
+    ("hashed_char_grams", Seq("text", "n"), kernel((t, p) => Kernels.charGrams(t, p(0)))),
+    ("hashed_char_grams_wide", Seq("text", "n"),
+      kernel((t, p) => Kernels.charGramsWide(t, p(0)))),
+    ("min_gram_md5", Seq("text", "n"), kernel((t, p) => Kernels.minGramMd5(t, p(0)))),
+    ("top_gram_count", Seq("text", "n"), kernel((t, p) => Kernels.topGramCount(t, p(0)))),
+    ("band_sigs", Seq("hv", "bands"), kernel((t, p) => Kernels.bandSigs(t, p(0)))),
+    ("winnowed_gram_pos", Seq("text", "n", "winnow_mod"),
+      kernel((t, p) => Kernels.winnowedGramPos(t, p(0), p(1)))),
+    ("simhash16", Seq("text"), kernel((t, _) => Kernels.simhash(t, 8, 16))),
+    ("simhash60", Seq("text"), kernel((t, _) => Kernels.simhash(t, 15, 60))))
 }

@@ -7,32 +7,36 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** Native squared euclidean distance over dense numeric-array columns, with
-  * codegen — the k-means / IVF assignment kernel (see FloatVecDot for why a
-  * custom `Expression` is justified on these hot paths: HOFs are
-  * `CodegenFallback`, and the argmin evaluates this once per row PER
-  * CENTROID).
+/** Native binary vector folds with hand-written codegen: the dot product
+  * of two `array<float>` columns (`float_vec_dot`, the cosine of every
+  * in-bucket pair of the similarity joins) and the squared euclidean
+  * distance of two `array<float|double>` columns (`vec_sq_dist`, the
+  * k-means / IVF argmin, evaluated once per row per centroid).
   *
-  * Accepts `array<float>` and `array<double>` on either side independently:
-  * the corpus side is float32 embeddings while centroid arrays (collected
-  * means, literal centers) are float64 — the HOF form relied on implicit
-  * lambda-argument coercion for the same mix.
+  * Spark's higher-order functions (`zip_with`, `aggregate`) are
+  * `CodegenFallback`: evaluated interpreted, per row, with a closure call
+  * per element. This expression generates one primitive loop instead, and
+  * keeps the stage inside WholeStageCodegen (NativeVecSpec).
   *
-  * Semantics are IDENTICAL to `Vec.sqDist`'s HOF fold, INCLUDING the
-  * malformed-input edges (round-2 ADVICE): per element, widen exactly to
-  * float64, square the difference, accumulate strictly left-to-right;
-  * mismatched lengths yield NULL (zip_with pads the short side with null →
-  * the fold is null), and a null element yields NULL — never a plausible
-  * partial sum. Bitwise-equal results asserted in NativeVecSpec, so
-  * swapping it into an oracle-checked plan changes nothing but speed. The
-  * per-element null checks are only generated when the array type says
-  * `containsNull`, so dense literal centers stay check-free.
+  * Semantics are identical to `Vec.dot` and `Vec.sqDist`, the HOF folds
+  * the DuckDB oracle reproduces: per element, widen exactly to float64,
+  * multiply (or square the difference), accumulate strictly left to right.
+  * Mismatched lengths yield null (zip_with pads the short side with null),
+  * and so does a null element — never a partial sum. The per-element null
+  * check is generated only when the array type says `containsNull`, so
+  * dense literal centers stay check-free. `sqDist` takes float and double
+  * arrays on either side independently: the corpus is float32 and centroid
+  * arrays are float64.
   */
-case class VecSqDist(left: Expression, right: Expression)
+case class VecOp(left: Expression, right: Expression, sqDist: Boolean)
   extends BinaryExpression {
 
   /** Null can arise from non-null inputs (length mismatch, null element). */
   override def nullable: Boolean = true
+
+  override def dataType: DataType = DoubleType
+  override def prettyName: String = if (sqDist) "vec_sq_dist" else "float_vec_dot"
+  override protected def stringArgs: Iterator[Any] = Iterator(left, right)
 
   private def elemNullable(dt: DataType): Boolean = dt match {
     case ArrayType(_, n) => n
@@ -40,9 +44,9 @@ case class VecSqDist(left: Expression, right: Expression)
   }
 
   private def elemType(dt: DataType): Option[DataType] = dt match {
-    case ArrayType(FloatType, _)  => Some(FloatType)
-    case ArrayType(DoubleType, _) => Some(DoubleType)
-    case _                        => None
+    case ArrayType(FloatType, _)            => Some(FloatType)
+    case ArrayType(DoubleType, _) if sqDist => Some(DoubleType)
+    case _                                  => None
   }
 
   override def checkInputDataTypes(): TypeCheckResult =
@@ -50,12 +54,9 @@ case class VecSqDist(left: Expression, right: Expression)
       TypeCheckResult.TypeCheckSuccess
     } else {
       TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires array<float|double> inputs, got " +
-          s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
+        s"$prettyName requires ${if (sqDist) "array<float|double>" else "two array<float>"} " +
+          s"inputs, got ${left.dataType.simpleString} and ${right.dataType.simpleString}")
     }
-
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "vec_sq_dist"
 
   private def get(a: ArrayData, dt: DataType, i: Int): Double = dt match {
     case FloatType => a.getFloat(i).toDouble
@@ -75,8 +76,10 @@ case class VecSqDist(left: Expression, right: Expression)
     var i = 0
     while (i < n) {
       if ((checkL && x.isNullAt(i)) || (checkR && y.isNullAt(i))) return null
-      val diff = get(x, lt, i) - get(y, rt, i)
-      acc += diff * diff
+      if (sqDist) {
+        val diff = get(x, lt, i) - get(y, rt, i)
+        acc += diff * diff
+      } else acc += get(x, lt, i) * get(y, rt, i)
       i += 1
     }
     acc
@@ -93,9 +96,14 @@ case class VecSqDist(left: Expression, right: Expression)
       val i = ctx.freshName("i")
       val acc = ctx.freshName("acc")
       val bad = ctx.freshName("bad")
-      val diff = ctx.freshName("diff")
-      val lt = elemType(left.dataType).get
-      val rt = elemType(right.dataType).get
+      val accumulate =
+        if (sqDist) {
+          val diff = ctx.freshName("diff")
+          val lt = elemType(left.dataType).get
+          val rt = elemType(right.dataType).get
+          s"""final double $diff = ${genGet(a, lt, i)} - ${genGet(b, rt, i)};
+             |    $acc += $diff * $diff;""".stripMargin
+        } else s"$acc += (double) $a.getFloat($i) * (double) $b.getFloat($i);"
       val nullChecks = Seq(
         if (elemNullable(left.dataType)) Some(s"$a.isNullAt($i)") else None,
         if (elemNullable(right.dataType)) Some(s"$b.isNullAt($i)") else None,
@@ -112,8 +120,7 @@ case class VecSqDist(left: Expression, right: Expression)
          |  boolean $bad = false;
          |  for (int $i = 0; $i < $n; $i++) {
          |    $elemGuard
-         |    final double $diff = ${genGet(a, lt, i)} - ${genGet(b, rt, i)};
-         |    $acc += $diff * $diff;
+         |    $accumulate
          |  }
          |  if ($bad) { ${ev.isNull} = true; } else { ${ev.value} = $acc; }
          |}
@@ -124,9 +131,14 @@ case class VecSqDist(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-object VecSqDist {
-  /** Column-level entry point: codegen'd Σ (xᵢ−yᵢ)². */
-  def sqDist(a: Column, b: Column): Column =
+object VecOp {
+  /** Codegen'd Σ xᵢ·yᵢ over two float vectors. */
+  def dot(a: Column, b: Column): Column = of(a, b, sqDist = false)
+
+  /** Codegen'd Σ (xᵢ−yᵢ)² over float or double vectors. */
+  def sqDist(a: Column, b: Column): Column = of(a, b, sqDist = true)
+
+  private def of(a: Column, b: Column, sqDist: Boolean): Column =
     GraftSqlBridge.column(
-      VecSqDist(GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
+      VecOp(GraftSqlBridge.expression(a), GraftSqlBridge.expression(b), sqDist))
 }

@@ -904,7 +904,7 @@ object StatefulOps {
     docs
       .select(col("doc_id"), TextOps.hashedShingles(col("text"), 3).as("hv"))
       .select(col("doc_id"), col("hv"),
-        posexplode(graft.plans.BandSigs.of(col("hv"), TextOps.MinhashBands)))
+        posexplode(graft.plans.Kernels.bandSigs(col("hv"), TextOps.MinhashBands)))
       .filter(col("col").isNotNull)
       .select(col("pos").cast("int").as("band"), col("col").as("sig"),
         col("doc_id"), col("hv"))

@@ -108,14 +108,14 @@ class NativeVecSpec extends AnyFunSuite {
       .collect()
     words.foreach(r => assert(r.getSeq[Long](0) == r.getSeq[Long](1), r.toString))
     val chars = df.select(
-        graft.plans.HashedGrams.charGrams(col("text"), 4).as("native"),
+        graft.plans.Kernels.charGrams(col("text"), 4).as("native"),
         array_distinct(transform(TextOps.charGrams(col("text"), 4),
           x => TextOps.shingleHash(x))).as("hof"))
       .collect()
     chars.foreach(r => assert(r.getSeq[Long](0) == r.getSeq[Long](1), r.toString))
     // wide (no mod-p) variant: == the unreduced 60-bit HOF hash
     val wide = df.select(
-        graft.plans.HashedGrams.charGramsWide(col("text"), 32).as("native"),
+        graft.plans.Kernels.charGramsWide(col("text"), 32).as("native"),
         array_distinct(transform(TextOps.charGrams(col("text"), 32),
           x => org.apache.spark.sql.functions.conv(
             org.apache.spark.sql.functions.substring(
@@ -124,7 +124,7 @@ class NativeVecSpec extends AnyFunSuite {
       .collect()
     wide.foreach(r => assert(r.getSeq[Long](0) == r.getSeq[Long](1), r.toString))
     val minMd5 = df.select(
-        graft.plans.MinGramMd5.minWordGramMd5(col("text"), 3).as("native"),
+        graft.plans.Kernels.minGramMd5(col("text"), 3).as("native"),
         org.apache.spark.sql.functions.array_min(transform(
           array_distinct(TextOps.shinglesHof(col("text"), 3)),
           x => org.apache.spark.sql.functions.md5(x.cast("binary")))).as("hof"))
@@ -190,7 +190,7 @@ class NativeVecSpec extends AnyFunSuite {
     val texts = Seq("", "one", "a b", "a  b c", "héllo wörld") ++
       Seq.fill(100)(Seq.fill(rnd.nextInt(40) + 1)("tok" + rnd.nextInt(30)).mkString(" "))
     val rows = texts.toDF("text").select(
-        graft.plans.HashedBow.of(col("text"), TextOps.RagDims).as("native"),
+        graft.plans.Kernels.hashedBow(col("text"), TextOps.RagDims).as("native"),
         TextOps.hashedBowHof("text").as("hof"))
       .collect()
     rows.foreach(r => assert(r.getSeq[Float](0) == r.getSeq[Float](1), r.toString))
@@ -212,7 +212,7 @@ class NativeVecSpec extends AnyFunSuite {
         org.apache.spark.sql.functions.substring(
           org.apache.spark.sql.functions.md5(c.cast("binary")), 1, 15), 16, 10).cast("long")
     val rows = texts.toDF("text").select(
-        graft.plans.WinnowedGramPos.of(col("text"), n, m).as("native"),
+        graft.plans.Kernels.winnowedGramPos(col("text"), n, m).as("native"),
         filter(transform(
           sequence(lit(1), greatest(length(col("text")) - (n - 1), lit(1))),
           i => struct(i.cast("int").as("pos"), hash60w(col("text").substr(i, lit(n))).as("g"))),
@@ -233,7 +233,7 @@ class NativeVecSpec extends AnyFunSuite {
       Seq.fill(60)(Seq.fill(rnd.nextInt(30) + 1)("t" + rnd.nextInt(8)).mkString(" "))
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
     val native = df.select(col("doc_id"),
-        graft.plans.TopGramCount.of(col("text"), 2).as("top"))
+        graft.plans.Kernels.topGramCount(col("text"), 2).as("top"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val composed = df
       .select(col("doc_id"), explode(TextOps.shinglesHof(col("text"), 2)).as("g"))
@@ -251,7 +251,7 @@ class NativeVecSpec extends AnyFunSuite {
     val texts = Seq("", "one", "a  b") ++
       Seq.fill(80)(Seq.fill(rnd.nextInt(25) + 1)("t" + rnd.nextInt(50)).mkString(" "))
     val rows = texts.toDF("text")
-      .select(graft.plans.SimHash16.of(col("text")).as("native"),
+      .select(graft.plans.Kernels.simhash(col("text"), 8, 16).as("native"),
         TextOps.simhashHof(col("text")).as("hof"))
       .collect()
     rows.foreach(r => assert(r.getLong(0) == r.getLong(1), r.toString))
@@ -264,7 +264,7 @@ class NativeVecSpec extends AnyFunSuite {
     val texts = Seq("", "one", "a  b") ++
       Seq.fill(80)(Seq.fill(rnd.nextInt(25) + 1)("t" + rnd.nextInt(50)).mkString(" "))
     val rows = texts.toDF("text")
-      .select(graft.plans.SimHash60.of(col("text")).as("native"),
+      .select(graft.plans.Kernels.simhash(col("text"), 15, 60).as("native"),
         TextOps.simhash60Hof(col("text")).as("hof"))
       .collect()
     rows.foreach { r =>
@@ -339,5 +339,67 @@ class NativeVecSpec extends AnyFunSuite {
     assert(plan.contains("float_vec_dot"), plan)
     // the projection stage is inside a WholeStageCodegen span (starred)
     assert(plan.contains("*(1) Project"), plan)
+  }
+
+  test("every native kernel plans inside whole-stage codegen, evaluates the same interpreted, and maps null to null") {
+    import spark.implicits._
+    import graft.plans.{Kernels, VecOp}
+    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+    import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
+    val rnd = new scala.util.Random(41)
+    val texts = Seq("", "one", "a b", "a  b c", "héllo wörld", "x y x y x") ++
+      Seq.fill(40)(Seq.fill(rnd.nextInt(30) + 1)("t" + rnd.nextInt(12)).mkString(" "))
+    val rows = texts.map { t =>
+      (Option(t), Option(Seq.fill(rnd.nextInt(6))(rnd.nextInt(1000).toLong)),
+        Option(rnd.nextLong() % 100000L), Option(rnd.nextInt(70000).toLong),
+        Option(Seq.fill(8)(rnd.nextFloat() - 0.5f)), Option(Seq.fill(8)(rnd.nextDouble() - 0.5)))
+    } :+ (None, None, None, None, None, None) // the all-null row
+    // a file scan, so the projection is not folded into a local relation
+    val path = java.nio.file.Files.createTempDirectory("graft-kernels").resolve("t").toString
+    rows.toDF("text", "hv", "x", "y", "f", "d").write.parquet(path)
+    val df = spark.read.parquet(path)
+    val kernels = Seq(
+      "wordGrams" -> Kernels.wordGrams(col("text"), 3),
+      "charGrams" -> Kernels.charGrams(col("text"), 4),
+      "charGramsWide" -> Kernels.charGramsWide(col("text"), 4),
+      "minGramMd5" -> Kernels.minGramMd5(col("text"), 3),
+      "topGramCount" -> Kernels.topGramCount(col("text"), 2),
+      "wordShingles" -> Kernels.wordShingles(col("text"), 2),
+      "winnowedGramPos" -> Kernels.winnowedGramPos(col("text"), 3, 2),
+      "simhash16" -> Kernels.simhash(col("text"), 8, 16),
+      "simhash60" -> Kernels.simhash(col("text"), 15, 60),
+      "bandSigs" -> Kernels.bandSigs(col("hv"), 4),
+      "hashedBow" -> Kernels.hashedBow(col("text"), 16),
+      "hilbertKey" -> Kernels.hilbertKey(col("x"), col("y"), 16),
+      "dot" -> VecOp.dot(col("f"), col("f")),
+      "sqDist" -> VecOp.sqDist(col("f"), col("d")))
+    def interpreted[T](body: => T): T = {
+      val confs = Seq("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+        "spark.sql.codegen.wholeStage" -> "false")
+      val before = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try body
+      finally before.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
+    try kernels.foreach { case (name, kernel) =>
+      val q = df.select(col("text").isNull.as("null_in"), kernel.as("v"))
+      val plan = q.queryExecution.executedPlan
+      val inStage = plan.collect { case w: WholeStageCodegenExec => w.child }.exists {
+        case p: ProjectExec => p.projectList.exists(_.find {
+          case _: StaticInvoke | _: VecOp => true
+          case _ => false
+        }.isDefined)
+        case _ => false
+      }
+      assert(inStage, s"$name is not inside a whole-stage codegen stage:\n$plan")
+      val generated = q.collect().toSeq
+      val evaluated = interpreted(df.select(col("text").isNull.as("null_in"), kernel.as("v")).collect().toSeq)
+      assert(generated == evaluated, s"$name: interpreted values differ from generated code")
+      val nulls = generated.filter(_.getBoolean(0))
+      assert(nulls.length == 1 && nulls.head.isNullAt(1), s"$name: null input did not give null")
+      assert(generated.exists(r => !r.getBoolean(0) && !r.isNullAt(1)), s"$name: no non-null values")
+    } finally Staging.deleteTree(java.nio.file.Paths.get(path).getParent)
+    assert(!spark.conf.getOption("spark.sql.codegen.factoryMode").contains("NO_CODEGEN"))
+    assert(!spark.conf.getOption("spark.sql.codegen.wholeStage").contains("false"))
   }
 }

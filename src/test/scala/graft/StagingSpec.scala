@@ -68,6 +68,41 @@ class StagingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.read.parquet(s"$root/t").count() == 3)
   }
 
+  test("a write that throws deletes its target and rethrows") {
+    val stageDir = tempDir("graft-staging-throw")
+    val source = writeSource(tempDir("graft-staging-src"), "a")
+    var target = ""
+    val e = intercept[IllegalStateException] {
+      Staging.stage(stageDir.toString, "dir", "t1", source) { root =>
+        target = root
+        Files.writeString(Paths.get(root, "partial"), "half")
+        throw new IllegalStateException("write failed")
+      }
+    }
+    assert(e.getMessage == "write failed")
+    assert(target.nonEmpty && !Files.exists(Paths.get(target)), "the failed target was left behind")
+    val writes = new AtomicInteger
+    assert(stageRange(stageDir, source, 3, writes) == target && writes.get == 1)
+    assert(spark.read.parquet(s"$target/t").count() == 3)
+  }
+
+  test("staging deletes a marker-less sibling target and keeps finished ones") {
+    val stageDir = tempDir("graft-staging-stale")
+    val srcA = writeSource(tempDir("graft-staging-srcA"), "a")
+    val srcB = writeSource(tempDir("graft-staging-srcB"), "bb")
+    val writes = new AtomicInteger
+    val rootA = stageRange(stageDir, srcA, 3, writes)
+    // a crashed stage of another key: a target with data and no marker
+    val stale = stageDir.resolve("by").resolve("000000000000")
+    Files.createDirectories(stale.resolve("t"))
+    Files.writeString(stale.resolve("t").resolve("part"), "partial")
+    val rootB = stageRange(stageDir, srcB, 5, writes)
+    assert(!Files.exists(stale), "a marker-less sibling survived a stage of its dir")
+    assert(Files.exists(Paths.get(rootA, "_GRAFT_DONE")) && Files.exists(Paths.get(rootB, "_GRAFT_DONE")))
+    assert(spark.read.parquet(s"$rootA/t").count() == 3)
+    assert(stageRange(stageDir, srcA, 3, writes) == rootA && writes.get == 2)
+  }
+
   test("staging key B leaves key A's target intact and readable") {
     val stageDir = tempDir("graft-staging-b")
     val srcA = writeSource(tempDir("graft-staging-srcA"), "a")

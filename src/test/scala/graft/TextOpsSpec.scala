@@ -41,7 +41,7 @@ class TextOpsSpec extends AnyFunSuite {
     // (pigeonhole: ≤3 differing bits over 4 bands leave one band identical),
     // so the output must equal the brute-force pair set over distinct sigs.
     val sigs = Tables.documents(spark, sfDir)
-      .select(graft.plans.SimHash16.of(col("text")).as("sig"))
+      .select(graft.plans.Kernels.simhash(col("text"), 8, 16).as("sig"))
       .distinct().collect().map(_.getLong(0)).sorted
     val expected = (for {
       i <- sigs.indices
@@ -57,7 +57,7 @@ class TextOpsSpec extends AnyFunSuite {
 
   test("dedup_simhash_wide == brute-force distinct-60-bit-signature pairs within Hamming <= k") {
     val sigs = Tables.documents(spark, sfDir)
-      .select(graft.plans.SimHash60.of(col("text")).as("sig"))
+      .select(graft.plans.Kernels.simhash(col("text"), 15, 60).as("sig"))
       .distinct().collect().map(_.getLong(0)).sorted
     val expected = (for {
       i <- sigs.indices

@@ -144,6 +144,18 @@ class VectorOpsSpec extends AnyFunSuite {
     }
   }
 
+  test("k-means iterations reuse one compiled class: more iterations compile nothing new") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val emb = Tables.embeddings(spark, sfDir).select(col("vec_id"), col("label"), col("embedding"))
+    // tol < 0: the loop runs exactly maxIters iterations
+    VectorOps.kmeansCentersTraced(emb, maxIters = 1, tol = -1.0)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val (_, trace) = VectorOps.kmeansCentersTraced(emb, maxIters = 4, tol = -1.0)
+    assert(trace.length == 4)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiled,
+      "a k-means iteration compiled a new class: a per-iteration value entered the generated source")
+  }
+
   test("quantile_bins NTILE law at sf0.1: monotone deciles, exact bucket sizes") {
     // Regression law for the round-3 boundary bug: repartitionByRange
     // samples boundaries with an RDD-id-derived seed, so the offsets job
