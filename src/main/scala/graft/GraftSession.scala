@@ -14,6 +14,8 @@ import org.apache.spark.sql.SparkSession
   *  - nanosecond-parquet handling for the events table (see Tables.events);
   *  - UTC session timezone — date/timestamp semantics independent of the
   *    submitting machine (and of where each executor runs);
+  *  - no per-session artifact isolation, so session clones share compiled
+  *    classes;
   *  - AQE left ON (Spark default) — runtime coalescing, skew-join splitting
   *    and broadcast demotion are part of the engine's 100 TB story.
   *
@@ -32,4 +34,10 @@ object GraftSession {
       // long-lived session recompiles (janino, ~10-100 ms per class)
       // identical bytecode on every reuse. Static conf; classes are KB-scale.
       .config("spark.sql.codegen.cache.maxEntries", "10000")
+      // Spark gives each artifact-isolated session its own executor class
+      // loader, and the codegen cache is keyed by class loader, so a fresh
+      // session recompiles every class. The engine adds no artifacts, and
+      // its k-bounded loops run on session clones (graft.functions.Confs):
+      // without isolation each loop reuses the classes compiled before it.
+      .config("spark.sql.artifact.isolation.enabled", "false")
 }

@@ -466,7 +466,6 @@ object Aggregates {
     */
   def aggQuantileMerge(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.ScalarAttach._
-    import graft.functions.LineageCut._
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types.DecimalType
     val B = QmBins
@@ -516,7 +515,7 @@ object Aggregates {
       .groupBy("c").agg(count(lit(1)).as("cnt"))
       .withColumn("cum", sum("cnt").over(Window.orderBy("c")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .lineageCut(eager = false)
+      .localCheckpoint(eager = false)
     val g = grid.agg(min("c").as("lo"), max("c").as("hi"),
       sum("cnt").as("n_total")).collect()(0)
     val (lo, hi, nTotal) = (g.getLong(0), g.getLong(1), g.getLong(2))
@@ -542,7 +541,7 @@ object Aggregates {
     val binned = x
       .withColumn("bin",
         floor((col("c") - lit(lo)) * B / (lit(hi) - lit(lo) + 1)).cast("int"))
-      .lineageCut(eager = false)
+      .localCheckpoint(eager = false)
     val perSeg = binned.groupBy("seg", "bin").agg(count(lit(1)).as("cnt")) // stored summaries
     val merged = perSeg.groupBy("bin").agg(sum("cnt").as("cnt"))          // re-aggregation
     val direct = binned.groupBy("bin").agg(count(lit(1)).as("cnt"))       // one-pass control
@@ -774,7 +773,6 @@ object Aggregates {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types.DecimalType
     val cents = (col("value").cast(DecimalType(12, 2)) * 100).cast("long")
-    import graft.functions.LineageCut._
     // Round-17 (guide §2.4): the grid feeds BOTH the per-type totals and
     // the running-CDF window — cut once so the events scan + distinct-value
     // aggregation run once instead of twice. The totals side is a
@@ -786,7 +784,7 @@ object Aggregates {
       .agg(
         count(when(col("variant") === 0, 1)).as("d0"),
         count(when(col("variant") === 1, 1)).as("d1"))
-      .lineageCut(eager = false)
+      .localCheckpoint(eager = false)
     val w = Window.partitionBy("event_type").orderBy("c")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val totals = grid.groupBy("event_type").agg(sum("d0").as("n0"), sum("d1").as("n1"))

@@ -473,11 +473,10 @@ object EventOps {
     // once — it feeds the MAD aggregate AND the final filter, so the old
     // plan re-ran the events scan + median join for each consumer
     // (4 scans → 1 + one narrow materialization).
-    import graft.functions.LineageCut._
     val med = e.groupBy("event_type").agg(median(col("x")).as("med"))
     val j = e.join(broadcast(med), Seq("event_type"))
       .withColumn("adev", abs(col("x") - col("med")))
-      .lineageCut(eager = false)
+      .localCheckpoint(eager = false)
     val mad = j.groupBy("event_type").agg(median(col("adev")).as("mad"))
     j.join(broadcast(mad), Seq("event_type"))
       .where(col("adev") > lit(3) * lit(1.4826) * col("mad"))

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.Tables
-import graft.functions.LineageCut._
 import graft.functions.OracleSort._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -79,7 +78,7 @@ object GraphOps {
       .unionByName(nodes.select(col("token").as("src"), col("token").as("dst"), lit(0).as("w")))
       .join(deg, Seq("src"), "left")
       .withColumn("outdeg", coalesce(col("outdeg"), lit(1L)))
-      .lineageCut(eager = false)
+      .localCheckpoint(eager = false)
 
     var pr = nodes.select(col("token"), lit(PrMass0).as("mass"))
     for (i <- 1 to PrIters) {
@@ -128,7 +127,7 @@ object GraphOps {
     * first-reach depth.
     */
   def graphBfs(s: SparkSession, dir: String): DataFrame = {
-    val pairs = tokenPairs(tokenized(s, dir)).lineageCut(eager = false)
+    val pairs = tokenPairs(tokenized(s, dir)).localCheckpoint(eager = false)
     val seeds = pairs.select(col("src").as("token"))
       .unionByName(pairs.select(col("dst").as("token")))
       .distinct()
@@ -144,8 +143,8 @@ object GraphOps {
         // next feeds both settled and the following frontier, so an uncut
         // recursion re-expands the whole hop history inside every
         // consumer (probed round 17: 1.0 -> 1.9 s at sf0.1)
-        .lineageCut(eager = false)
-      settled = settled.unionByName(next).lineageCut(eager = false)
+        .localCheckpoint(eager = false)
+      settled = settled.unionByName(next).localCheckpoint(eager = false)
       frontier = next
     }
     settled.oracleSorted("token")

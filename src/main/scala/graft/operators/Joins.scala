@@ -4,7 +4,6 @@ import graft.{Staging, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import graft.functions.OracleSort._
-import graft.functions.LineageCut._
 import org.apache.spark.sql.functions._
 
 /** Join family (SURVEY §2.C).
@@ -314,7 +313,7 @@ object Joins {
     val tagged = ord.unionByName(ev)
       .withColumn("bin", expr(s"unix_micros(t) div $AsofBinMicros"))
       // feeds the within-bin window AND the bin-summary aggregate
-      .lineageCut(eager = false)
+      .localCheckpoint(eager = false)
 
     // (1) within-bin running last, partitioned by (key, bin)
     val wBin = Window.partitionBy("key", "bin").orderBy("t", "side")
@@ -512,13 +511,12 @@ object Joins {
     // substitution self-join's two sides are now the SAME materialized
     // frame, their (i, v) shuffles are identical subtrees Spark dedups via
     // ReusedExchange (2 exchanges → 1 on that join).
-    import graft.functions.LineageCut._
     val vbase = c.select(
       col("c_custkey").as("key"), col("c_name").as("name"),
       posexplode(expr("transform(sequence(1, length(c_name)), " +
         "i -> concat(substring(c_name, 1, i - 1), substring(c_name, i + 1, length(c_name))))")))
       .withColumnsRenamed(Map("pos" -> "i", "col" -> "v"))
-      .lineageCut(eager = false)
+      .localCheckpoint(eager = false)
     // Round-18 (guide §2.3/§8.4 — shuffle keys, not payloads): the round-17
     // form shipped BOTH name columns through every exchange — the
     // substitution self-join's (i, v) shuffle carried (key, name, i, v) on

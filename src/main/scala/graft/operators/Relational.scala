@@ -753,9 +753,8 @@ object Relational {
     val docs = Tables.documents(s, dir)
     // round-17: langN feeds its own min-aggregate and the rate rows — cut
     // so the docs scan+agg runs once (guide §2.4); lang-cardinality-bounded
-    import graft.functions.LineageCut._
     val langN = docs.groupBy("lang").agg(count(lit(1)).as("n_l"))
-      .lineageCut(eager = false)
+      .localCheckpoint(eager = false)
     val rates = langN.attachScalarRow(langN.agg(min(col("n_l")).as("n_min")))
       .withColumn("keep_bp",
         floor(sqrt(col("n_min").cast("double") / col("n_l").cast("double"))
@@ -860,9 +859,8 @@ object Relational {
     // join, and terms feeds the PSI sum AND the final rows — without the
     // cuts the orders scan re-ran ~6× in one plan. All three frames are
     // bin-bounded (≤ HistMaxBin+1 rows).
-    import graft.functions.LineageCut._
-    val ref = hist("1995-01-01", "1996-01-01", "n_ref").lineageCut(eager = false)
-    val cur = hist("1996-01-01", "1997-01-01", "n_cur").lineageCut(eager = false)
+    val ref = hist("1995-01-01", "1996-01-01", "n_ref").localCheckpoint(eager = false)
+    val cur = hist("1996-01-01", "1997-01-01", "n_cur").localCheckpoint(eager = false)
     val totals = ref.agg(sum("n_ref").as("t_ref"))
       .attachScalarRow(cur.agg(sum("n_cur").as("t_cur")))
     val terms = ref.join(cur, "bin")
@@ -870,7 +868,7 @@ object Relational {
       .withColumn("p", col("n_ref").cast("double") / col("t_ref"))
       .withColumn("q", col("n_cur").cast("double") / col("t_cur"))
       .withColumn("term", (col("q") - col("p")) * log(col("q") / col("p")))
-      .lineageCut(eager = false)
+      .localCheckpoint(eager = false)
     val psi = terms.agg(
       sum(col("term").cast(DecimalType(28, 18))).cast("double").as("psi_raw"))
     terms.attachScalarRow(psi)

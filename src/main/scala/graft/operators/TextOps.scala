@@ -4,7 +4,6 @@ import graft.{Staging, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import graft.functions.OracleSort._
-import graft.functions.LineageCut._
 import org.apache.spark.sql.functions._
 
 /** Text-analysis and document-deduplication operators (SURVEY §2.K1/K2/K5,
@@ -194,7 +193,7 @@ object TextOps {
       .select(col("doc_id"), explode(words(col("text"))).as("token"))
       .groupBy("doc_id", "token")
       .agg(count(lit(1)).as("tf"))
-      .lineageCut(eager = false)
+      .localCheckpoint(eager = false)
     val dfreq = tf.groupBy("token").agg(count(lit(1)).as("df"))
     val n = docs.agg(count(lit(1)).as("n_docs"))
     tf.join(broadcast(dfreq), "token")
@@ -387,7 +386,7 @@ object TextOps {
     *
     * Scale shape (round 11 — the round-10 plan rebuilt the token stream
     * once per CONSUMER): the tf table — the inverted index every search
-    * engine builds exactly once — sits behind a LAZY `lineageCut`
+    * engine builds exactly once — sits behind a LAZY `localCheckpoint`
     * (first materialized by the df-broadcast job, the benched 3.33 s
     * plan), and ALL THREE downstream consumers (the per-term df,
     * the global (N, Σdl) pair, and the query probe itself) read the
@@ -457,7 +456,7 @@ object TextOps {
     // the post-cut `contrib` frame below, not here.)
     val tf = tok.groupBy("doc_id", "chunk_id", "dl", "term")
       .agg(count(lit(1)).as("tf"))
-      .lineageCut(eager = false)
+      .localCheckpoint(eager = false)
     // chunk-level df (chunks containing the term): vocabulary-sized output
     val dfT = tf.groupBy("term").agg(count(lit(1)).as("df"))
     // global stats over NON-EMPTY chunks, derived from the index itself
@@ -960,16 +959,11 @@ object TextOps {
     // the ContextCleaner as soon as the result frame is garbage, so repeated
     // invocations in a long-lived session (Bench's 4×75 runs) don't
     // accumulate InMemoryRelations; lazy, so no blocking job at plan-build
-    // time. Fault-tolerance trade-off (round-3 ADVICE #4): localCheckpoint
-    // discards lineage, so a lost executor cannot recompute the blocks —
-    // the job fails and is retried from the source instead. That is the
-    // right local/driver-contract default; a cluster deployment under
-    // dynamic allocation sets `graft.lineageCut=checkpoint` (reliable
-    // checkpoint, honored at every cut site via LineageCut — round-4
-    // VERDICT #7 made the swap a conf instead of a code change).
+    // time. localCheckpoint discards lineage, so a lost executor cannot
+    // recompute the blocks: the job fails and is retried from the source.
     val hv = docs
       .select(col("doc_id"), hashedShingles(col("text"), 3).as("hv"))
-      .lineageCut(eager = false) // lazy: cut lineage now, materialize inside the one job
+      .localCheckpoint(eager = false) // lazy: cut lineage now, materialize inside the one job
     val sigs = bandSignatures(hv)
     val cand = sigs.as("a")
       .join(sigs.as("b"),
@@ -1022,7 +1016,7 @@ object TextOps {
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
     var labels = edges.select(col("src").as("doc_id")).distinct()
       .withColumn("lbl", col("doc_id"))
-      .lineageCut()
+      .localCheckpoint()
     var converged = false
     var it = 0
     while (!converged && it < ClusterMaxIters) {
@@ -1046,11 +1040,8 @@ object TextOps {
         .join(contrib.withColumnRenamed("src", "doc_id"), Seq("doc_id"))
         .select(col("doc_id"), col("lbl").as("old_lbl"),
           least(col("lbl"), col("min_c")).as("lbl"))
-        .lineageCut() // eager: one job per iteration, lineage stays flat
+        .localCheckpoint() // eager: one job per iteration, lineage stays flat
       converged = upd.filter(col("lbl") =!= col("old_lbl")).limit(1).count() == 0
-      // bound in-loop growth under graft.lineageCut=cache (each iteration
-      // would otherwise leave a new CacheManager entry); no-op otherwise
-      labels.unpersist()
       labels = upd.select("doc_id", "lbl")
     }
     require(converged,
@@ -1074,7 +1065,7 @@ object TextOps {
     // Truncate lineage at the pair list so the MinHash self-join plan
     // executes exactly once and the iteration loop starts from a LogicalRDD.
     val pairs = minhashPairs(Tables.documents(s, dir))
-      .select("doc_a", "doc_b").lineageCut()
+      .select("doc_a", "doc_b").localCheckpoint()
     val labels = clusterLabels(pairs)
     val sizes = labels.groupBy("lbl").agg(count(lit(1)).as("cluster_size"))
     labels.join(sizes, "lbl")
@@ -1628,7 +1619,6 @@ object TextOps {
     */
   private[graft] def dsirScored(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.ScalarAttach._
-    import graft.functions.LineageCut._
     import org.apache.spark.sql.types.DecimalType
     val db = Tables.documents(s, dir)
       .select(col("doc_id"), col("lang"),
@@ -1637,14 +1627,14 @@ object TextOps {
         (conv(substring(md5s(concat(lit("dsirf:"), col("gram"))), 1, 15), 16, 10)
           .cast("long") % DsirBuckets).as("b"))
       .groupBy("doc_id", "lang", "b").agg(count(lit(1)).as("c"))
-      .lineageCut(eager = false)
+      .localCheckpoint(eager = false)
     // bucket-bounded (B rows); cut so the ratio build's two consumers (tot
     // and diff) re-read B materialized rows instead of re-aggregating the
     // full (doc, bucket) table twice (round-17, guide §2.4)
     val tb = db.groupBy("b").agg(
       sum(when(col("lang") === DsirTargetLang, col("c")).otherwise(0L)).as("pc"),
       sum("c").as("qc"))
-      .lineageCut(eager = false)
+      .localCheckpoint(eager = false)
     val tot = tb.agg(sum("pc").as("pt"), sum("qc").as("qt"))
     val diff = tb.attachScalarRow(tot)
       .select(col("b"),
@@ -1709,7 +1699,7 @@ object TextOps {
     */
   def dedupKeepbest(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val pairs = minhashPairs(docs).select("doc_a", "doc_b").lineageCut()
+    val pairs = minhashPairs(docs).select("doc_a", "doc_b").localCheckpoint()
     val labels = clusterLabels(pairs)
     val q = labels.join(docs.select(col("doc_id"), col("n_chars")), Seq("doc_id"))
     val ord = col("n_chars") * lit(1000000000000L) + (lit(999999999999L) - col("doc_id"))
@@ -1746,7 +1736,7 @@ object TextOps {
     val isNew = pmod(col("doc_id"), lit(IncrementalModulus)) === 0
     val hv = Tables.documents(s, dir)
       .select(col("doc_id"), hashedShingles(col("text"), 3).as("hv"))
-      .lineageCut(eager = false) // feeds both band tables + both verify joins
+      .localCheckpoint(eager = false) // feeds both band tables + both verify joins
     val sigs = bandSignatures(hv)
     val cand = sigs.filter(isNew).as("n")
       .join(sigs.filter(!isNew).as("i"),
@@ -1802,7 +1792,7 @@ object TextOps {
         // scale (~n²/2^60, engine-identical), or fake pairs dominate
         explode(graft.plans.Kernels.charGramsWide(col("text"), SubstrGramN)).as("g"))
       .filter(pmod(col("g"), lit(SubstrWinnowMod)) === 0)
-      .lineageCut(eager = false) // feeds both sides of the fingerprint join
+      .localCheckpoint(eager = false) // feeds both sides of the fingerprint join
     fps.as("a")
       .join(fps.as("b"),
         col("a.g") === col("b.g") && col("a.doc_id") < col("b.doc_id"))
@@ -1850,7 +1840,7 @@ object TextOps {
       .select(col("doc_id"),
         explode(graft.plans.Kernels.winnowedGramPos(col("text"), n, SubstrWinnowMod)).as("w"))
       .select(col("doc_id"), col("w.pos").as("pos"), col("w.g").as("g"))
-      .lineageCut(eager = false)
+      .localCheckpoint(eager = false)
     // windows shared VERBATIM by ≥2 documents (full 60-bit key, as in
     // dedup_substring — spurious collisions are ~n²/2^60, engine-identical)
     val shared = w.groupBy("g")
@@ -1951,10 +1941,10 @@ object TextOps {
       .select(col("doc_id"), normText(col("text")).as("norm_text"))
       .withColumn("exact_rep", min("doc_id").over(
         Window.partitionBy(sha2(col("norm_text").cast("binary"), 256))))
-      .lineageCut(eager = false) // one materialization feeds reps + verdict join
+      .localCheckpoint(eager = false) // one materialization feeds reps + verdict join
     val reps = staged.filter(col("doc_id") === col("exact_rep"))
       .select(col("doc_id"), col("norm_text").as("text"))
-    val pairs = minhashPairs(reps).select("doc_a", "doc_b").lineageCut()
+    val pairs = minhashPairs(reps).select("doc_a", "doc_b").localCheckpoint()
     val labels = clusterLabels(pairs) // (rep doc_id, converged component min)
     staged
       .join(labels.select(col("doc_id").as("exact_rep"), col("lbl")),
@@ -2019,7 +2009,7 @@ object TextOps {
     * upstream is the audited dedup chain.
     */
   def corpusReport(s: SparkSession, dir: String): DataFrame = {
-    val verdicts = dedupVerdicts(s, dir).lineageCut(eager = false)
+    val verdicts = dedupVerdicts(s, dir).localCheckpoint(eager = false)
     val rate = verdicts
       .join(Tables.documents(s, dir).select("doc_id", "lang"), "doc_id")
       .groupBy("lang")
@@ -2146,12 +2136,12 @@ object TextOps {
     // one shingling pass feeds both branches (lineage-cut, cleaner-freed)
     val g = Tables.documents(s, dir)
       .select(col("doc_id"), hashedShingles(col("text"), DecontamShingleN).as("hv"))
-      .lineageCut(eager = false)
+      .localCheckpoint(eager = false)
     val isEval = pmod(col("doc_id"), lit(DecontamModulus)) === 0
     val evalGrams = g.filter(isEval)
       .select(explode(col("hv")).as("g"))
       .distinct()
-      .lineageCut(eager = false) // the gate's count() materializes; the join reuses
+      .localCheckpoint(eager = false) // the gate's count() materializes; the join reuses
     val train = g.filter(!isEval)
     val evalSide =
       if (evalGrams.count() <= broadcastLimit) broadcast(evalGrams) else evalGrams
@@ -2334,7 +2324,7 @@ object TextOps {
     val masks: Array[Long] = (1 to SimhashHammingK).flatMap(k =>
       (0 until bits).combinations(k).map(_.map(i => 1L << i).sum)).toArray
     val sigs = sigDf.groupBy("sig").agg(min("doc_id").as("min_doc"))
-      .lineageCut(eager = false) // one kernel+distinct pass feeds both sides
+      .localCheckpoint(eager = false) // one kernel+distinct pass feeds both sides
     val probes = sigs
       .select(col("sig"), col("min_doc"), explode(typedLit(masks)).as("m"))
       .select(col("sig"), col("min_doc"),
@@ -2434,7 +2424,7 @@ object TextOps {
       // lineage-cut materialization instead of cache, as in dedupMinhash
       val sigs = bandSignatures(
         docs.select(col("doc_id"), hashedShingles(col("text"), 3).as("hv"))
-          .lineageCut(eager = false))
+          .localCheckpoint(eager = false))
       sigs.as("a").join(sigs.as("b"),
           col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
             col("a.doc_id") < col("b.doc_id"))
@@ -2445,7 +2435,7 @@ object TextOps {
     // native fused kernel, same value as the HOF chain (NativeVecSpec)
     val g = docs.select(col("doc_id"),
         graft.plans.Kernels.charGrams(col("text"), 4).as("cg"))
-      .lineageCut(eager = false)
+      .localCheckpoint(eager = false)
     cand
       .join(g.select(col("doc_id").as("doc_a"), col("cg").as("cg_a")), "doc_a")
       .join(g.select(col("doc_id").as("doc_b"), col("cg").as("cg_b")), "doc_b")

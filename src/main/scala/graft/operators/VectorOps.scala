@@ -5,7 +5,6 @@ import graft.functions.Vec
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import graft.functions.OracleSort._
-import graft.functions.LineageCut._
 import org.apache.spark.sql.functions._
 
 /** Embedding-column operators (SURVEY §2.K3/K4) and the iterative k-means
@@ -204,10 +203,9 @@ object VectorOps {
     val ranged = base
       .repartitionByRange(parts, keys.map(col): _*)
       .withColumn("pid", spark_partition_id())
-      // pinned: a silently recomputed cache block could land rows in
-      // different range partitions than the driver's offsets saw (see
-      // LineageCut — `cache` mode falls back to localCheckpoint here)
-      .lineageCut(pinned = true)
+      // pinned: a recomputed range partition could disagree with the
+      // driver's offsets
+      .localCheckpoint()
     val counts = ranged.groupBy("pid").agg(count(lit(1)).as("cnt"))
       .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
     val n = counts.map(_._2).sum
@@ -619,9 +617,9 @@ object VectorOps {
       .bitwiseOR(shiftleft(col("band2").cast("long"), 16))
       .bitwiseOR(col("band3").cast("long")).as("sig")
     val m = phashFrame(s, dir).select(col("doc_id"), sig)
-      .lineageCut(eager = false) // membership: feeds the sig dedup + both expansions
+      .localCheckpoint(eager = false) // membership: feeds the sig dedup + both expansions
     val sigs = m.groupBy("sig").agg(count(lit(1)).as("n"))
-      .lineageCut(eager = false)
+      .localCheckpoint(eager = false)
     val bandsOf = (c: Column) => array((3 to 0 by -1).map(b =>
       shiftright(c, b * 16).bitwiseAND(lit(0xffffL))): _*)
     val sb = sigs.select(col("sig"), col("n"),
@@ -846,7 +844,7 @@ object VectorOps {
       posexplode(array((0 until PqSubspaces).map(i =>
         slice(col("cvec"), i * PqSubDim + 1, PqSubDim)): _*))
         .as(Seq("s", "csub")))
-      .lineageCut(eager = false)
+      .localCheckpoint(eager = false)
   }
 
   /** The PQ encode's argmin frame: per (vec_id, subspace), the nearest
@@ -954,66 +952,66 @@ object VectorOps {
     */
   private[graft] def pqKmeansSubCodebooks(emb: DataFrame,
                                           maxIters: Int = KmeansMaxIters,
-                                          tol: Double = KmeansTol): DataFrame =
-    // AQE scoped off: per-iteration exchanges are (subspaces × k × subdim)-
-    // bounded — see graft.functions.Confs (results unaffected)
-    graft.functions.Confs.kBoundedLoop(emb.sparkSession) {
-    import org.apache.spark.sql.functions.posexplode
-    import org.apache.spark.sql.types.DecimalType
+                                          tol: Double = KmeansTol): DataFrame = {
     val s = emb.sparkSession
     import s.implicits._
-    // seed: label-mean sub-centroids, collected k×PqSubspaces rows (the
-    // codebook is driver-sized by definition — it is the loop's state)
-    val seed = pqCentSubs(emb).select(col("s"), col("csub")).collect()
-      .groupBy(_.getInt(0))
-    var centers: Array[Array[Seq[Double]]] = Array.tabulate(PqSubspaces)(si =>
-      seed(si).map(_.getSeq[Double](1)).sortBy(_.toString).toArray.map(identity))
-    // deterministic seed order: sort each subspace's centroids by value so
-    // cid assignment doesn't depend on collect order
-    val subs = emb.select(col("vec_id"),
-      posexplode(array((0 until PqSubspaces).map(i =>
-        slice(col("embedding"), i * PqSubDim + 1, PqSubDim)): _*))
-        .as(Seq("s", "subv"))).cache()
-    try {
-      // one complex-typed literal per iteration (see centersLit)
-      def centersLitBySub(): Column =
-        typedLit(centers.toSeq.map(sub => sub.toSeq.zipWithIndex.map { case (c, j) => Center(j, c) }))
-      var moved = Double.MaxValue
-      var it = 0
-      while (it < maxIters && moved > tol) {
-        it += 1
-        val near = array_min(transform(
-          element_at(centersLitBySub(), col("s") + 1),
-          c => struct(Vec.sqDistF(col("subv"), c.getField("center")).as("dist"),
-            c.getField("cid").as("cid"))))
-        val sums = subs
-          .select(col("s"), near.getField("cid").as("cid"), posexplode(col("subv")))
-          .groupBy("s", "cid", "pos")
-          .agg(sum(col("col").cast("double").cast(DecimalType(28, 20)))
-            .cast("double").as("sv"), count(lit(1)).as("n"))
-          .collect()
-        val byKey = sums.groupBy(r => (r.getInt(0), r.getInt(1)))
-        val next = centers.zipWithIndex.map { case (sub, si) =>
-          sub.zipWithIndex.map { case (old, j) =>
-            byKey.get((si, j)) match {
-              case Some(rows) =>
-                rows.sortBy(_.getInt(2)).map(r => r.getDouble(3) / r.getLong(4)).toSeq
-              case None => old // empty cluster keeps its center
+    // AQE scoped off: per-iteration exchanges are (subspaces × k × subdim)-
+    // bounded — see graft.functions.Confs (results unaffected)
+    val learned = graft.functions.Confs.kBoundedLoop(emb) { emb =>
+      import org.apache.spark.sql.functions.posexplode
+      import org.apache.spark.sql.types.DecimalType
+      // seed: label-mean sub-centroids, collected k×PqSubspaces rows (the
+      // codebook is driver-sized by definition — it is the loop's state)
+      val seed = pqCentSubs(emb).select(col("s"), col("csub")).collect()
+        .groupBy(_.getInt(0))
+      var centers: Array[Array[Seq[Double]]] = Array.tabulate(PqSubspaces)(si =>
+        seed(si).map(_.getSeq[Double](1)).sortBy(_.toString).toArray.map(identity))
+      // deterministic seed order: sort each subspace's centroids by value so
+      // cid assignment doesn't depend on collect order
+      val subs = emb.select(col("vec_id"),
+        posexplode(array((0 until PqSubspaces).map(i =>
+          slice(col("embedding"), i * PqSubDim + 1, PqSubDim)): _*))
+          .as(Seq("s", "subv"))).cache()
+      try {
+        // one complex-typed literal per iteration (see centersLit)
+        def centersLitBySub(): Column =
+          typedLit(centers.toSeq.map(sub => sub.toSeq.zipWithIndex.map { case (c, j) => Center(j, c) }))
+        var moved = Double.MaxValue
+        var it = 0
+        while (it < maxIters && moved > tol) {
+          it += 1
+          val near = array_min(centroidDists(
+            element_at(centersLitBySub(), col("s") + 1), col("subv"), "center", "cid", "cid"))
+          val sums = subs
+            .select(col("s"), near.getField("cid").as("cid"), posexplode(col("subv")))
+            .groupBy("s", "cid", "pos")
+            .agg(sum(col("col").cast("double").cast(DecimalType(28, 20)))
+              .cast("double").as("sv"), count(lit(1)).as("n"))
+            .collect()
+          val byKey = sums.groupBy(r => (r.getInt(0), r.getInt(1)))
+          val next = centers.zipWithIndex.map { case (sub, si) =>
+            sub.zipWithIndex.map { case (old, j) =>
+              byKey.get((si, j)) match {
+                case Some(rows) =>
+                  rows.sortBy(_.getInt(2)).map(r => r.getDouble(3) / r.getLong(4)).toSeq
+                case None => old // empty cluster keeps its center
+              }
             }
           }
+          moved = centers.zip(next).map { case (os, ns) =>
+            os.zip(ns).map { case (o, n) =>
+              o.zip(n).map { case (a, b) => (a - b) * (a - b) }.sum }.max }.max
+          centers = next
         }
-        moved = centers.zip(next).map { case (os, ns) =>
-          os.zip(ns).map { case (o, n) =>
-            o.zip(n).map { case (a, b) => (a - b) * (a - b) }.sum }.max }.max
-        centers = next
-      }
-      if (moved > tol)
-        System.err.println(s"[graft] pq sub-kmeans stopped at the $maxIters-iteration " +
-          s"cap with max center movement $moved > $tol")
-      centers.zipWithIndex.flatMap { case (sub, si) =>
-        sub.zipWithIndex.map { case (c, j) => (j, si, c) }
-      }.toSeq.toDF("c_label", "s", "csub")
-    } finally { subs.unpersist(); () }
+        if (moved > tol)
+          System.err.println(s"[graft] pq sub-kmeans stopped at the $maxIters-iteration " +
+            s"cap with max center movement $moved > $tol")
+        centers
+      } finally { subs.unpersist(); () }
+    }
+    learned.zipWithIndex.flatMap { case (sub, si) =>
+      sub.zipWithIndex.map { case (c, j) => (j, si, c) }
+    }.toSeq.toDF("c_label", "s", "csub")
   }
 
   /** Deployment twin of `vec_pq`: encode against the k-means-learned
@@ -1025,7 +1023,7 @@ object VectorOps {
   private[graft] def vecPqKmeans(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label"), col("embedding"))
-    pqEncodeWith(emb, pqKmeansSubCodebooks(emb).lineageCut(eager = false))
+    pqEncodeWith(emb, pqKmeansSubCodebooks(emb).localCheckpoint(eager = false))
   }
 
   /** Deployment twin of `vec_pq_adc`: ADC search against the
@@ -1035,7 +1033,7 @@ object VectorOps {
   private[graft] def vecPqAdcKmeans(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label"), col("embedding"))
-    pqAdcWith(emb, pqKmeansSubCodebooks(emb).lineageCut(eager = false))
+    pqAdcWith(emb, pqKmeansSubCodebooks(emb).localCheckpoint(eager = false))
   }
 
   /** K3d `sim_ivfpq` (round 10): the composed billion-scale ANN stack —
@@ -1447,7 +1445,7 @@ object VectorOps {
       .withColumn("rn", row_number()
         .over(Window.partitionBy("src").orderBy(desc("c"), asc("dst"))))
       .filter(col("rn") <= HnswCand)
-      .lineageCut(eager = false) // self-joined for the occlusion test
+      .localCheckpoint(eager = false) // self-joined for the occlusion test
     val occl = cand
       .join(cand.select(col("src"), col("emb_b").as("emb_s"), col("rn").as("rn_s")), "src")
       .filter(col("rn_s") < col("rn"))
@@ -1483,7 +1481,7 @@ object VectorOps {
       val nodes = corpusOf(Tables.embeddings(s, dir))
         .select(col("vec_id"), col("embedding"),
           Vec.signBucket(col("embedding"), bits).as("b"))
-        .lineageCut(eager = false)
+        .localCheckpoint(eager = false)
       // bucketed-corpus family: the serving layout (vectors keyed by
       // their bucket) the query-time own-bucket entry scan key-joins
       // against — see simHnsw (round 16)
@@ -1495,7 +1493,7 @@ object VectorOps {
       val portals = nodes.groupBy("b").agg(min(col("vec_id")).as("vec_id"))
         .join(nodes.select(col("vec_id"), col("embedding")), "vec_id")
         .select("b", "vec_id", "embedding")
-        .lineageCut(eager = false)
+        .localCheckpoint(eager = false)
       portals.write.mode("overwrite").parquet(s"$target/portals")
       // within-bucket kNN by cosine: candidate mass Σ|bucket|² ≈
       // n·HnswTargetList — linear, never all-pairs (the dedup_embed
@@ -1606,7 +1604,7 @@ object VectorOps {
     val q = queriesOf(Tables.embeddings(s, dir))
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         Vec.signBucket(col("embedding"), bits).as("b"))
-      .lineageCut(eager = false) // re-joined every scoring round
+      .localCheckpoint(eager = false) // re-joined every scoring round
     // entry fan: the query's own bucket plus its Hamming-≤2 flips — their
     // portals seed the search (broadcast the tiny query fan onto the
     // portal family scan)
@@ -1650,7 +1648,7 @@ object VectorOps {
       // visited-set discipline), so no edge is fetched twice for a query
       val x = v.withColumn("r", row_number()
           .over(Window.partitionBy("q_id", "ex").orderBy(desc("cos"), asc("vec_id"))))
-        .lineageCut(eager = false) // two consumers: frontier + carry
+        .localCheckpoint(eager = false) // two consumers: frontier + carry
       val fr = x.filter(!col("ex") && col("r") <= beam)
         .select(col("q_id"), col("vec_id").as("src"))
       val scored = edges.join(broadcast(fr), "src")
@@ -1717,7 +1715,7 @@ object VectorOps {
     def bucketed(df: DataFrame): DataFrame = df
       .select(col("vec_id"), col("embedding"),
         Vec.signBucket(col("embedding"), bits).as("b"))
-      .lineageCut(eager = false)
+      .localCheckpoint(eager = false)
     val bb = bucketed(base)
     val nb = bucketed(batch)
     val basePortals = bb.groupBy("b").agg(min(col("vec_id")).as("vec_id"))
@@ -1825,7 +1823,7 @@ object VectorOps {
       // multi-consumer intermediate (both sides of the pairwise self-join):
       // the cut keeps the counted stage-1 BNLJ a SINGLE plan node and the
       // corpus scan a single pass, instead of re-executing per consumer
-      .lineageCut(eager = false)
+      .localCheckpoint(eager = false)
     val withEmb = cand.join(emb.select(col("vec_id"), col("embedding")), "vec_id")
     // self-pairs (a = b) stay IN the frame so every candidate seeds its
     // query's group even when the stage-1 pool is degenerate (round-14
@@ -1963,7 +1961,6 @@ object VectorOps {
     * tree and compare exactly.
     */
   private[graft] def ivfIncParts(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    import graft.functions.LineageCut._
     val emb = Tables.embeddings(s, dir)
     val base = emb.filter(pmod(col("vec_id"), lit(IvfIncBatchMod)) =!= 0)
     val batch = emb.filter(pmod(col("vec_id"), lit(IvfIncBatchMod)) === 0)
@@ -1972,7 +1969,7 @@ object VectorOps {
       .select(col("label").as("list_id"), posexplode(col("embedding")))
       .groupBy("list_id", "pos")
       .agg(sum(ivfIncUnits(col("col"))).as("usum"), count(lit(1)).as("n_base"))
-      .lineageCut(eager = false)
+      .localCheckpoint(eager = false)
     val cent = state
       .select(col("list_id").as("c_list"), col("pos"),
         (col("usum").cast("double") / lit(IvfIncUnit.toDouble) / col("n_base"))
@@ -2179,7 +2176,7 @@ object VectorOps {
       simIvfWith(emb, cent)
         // materialize before the cache is released below — the frame is
         // AnnTopK × QuerySetSize rows, driver-tiny
-        .lineageCut()
+        .localCheckpoint()
     } finally emb.unpersist()
   }
 
@@ -2206,34 +2203,15 @@ object VectorOps {
   private[graft] def ivfCandidatesBy(emb: DataFrame, cent: DataFrame,
       score: (Column, Column) => Column, scoreName: String, nProbes: Int): DataFrame = {
     // One row holding all k centroids → broadcast, no shuffle to assign.
-    // Lineage cut + materialized once (`localCheckpoint(false)`, not
-    // `cache`): both the corpus-assignment branch and the query-probe branch
-    // reference it, and without the cut each would recompute the full
-    // corpus-wide centroid aggregation (the operator's most expensive
-    // stage). Lazy, so merely CONSTRUCTING the frame (plan audits, explain)
-    // runs no job — measured end-to-end cost at sf0.1 is identical to the
-    // eager form; the checkpointed blocks are freed
-    // by the ContextCleaner once the result frame is garbage, where the
-    // round-2 `.cache()` left an InMemoryRelation behind after every
-    // invocation (round-2 VERDICT #5).
-    val centsRow = cent.agg(collect_list(struct(col("c_label"), col("cvec"))).as("cents"))
-      .lineageCut(eager = false)
-
-    def nearest(v: Column): Column = // (dist, label) argmin over the centroid array
-      array_min(transform(col("cents"),
-        c => struct(Vec.sqDistF(v, c.getField("cvec")).as("dist"),
-          c.getField("c_label").as("lbl"))))
-
     import graft.functions.ScalarAttach._
-    val withCents = emb.attachScalarRow(centsRow)
+    val withCents = emb.attachScalarRow(centsRow(cent))
     val corpus = corpusOf(withCents)
-      .select(col("vec_id"), col("embedding"), nearest(col("ix_emb")).getField("lbl").as("ilist"))
+      .select(col("vec_id"), col("embedding"),
+        array_min(labelDists(col("ix_emb"))).getField("lbl").as("ilist"))
     // Queries probe their nProbes nearest lists (query set is tiny).
     val probes = queriesOf(withCents)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        posexplode(slice(array_sort(transform(col("cents"),
-          c => struct(Vec.sqDistF(col("ix_emb"), c.getField("cvec")).as("dist"),
-            c.getField("c_label").as("lbl")))), 1, nProbes)))
+        posexplode(slice(array_sort(labelDists(col("ix_emb"))), 1, nProbes)))
       .select(col("q_id"), col("q_emb"), col("col.lbl").as("ilist"))
 
     corpus.join(broadcast(probes), "ilist")
@@ -2379,7 +2357,7 @@ object VectorOps {
       val cent = kmeansCenters(emb).zipWithIndex
         .map { case (c, cid) => (cid, c) }.toSeq
         .toDF("c_label", "cvec")
-      dedupSemanticWith(emb, cent, semBits(cent.count(), emb.count())).lineageCut()
+      dedupSemanticWith(emb, cent, semBits(cent.count(), emb.count())).localCheckpoint()
     } finally emb.unpersist()
   }
 
@@ -2393,18 +2371,11 @@ object VectorOps {
     */
   private[graft] def dedupSemanticWith(emb: DataFrame, cent: DataFrame, bits: Int): DataFrame = {
     import graft.functions.ScalarAttach._
-    val centsRow = cent
-      .agg(collect_list(struct(col("c_label"), col("cvec"))).as("cents"))
-      .lineageCut(eager = false)
-    def nearest(v: Column): Column =
-      array_min(transform(col("cents"),
-        c => struct(Vec.sqDistF(v, c.getField("cvec")).as("dist"),
-          c.getField("c_label").as("lbl"))))
     // cell id = coarse argmin refined by b sign-bucket bits; at b = 0 the
     // cell IS the coarse cell (the small-corpus fixed point of the ladder)
-    val coarse = emb.attachScalarRow(centsRow)
+    val coarse = emb.attachScalarRow(centsRow(cent))
       .select(col("vec_id"), col("embedding"),
-        (nearest(col("embedding")).getField("lbl").cast("long") * (1L << bits)
+        (array_min(labelDists(col("embedding"))).getField("lbl").cast("long") * (1L << bits)
           + (if (bits == 0) lit(0L) // signBucket folds ≥1 bit terms
              else Vec.signBucket(col("embedding"), bits))).as("cid"))
     // per-cell exact-decimal means — the keep-priority anchor is the cell
@@ -2428,7 +2399,7 @@ object VectorOps {
     val a = coarse.join(cellCent, "cid")
       .select(col("vec_id"), col("embedding"), col("cid"),
         round(Vec.sqDistF(col("embedding"), col("cvec")), 6).as("c_dist"))
-      .lineageCut(eager = false)
+      .localCheckpoint(eager = false)
     // within-cluster ≥τ neighbours, with the domination verdict folded
     // into the same pass: y beats x iff closer to the centroid (vec_id
     // tiebreak) — one partial-agg per vector, no second join
@@ -2507,7 +2478,7 @@ object VectorOps {
     val a = e.join(cent, "b")
       .select(col("vec_id"), col("embedding"), col("b"),
         round(Vec.sqDistF(col("embedding"), col("cvec")), 6).as("c_dist"))
-      .lineageCut(eager = false)
+      .localCheckpoint(eager = false)
     val nbrs = a.as("x").join(a.as("y"),
         col("x.b") === col("y.b") && col("x.vec_id") =!= col("y.vec_id"))
       .where(Vec.cosineF(col("x.embedding"), col("y.embedding")) >= SemDupTau)
@@ -2582,9 +2553,33 @@ object VectorOps {
     * lower cid, exactly like SQL `ORDER BY dist, cid`.
     */
   private def nearestCenter(cs: Array[Seq[Double]]): Column =
-    array_min(transform(centersLit(cs),
-      c => struct(Vec.sqDistF(col("embedding"), c.getField("center")).as("dist"),
-        c.getField("cid").as("cid"))))
+    array_min(centroidDists(centersLit(cs), col("embedding"), "center", "cid", "cid"))
+
+  /** Per centroid of the array `cents`, the struct (dist, `idAs`): the
+    * squared distance from `v` to its `vec` field, and its `id` field.
+    * `array_min` of it is the nearest-centroid argmin (ties to the lower
+    * id, like SQL `ORDER BY dist, id`); `array_sort` ranks the centroids.
+    */
+  private def centroidDists(cents: Column, v: Column, vec: String, id: String,
+                            idAs: String): Column =
+    transform(cents, c => struct(Vec.sqDistF(v, c.getField(vec)).as("dist"),
+      c.getField(id).as(idAs)))
+
+  /** [[centroidDists]] over the `cents` column of [[centsRow]]. */
+  private def labelDists(v: Column): Column =
+    centroidDists(col("cents"), v, "cvec", "c_label", "lbl")
+
+  /** All (c_label, cvec) centroids of `cent` as one `cents` array row.
+    * The lineage cut runs the corpus-wide centroid aggregation once for
+    * every branch that reads the row (IVF: corpus assignment and query
+    * probes). Lazy, so constructing the frame (plan audits, explain) runs
+    * no job; the blocks are freed by the ContextCleaner once the result
+    * frame is garbage, where `cache` would leave an InMemoryRelation
+    * behind after every invocation.
+    */
+  private def centsRow(cent: DataFrame): DataFrame =
+    cent.agg(collect_list(struct(col("c_label"), col("cvec"))).as("cents"))
+      .localCheckpoint(eager = false)
 
   private def assignedTo(emb: DataFrame, cs: Array[Seq[Double]]): DataFrame =
     emb.select(col("vec_id"), col("label"), col("embedding"),
@@ -2668,7 +2663,7 @@ object VectorOps {
     // k×dim partial-agg rows (corpus-size independent), so adaptive
     // re-planning only adds a per-iteration driver round trip — see
     // graft.functions.Confs. Results are unaffected (physical-only).
-    graft.functions.Confs.kBoundedLoop(emb.sparkSession) {
+    graft.functions.Confs.kBoundedLoop(emb) { emb =>
     var centers = initCenters(emb)
     var moved = Double.MaxValue
     var trace = List.empty[Double]
@@ -2734,7 +2729,7 @@ object VectorOps {
       // unpersist).
       val scored = assignedTo(emb, centers)
         .select(col("cid"), col("label"), Vec.l2F(col("embedding")).as("nrm"))
-        .lineageCut()
+        .localCheckpoint()
 
       // I4: cluster report — size, dominant label + share, median norm.
       val topLabel = scored.groupBy("cid", "label").agg(count(lit(1)).as("n"))
@@ -2826,7 +2821,7 @@ object VectorOps {
         (col("event_id") % 997).cast("long").as("y"))
       .cache() // A5: one materialization feeds init + all 8 passes
     // AQE scoped off for the 8 k-bounded iteration jobs (see Confs)
-    try graft.functions.Confs.kBoundedLoop(s) {
+    val frames = try graft.functions.Confs.kBoundedLoop(pts) { pts =>
       // deterministic init: per residue class event_id % k, the point of
       // the SMALLEST event_id (min_by — unique ids, no tie ambiguity)
       val init = pts
@@ -2835,7 +2830,7 @@ object VectorOps {
           min_by(col("y"), col("event_id")).as("cy"))
         .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
       var centers = init
-      val frames = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Long, Long, Long)]
+      val frames = Seq.newBuilder[(Int, Int, Long, Long, Long)]
       for (it <- 1 to KmIntIters) {
         // one complex-typed Literal — identical generated source across the
         // 8 iterations, so the argmin stage compiles once (see centersLit)
@@ -2859,9 +2854,10 @@ object VectorOps {
         centers = agg.map(t => (t._1, t._2, t._3))
         frames ++= agg.map(t => (it, t._1, t._2, t._3, t._4))
       }
-      import s.implicits._
-      frames.toSeq.toDF("iter", "cid", "cx", "cy", "n_pts")
-        .oracleSorted("iter", "cid")
+      frames.result()
     } finally pts.unpersist()
+    import s.implicits._
+    frames.toDF("iter", "cid", "cx", "cy", "n_pts")
+      .oracleSorted("iter", "cid")
   }
 }

@@ -31,14 +31,13 @@ object Windows {
   def windowShare(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.{Num, ScalarAttach}
     import ScalarAttach._
-    import graft.functions.LineageCut._
     val g = Tables.orders(s, dir)
       .groupBy("o_orderpriority")
       .agg(sum(Num.dec2(col("o_totalprice"))).as("rev_dec"),
         count(lit(1)).as("n_orders"))
       // round-17: g feeds the grand-total aggregate AND the share rows —
       // cut so the orders scan+agg runs once (guide §2.4)
-      .lineageCut(eager = false)
+      .localCheckpoint(eager = false)
     g.attachScalarRow(
         g.agg(sum("rev_dec").as("total_dec")))
       .select(col("o_orderpriority"), col("n_orders"),

@@ -24,6 +24,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, ListState,
   */
 object StatefulOps {
 
+  /** Starts `ds` into the in-memory table `queryName` (the parity tests'
+    * sink for every streaming entry below).
+    */
+  private def memorySink(ds: Dataset[_], queryName: String, mode: OutputMode) =
+    ds.writeStream.format("memory").queryName(queryName).outputMode(mode).start()
+
   case class UserEvent(user_id: Long, ts: Timestamp, value: Double)
 
   /** Per-user running profile: event count, exact cents sum, time span. */
@@ -78,11 +84,7 @@ object StatefulOps {
     * parity test; `Update` mode emits the refreshed profile per trigger.
     */
   def profileStreamQuery(events: Dataset[UserEvent], queryName: String) =
-    profile(events).writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Update())
-      .start()
+    memorySink(profile(events), queryName, OutputMode.Update())
 
   // ------------------------------------------------------------------
   // mapGroupsWithState changelog compaction (§2.J13 — M1's streaming twin)
@@ -143,11 +145,7 @@ object StatefulOps {
 
   /** Streaming entry (same pipeline through `writeStream`) — parity test. */
   def upsertStreamQuery(rows: Dataset[VersionedRow], queryName: String) =
-    latest(rows).writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Update())
-      .start()
+    memorySink(latest(rows), queryName, OutputMode.Update())
 
   // ------------------------------------------------------------------
   // mapGroupsWithState incremental view maintenance (J16 — M9's twin)
@@ -229,11 +227,7 @@ object StatefulOps {
 
   /** Streaming entry (same pipeline through `writeStream`) — parity test. */
   def matviewStreamQuery(rows: Dataset[MvDelta], queryName: String) =
-    mvMaintain(rows).writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Update())
-      .start()
+    memorySink(mvMaintain(rows), queryName, OutputMode.Update())
 
   // ------------------------------------------------------------------
   // flatMapGroupsWithState TTL-bounded dedup (§2.J15 — dedup_ttl's twin)
@@ -317,16 +311,12 @@ object StatefulOps {
     */
   def dedupTtlStreamQuery(events: Dataset[KeyedEvent], queryName: String) = {
     import events.sparkSession.implicits._
-    events
+    val out = events
       .withWatermark("ts", "0 seconds")
       .groupByKey(e => (e.user_id, e.event_type))
       .flatMapGroupsWithState(OutputMode.Append(),
         GroupStateTimeout.EventTimeTimeout())(ttlStream)
-      .writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .start()
+    memorySink(out, queryName, OutputMode.Append())
   }
 
   // ------------------------------------------------------------------
@@ -433,16 +423,12 @@ object StatefulOps {
     */
   def sessionizeStreamQuery(events: Dataset[SessionEvent], queryName: String) = {
     import events.sparkSession.implicits._
-    events
+    val out = events
       .withWatermark("ts", "0 seconds")
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append(),
         GroupStateTimeout.EventTimeTimeout())(sessionizeStream)
-      .writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .start()
+    memorySink(out, queryName, OutputMode.Append())
   }
 
   // ------------------------------------------------------------------
@@ -536,17 +522,13 @@ object StatefulOps {
     */
   def funnelStreamQuery(events: Dataset[FunnelEvent], queryName: String) = {
     import events.sparkSession.implicits._
-    events
+    val out = events
       .groupByKey(_.user_id)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout()) {
         (uid: Long, evs: Iterator[FunnelEvent], state: GroupState[FunnelState]) =>
           uid -> updateFunnel(uid, evs, state)
       }
-      .writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Update())
-      .start()
+    memorySink(out, queryName, OutputMode.Update())
   }
 
   // ------------------------------------------------------------------
@@ -637,14 +619,10 @@ object StatefulOps {
   /** Streaming entry — used by the cross-trigger parity test. */
   def topnStreamQuery(events: Dataset[TopEvent], queryName: String) = {
     import events.sparkSession.implicits._
-    events
+    val out = events
       .groupByKey(_.user_id)
       .transformWithState(new TopNProcessor, TimeMode.None(), OutputMode.Update())
-      .writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Update())
-      .start()
+    memorySink(out, queryName, OutputMode.Update())
   }
 
   // ------------------------------------------------------------------
@@ -816,14 +794,10 @@ object StatefulOps {
   /** Streaming entry — used by the cross-trigger parity test. */
   def kmvStreamQuery(hashes: Dataset[KmvHash], queryName: String) = {
     import hashes.sparkSession.implicits._
-    hashes
+    val out = hashes
       .groupByKey(_.lang)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout())(kmvFold)
-      .writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Update())
-      .start()
+    memorySink(out, queryName, OutputMode.Update())
   }
 
   // ------------------------------------------------------------------
@@ -949,28 +923,20 @@ object StatefulOps {
   /** Streaming entry — used by the cross-trigger parity test. */
   def minhashStreamQuery(rows: Dataset[BandHv], queryName: String) = {
     import rows.sparkSession.implicits._
-    rows
+    val out = rows
       .groupByKey(r => (r.band, r.sig))
       .flatMapGroupsWithState(OutputMode.Append(),
         GroupStateTimeout.NoTimeout())(minhashBucketFold)
-      .writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .start()
+    memorySink(out, queryName, OutputMode.Append())
   }
 
   /** Streaming entry — used by the cross-trigger parity test. */
   def anomalyStreamQuery(events: Dataset[AnomEvent], queryName: String) = {
     import events.sparkSession.implicits._
-    events
+    val out = events
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append(),
         GroupStateTimeout.NoTimeout())(anomalyFold)
-      .writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .start()
+    memorySink(out, queryName, OutputMode.Append())
   }
 }

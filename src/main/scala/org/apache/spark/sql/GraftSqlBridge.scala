@@ -5,7 +5,8 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 /** Minimal bridge into `private[sql]` Column↔Expression conversion — the
   * standard pattern for Spark-native extension libraries that define custom
   * Catalyst expressions (Spark 4 moved `new Column(expr)` behind
-  * `classic.ExpressionUtils`). Nothing else from the private API is used.
+  * `classic.ExpressionUtils`), plus the cache registry and session cloning
+  * below. Nothing else from the private API is used.
   */
 object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -17,4 +18,15 @@ object GraftSqlBridge {
     */
   def cacheIsEmpty(s: SparkSession): Boolean =
     s.asInstanceOf[classic.SparkSession].sharedState.cacheManager.isEmpty
+
+  /** A session with a copy of `s`'s SQLConf, functions and temp views that
+    * shares its SparkContext and cache (`graft.functions.Confs`).
+    */
+  def cloneSession(s: SparkSession): SparkSession =
+    s.asInstanceOf[classic.SparkSession].cloneSession()
+
+  /** `df`'s logical plan as a frame of session `s`. */
+  def onSession(df: DataFrame, s: SparkSession): DataFrame =
+    classic.Dataset.ofRows(s.asInstanceOf[classic.SparkSession],
+      df.asInstanceOf[classic.Dataset[Row]].logicalPlan)
 }

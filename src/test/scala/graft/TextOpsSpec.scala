@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.LineageCut._
 import graft.operators.TextOps
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -410,7 +409,7 @@ class TextOpsSpec extends AnyFunSuite {
         .collect { case (a, b) if a != b => (a min b, a max b) }.distinct
         .toDF("doc_a", "doc_b"),
       "dedup_cluster pairs" -> TextOps.minhashPairs(Tables.documents(spark, sfDir))
-        .select("doc_a", "doc_b").lineageCut())
+        .select("doc_a", "doc_b").localCheckpoint())
     graphs.foreach { case (what, pairs) =>
       val nodes = pairs.collect().flatMap(r => Seq(r.getLong(0), r.getLong(1))).toSet
       assert(nodes.nonEmpty, s"$what: empty graph checks nothing")
