@@ -31,12 +31,13 @@ import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, Times
   * so a small single-row-group file scans in one task. A named loader
   * therefore reads a table that fits in one scan split
   * (`spark.sql.files.maxPartitionBytes`) and whose files hold fewer row
-  * groups than the session's `defaultParallelism` (N) from a copy: N files
-  * of contiguous source rows with the source's parquet schema and
-  * key-value metadata, staged once per (source, N) under
-  * `CopyStageDir/<table>/by/<digest>`. A table of a split or more, or with
-  * N or more files or row groups, loads in place, as does one that is not
-  * a flat directory of local files sharing one schema. Every read, in
+  * groups than the session's `defaultParallelism` (N) from a copy:
+  * min(N, rows) files of contiguous source rows, none empty, with the
+  * source's parquet schema and key-value metadata, staged once per
+  * (source, file count) under `CopyStageDir/<table>/by/<digest>`. A table
+  * of a split or more, with N or more files or row groups, or with no
+  * rows loads in place, as does one that is not a flat directory of local
+  * files sharing one schema. Every read, in
   * place or from a copy, goes through [[parquet]].
   */
 object Tables {
@@ -121,7 +122,7 @@ object Tables {
     }
   }
 
-  /** `p(dir, name)`, or the root of its staged `n`-file copy (see [[Tables]]).
+  /** `p(dir, name)`, or the root of its staged copy (see [[Tables]]).
     * Footers are read only when there are fewer than `n` data files holding
     * fewer than `maxSplit` bytes.
     */
@@ -140,24 +141,25 @@ object Tables {
         try r.getFooter finally r.close()
       }
       val shapes = footers.map(f => (f.getFileMetaData.getSchema, f.getFileMetaData.getKeyValueMetaData))
-      if (footers.map(_.getBlocks.size).sum >= n || shapes.distinct.size != 1) path
-      else Staging.stage(s"$CopyStageDir/$name", dir, s"rows-in-$n-files", path) { root =>
-        copy(conf, data, footers, n, root)
+      val total = footers.map(_.getBlocks.asScala.map(_.getRowCount).sum).sum
+      val m = math.min(n.toLong, total).toInt
+      if (footers.map(_.getBlocks.size).sum >= n || shapes.distinct.size != 1 || m == 0) path
+      else Staging.stage(s"$CopyStageDir/$name", dir, s"rows-in-$m-files", path) { root =>
+        copy(conf, data, footers, total, m, root)
       }
     }
   }
 
-  /** Writes the rows of `files`, in listing order, as `n` parquet files of
-    * contiguous rows under `root`, with the sources' schema, key-value
-    * metadata and compression codec. File i holds the rows r with
-    * `r * n / total == i`, so some files are empty when `total < n`.
+  /** Writes the `total` rows of `files`, in listing order, as `n` parquet
+    * files of contiguous rows under `root`, with the sources' schema,
+    * key-value metadata and compression codec. File i holds the rows r with
+    * `r * n / total == i`, so no file is empty when `n <= total`.
     */
   private def copy(conf: Configuration, files: Seq[FileStatus], footers: Seq[ParquetMetadata],
-                   n: Int, root: String): Unit = {
+                   total: Long, n: Int, root: String): Unit = {
     val meta = footers.head.getFileMetaData
     val codec = footers.flatMap(_.getBlocks.asScala).flatMap(_.getColumns.asScala)
       .headOption.fold(CompressionCodecName.UNCOMPRESSED)(_.getCodec)
-    val total = footers.map(_.getBlocks.asScala.map(_.getRowCount).sum).sum
     var part = -1
     var out: ParquetWriter[Group] = null
     def advanceTo(i: Int): Unit = while (part < i) {

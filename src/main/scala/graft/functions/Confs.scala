@@ -2,8 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 
-/** Session scope of the driver-coordinated iteration loops (k-means, the
-  * integer k-means twin, PQ codebook learning).
+/** Session scope of the driver-coordinated iteration loops (the Lloyd loop
+  * that trains the k-means centers and the PQ codebooks, and the integer
+  * k-means twin).
   *
   * Each iteration runs one TINY aggregate job: the shuffle moves k×dim
   * partial-agg rows regardless of corpus size, so AQE's between-stage

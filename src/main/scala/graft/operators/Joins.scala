@@ -3,6 +3,7 @@ package graft.operators
 import graft.{Staging, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.StructType
 import graft.functions.OracleSort._
 import org.apache.spark.sql.functions._
 
@@ -26,55 +27,46 @@ object Joins {
     */
   val BucketCount = 8
 
-  /** Per-JVM staging root for bucketed tables: the in-memory catalog dies
-    * with the JVM, so the data may too — a UUID path means concurrent JVMs
-    * (Bench + Verify + sbt test) never clobber each other's buckets, at the
-    * cost of re-staging per process (orders+customer: cheap fixture work,
-    * and the staging job is itself the bucketed-WRITE half of the demo).
-    * A shutdown hook removes the root: nothing outlives the catalog that
-    * names it (round-6 review #4 — the UUID dirs accumulated otherwise).
+  /** Fixed stage dir of `join_bucketed`'s bucketed tables (see
+    * [[graft.Staging.stage]]).
     */
-  private lazy val bucketStageRoot = {
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_bucketed_${java.util.UUID.randomUUID().toString.take(8)}"
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import java.nio.file.{Files, Paths}
-      val p = Paths.get(root)
-      if (Files.exists(p)) {
-        val walk = Files.walk(p)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => Files.deleteIfExists(f))
-        finally walk.close()
-      }
-    }))
-    root
-  }
-  private val bucketLock = new Object
+  val BucketStageDir = "/tmp/graft_bucketed"
 
-  /** Stage `df` as a bucketed+sorted catalog table (once per JVM per
-    * source-content fingerprint) and return its name. `bucketBy` metadata
-    * only persists through `saveAsTable`; with Spark's default in-memory
-    * catalog that needs no Hive metastore — exactly the shape a production
-    * lakehouse stores its fact tables in. The table name carries a digest
-    * of (dir, content fingerprint) — the same content-keying
-    * discipline as Relational's staged mirrors (round-4 ADVICE #1): data
-    * regenerated at the same path gets a NEW table, never stale buckets.
+  /** Stage orders and customer as bucketed+sorted tables and return their
+    * catalog names. `bucketBy` metadata persists only through
+    * `saveAsTable` (Spark refuses it with `save()`), and a CTAS refuses a
+    * non-empty location, so each table is written into its own new
+    * subdirectory of the stage target. The names carry the target's
+    * digest, so data regenerated at the same path gets new tables, never
+    * stale buckets. The stage is keyed on the listing of `dir`, which holds
+    * both sources, and on N, since the written files follow the loaders'
+    * scan partitions. A staged target that is not in this session's
+    * catalog (staged by another JVM, or dropped) is registered over its
+    * files.
     */
-  private def stagedBucketed(s: SparkSession, dir: String, src: String,
-                             key: String, df: => DataFrame): String = {
-    val digest = Staging.digest(s"$dir|${Staging.fingerprint(s"$dir/$src.parquet")}")
-    val name = s"graft_${src}_bkt_$digest"
-    bucketLock.synchronized {
-      if (!s.catalog.tableExists(name)) {
-        df.write.mode("overwrite")
-          .option("path", s"$bucketStageRoot/$name")
-          .bucketBy(BucketCount, key).sortBy(key)
-          .saveAsTable(name)
+  private def stagedBucketed(s: SparkSession, dir: String): (String, String) = {
+    val tables = Seq(("orders", "o_custkey", Tables.orders _),
+      ("customer", "c_custkey", Tables.customer _))
+    def name(root: String, src: String) = s"graft_${src}_bkt_${new java.io.File(root).getName}"
+    val root = Staging.stage(BucketStageDir, dir, s"bkt1|b=$BucketCount|${Tables.scanTag(s)}", dir) {
+      root => tables.foreach { case (src, key, load) =>
+        load(s, dir).write.mode("overwrite").option("path", s"$root/$src")
+          .bucketBy(BucketCount, key).sortBy(key).saveAsTable(name(root, src))
       }
     }
-    name
+    tables.foreach { case (src, key, load) =>
+      if (!s.catalog.tableExists(name(root, src))) {
+        // a bucketed CREATE TABLE needs its column list; a file-source
+        // table stores every column nullable, as saveAsTable did
+        val cols = StructType(load(s, dir).schema.map(_.copy(nullable = true))).toDDL
+        s.sql(s"CREATE TABLE IF NOT EXISTS ${name(root, src)} ($cols) USING parquet " +
+          s"CLUSTERED BY ($key) SORTED BY ($key) INTO $BucketCount BUCKETS LOCATION '$root/$src'")
+      }
+    }
+    (name(root, "orders"), name(root, "customer"))
   }
 
-  /** C9 `join_bucketed` (round 6): SHUFFLE-FREE co-located fact join via
+  /** C9 `join_bucketed`: SHUFFLE-FREE co-located fact join via
     * bucketed storage — the named scale pattern the rest of the join family
     * doesn't cover (broadcast handles small dims, salting handles skew;
     * bucketing handles the repeated big⋈big join on a stable key). Both
@@ -88,12 +80,9 @@ object Joins {
     * key, which is the only shuffle the query should have.
     */
   def joinBucketed(s: SparkSession, dir: String): DataFrame = {
-    val ordersT = s.table(stagedBucketed(s, dir, "orders", "o_custkey",
-      Tables.orders(s, dir)))
-    val custT = s.table(stagedBucketed(s, dir, "customer", "c_custkey",
-      Tables.customer(s, dir)))
-    ordersT.hint("merge")
-      .join(custT, col("o_custkey") === col("c_custkey"))
+    val (ordersT, custT) = stagedBucketed(s, dir)
+    s.table(ordersT).hint("merge")
+      .join(s.table(custT), col("o_custkey") === col("c_custkey"))
       .groupBy("c_mktsegment")
       .agg(count(lit(1)).as("n_orders"),
         graft.functions.Num.money(

@@ -19,9 +19,10 @@ import org.apache.spark.sql.functions._
   *    an equi-join on the bucket key.
   *  - `kmeans_clusters`: the reference's driver-coordinated loop
   *    [ref: stackoverflow/…/StackOverflow.scala#kmeans] — centers live on
-  *    the driver (k × dim doubles), each iteration is one broadcast join +
-  *    one partial-aggregated per-dimension mean; only k × dim rows ever
-  *    reach the driver per iteration.
+  *    the driver (k × dim doubles), each iteration is one shuffle-free
+  *    assignment against the centers literal + one partial-aggregated
+  *    per-dimension mean; only k × dim rows ever reach the driver per
+  *    iteration. The PQ codebooks train in the same loop.
   */
 /** Typed output schema of the multimodal decode stage: container size and
   * dimensions parsed from real BMP header fields, frame count (1 — BMP is a
@@ -834,34 +835,30 @@ object VectorOps {
     * `vec_pq_adc` search so the two sides of the PQ contract (what wrote
     * the codes, what the LUT is built against) cannot drift.
     */
-  private[graft] def pqCentSubs(emb: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.posexplode
+  private[graft] def pqCentSubs(emb: DataFrame): DataFrame =
     // lineage cut (lazy): the consumers reference this frame from two or
     // three join branches (encode + LUT + coarse assign); without the cut
     // each branch would recompute the corpus-wide centroid aggregation —
     // the ivfCandidatesBy precedent
-    labelMeanCentroids(emb).select(col("c_label"),
-      posexplode(array((0 until PqSubspaces).map(i =>
-        slice(col("cvec"), i * PqSubDim + 1, PqSubDim)): _*))
-        .as(Seq("s", "csub")))
+    labelMeanCentroids(emb).select(col("c_label"), pqSlices(col("cvec")).as(Seq("s", "csub")))
       .localCheckpoint(eager = false)
-  }
+
+  /** `v` cut into its `PqSubspaces` disjoint `PqSubDim`-dim slices, one
+    * generator row per slice: (pos = subspace, col = slice).
+    */
+  private def pqSlices(v: Column): Column =
+    posexplode(array((0 until PqSubspaces).map(i => slice(v, i * PqSubDim + 1, PqSubDim)): _*))
 
   /** The PQ encode's argmin frame: per (vec_id, subspace), the nearest
     * sub-centroid as `best = struct(d2, c_label)` — ONE partial
     * aggregation (min(struct) — map-side combine), no window sort.
     */
-  private[graft] def pqBest(emb: DataFrame, centSubs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.{posexplode, broadcast}
-    val subs = emb.select(col("vec_id"),
-      posexplode(array((0 until PqSubspaces).map(i =>
-        slice(col("embedding"), i * PqSubDim + 1, PqSubDim)): _*))
-        .as(Seq("s", "subv")))
-    subs.join(broadcast(centSubs), "s")
+  private[graft] def pqBest(emb: DataFrame, centSubs: DataFrame): DataFrame =
+    emb.select(col("vec_id"), pqSlices(col("embedding")).as(Seq("s", "subv")))
+      .join(broadcast(centSubs), "s")
       .withColumn("d2", graft.functions.Vec.sqDistF(col("subv"), col("csub")))
       .groupBy("vec_id", "s")
       .agg(min(struct(col("d2"), col("c_label"))).as("best"))
-  }
 
   /** K21″ `vec_pq_adc` (round 10): the SEARCH half of the PQ contract —
     * asymmetric distance computation (Jégou 2011 §III): the corpus exists
@@ -900,17 +897,13 @@ object VectorOps {
     * codebook) and the k-means-learned deployment twin [[vecPqAdcKmeans]].
     */
   private[graft] def pqAdcWith(emb: DataFrame, centSubs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.{posexplode, broadcast}
     import org.apache.spark.sql.types.DecimalType
     // corpus side: codes only — (vec_id, s, code), 4 small rows per vector
     val codes = pqBest(corpusOf(emb), centSubs)
       .select(col("vec_id"), col("s"), col("best").getField("c_label").as("code"))
     // query side: the ADC lookup table — |q| × k × PqSubspaces rows
     val lut = queriesOf(emb)
-      .select(col("vec_id").as("q_id"),
-        posexplode(array((0 until PqSubspaces).map(i =>
-          slice(col("embedding"), i * PqSubDim + 1, PqSubDim)): _*))
-          .as(Seq("s", "qsub")))
+      .select(col("vec_id").as("q_id"), pqSlices(col("embedding")).as(Seq("s", "qsub")))
       .join(broadcast(centSubs), "s")
       .select(col("q_id"), col("s"), col("c_label").as("code"),
         graft.functions.Vec.sqDistF(col("qsub"), col("csub"))
@@ -926,89 +919,29 @@ object VectorOps {
         round(col("adc_d").cast("double"), 6).as("adc"))
   }
 
-  /** Per-subspace K-MEANS-LEARNED PQ codebooks — the DEPLOYMENT form of
-    * [[pqCentSubs]] (the executed `simIvfKmeans`/`dedupSemanticKmeans`
-    * pattern, round-10 VERDICT next-round #3): same (c_label, s, csub)
-    * schema, so [[pqEncodeWith]] / [[pqAdcWith]] consume it unchanged and
-    * the PQ contract (what wrote the codes = what the LUT is built
-    * against) holds by construction.
+  /** Per-subspace k-means-learned PQ codebooks, the deployment form of
+    * [[pqCentSubs]]: the same (c_label, s, csub) schema, so [[pqEncodeWith]]
+    * and [[pqAdcWith]] consume it unchanged, and what wrote the codes is
+    * what the LUT is built against by construction.
     *
-    * One JOINT Lloyd loop trains all `PqSubspaces` codebooks: the corpus
-    * is sliced once into (vec_id, s, subv) rows (cached across
-    * iterations, the `simIvfKmeans` discipline), every iteration assigns
-    * each slice SHUFFLE-FREE via a literal-centers HOF argmin indexed by
-    * `s`, recomputes means with the house exact-decimal cross-row sums
-    * (associative-exact ⇒ the movement sequence and exit iteration are
-    * run-independent — the `recenterSums` rationale), and collects
-    * only `PqSubspaces`×k×`PqSubDim` (sum, count) cells to the driver. So
-    * training costs ONE corpus pass per iteration — not one per subspace.
-    *
-    * Seeding: the label-mean sub-centroids ([[pqCentSubs]]' values).
-    * Lloyd's distortion is monotone non-increasing from any seed, so the
-    * learned codebook's total reconstruction error is ≤ the label-mean
-    * codebook's BY CONSTRUCTION (VectorOpsSpec pins it measured); on an
-    * unlabeled corpus any deterministic seed (first-k scan) drops in —
-    * everything downstream is seed-agnostic.
+    * A PQ codebook is k-means run separately in each subspace (Jégou et
+    * al., TPAMI 2011), so this is [[lloyd]] over the corpus sliced into
+    * (s, subv) rows: all `PqSubspaces` codebooks train jointly, one corpus
+    * pass per iteration. It is seeded with the label-mean sub-centroids,
+    * each subspace's sorted by value so cids do not depend on collect
+    * order (the codes do depend on them). Lloyd's distortion is monotone
+    * non-increasing from any seed, so the learned codebook's total
+    * reconstruction error is at most the label-mean codebook's
+    * (VectorOpsSpec pins it measured).
     */
   private[graft] def pqKmeansSubCodebooks(emb: DataFrame,
                                           maxIters: Int = KmeansMaxIters,
                                           tol: Double = KmeansTol): DataFrame = {
-    val s = emb.sparkSession
-    import s.implicits._
-    // AQE scoped off: per-iteration exchanges are (subspaces × k × subdim)-
-    // bounded — see graft.functions.Confs (results unaffected)
-    val learned = graft.functions.Confs.kBoundedLoop(emb) { emb =>
-      import org.apache.spark.sql.functions.posexplode
-      import org.apache.spark.sql.types.DecimalType
-      // seed: label-mean sub-centroids, collected k×PqSubspaces rows (the
-      // codebook is driver-sized by definition — it is the loop's state)
-      val seed = pqCentSubs(emb).select(col("s"), col("csub")).collect()
-        .groupBy(_.getInt(0))
-      var centers: Array[Array[Seq[Double]]] = Array.tabulate(PqSubspaces)(si =>
-        seed(si).map(_.getSeq[Double](1)).sortBy(_.toString).toArray.map(identity))
-      // deterministic seed order: sort each subspace's centroids by value so
-      // cid assignment doesn't depend on collect order
-      val subs = emb.select(col("vec_id"),
-        posexplode(array((0 until PqSubspaces).map(i =>
-          slice(col("embedding"), i * PqSubDim + 1, PqSubDim)): _*))
-          .as(Seq("s", "subv"))).cache()
-      try {
-        // one complex-typed literal per iteration (see centersLit)
-        def centersLitBySub(): Column =
-          typedLit(centers.toSeq.map(sub => sub.toSeq.zipWithIndex.map { case (c, j) => Center(j, c) }))
-        var moved = Double.MaxValue
-        var it = 0
-        while (it < maxIters && moved > tol) {
-          it += 1
-          val near = array_min(centroidDists(
-            element_at(centersLitBySub(), col("s") + 1), col("subv"), "center", "cid", "cid"))
-          val sums = subs
-            .select(col("s"), near.getField("cid").as("cid"), posexplode(col("subv")))
-            .groupBy("s", "cid", "pos")
-            .agg(sum(col("col").cast("double").cast(DecimalType(28, 20)))
-              .cast("double").as("sv"), count(lit(1)).as("n"))
-            .collect()
-          val byKey = sums.groupBy(r => (r.getInt(0), r.getInt(1)))
-          val next = centers.zipWithIndex.map { case (sub, si) =>
-            sub.zipWithIndex.map { case (old, j) =>
-              byKey.get((si, j)) match {
-                case Some(rows) =>
-                  rows.sortBy(_.getInt(2)).map(r => r.getDouble(3) / r.getLong(4)).toSeq
-                case None => old // empty cluster keeps its center
-              }
-            }
-          }
-          moved = centers.zip(next).map { case (os, ns) =>
-            os.zip(ns).map { case (o, n) =>
-              o.zip(n).map { case (a, b) => (a - b) * (a - b) }.sum }.max }.max
-          centers = next
-        }
-        if (moved > tol)
-          System.err.println(s"[graft] pq sub-kmeans stopped at the $maxIters-iteration " +
-            s"cap with max center movement $moved > $tol")
-        centers
-      } finally { subs.unpersist(); () }
-    }
+    import emb.sparkSession.implicits._
+    val seed = pqCentSubs(emb).select(col("s"), col("csub")).collect().groupBy(_.getInt(0))
+    val (learned, _) = lloyd(emb.select(pqSlices(col("embedding")).as(Seq("s", "v"))),
+      Array.tabulate(PqSubspaces)(si => seed(si).map(_.getSeq[Double](1)).sortBy(_.toString)),
+      maxIters, tol)
     learned.zipWithIndex.flatMap { case (sub, si) =>
       sub.zipWithIndex.map { case (c, j) => (j, si, c) }
     }.toSeq.toDF("c_label", "s", "csub")
@@ -1060,15 +993,12 @@ object VectorOps {
     * the `vec_pq_adc` tail.
     */
   def simIvfPq(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions.{posexplode, broadcast}
     import org.apache.spark.sql.types.DecimalType
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label"), col("embedding"))
     val centSubs = pqCentSubs(emb)
-    def sliced(df: DataFrame, idAs: String) = df.select(col("vec_id").as(idAs),
-      posexplode(array((0 until PqSubspaces).map(i =>
-        slice(col("embedding"), i * PqSubDim + 1, PqSubDim)): _*))
-        .as(Seq("s", "subv")))
+    def sliced(df: DataFrame, idAs: String) =
+      df.select(col("vec_id").as(idAs), pqSlices(col("embedding")).as(Seq("s", "subv")))
     val cdd = sliced(corpusOf(emb), "vec_id")
       .repartition(col("vec_id"))
       .join(broadcast(centSubs), "s")
@@ -2165,19 +2095,16 @@ object VectorOps {
     * brute force on separable data.
     */
   def simIvfKmeans(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     val emb = Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("label"), col("embedding")).cache()
-    try {
-      val centers = kmeansCenters(emb)
-      val cent = centers.zipWithIndex
-        .map { case (c, cid) => (cid, c) }.toSeq
-        .toDF("c_label", "cvec")
-      simIvfWith(emb, cent)
-        // materialize before the cache is released below — the frame is
-        // AnnTopK × QuerySetSize rows, driver-tiny
-        .localCheckpoint()
-    } finally emb.unpersist()
+      .select(col("vec_id"), col("label"), col("embedding"))
+    simIvfWith(emb, kmeansCentroids(emb))
+  }
+
+  /** The k-means centers of `emb` as a (c_label = cid, cvec) centroid frame. */
+  private def kmeansCentroids(emb: DataFrame): DataFrame = {
+    import emb.sparkSession.implicits._
+    kmeansCentersTraced(emb)._1.toSeq.zipWithIndex
+      .map { case (c, cid) => (cid, c) }.toDF("c_label", "cvec")
   }
 
   /** IVF search over ANY (c_label, cvec: array<double>) centroid frame —
@@ -2350,15 +2277,10 @@ object VectorOps {
     * label-mean form on separable data.
     */
   def dedupSemanticKmeans(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     val emb = Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("label"), col("embedding")).cache()
-    try {
-      val cent = kmeansCenters(emb).zipWithIndex
-        .map { case (c, cid) => (cid, c) }.toSeq
-        .toDF("c_label", "cvec")
-      dedupSemanticWith(emb, cent, semBits(cent.count(), emb.count())).localCheckpoint()
-    } finally emb.unpersist()
+      .select(col("vec_id"), col("label"), col("embedding"))
+    val cent = kmeansCentroids(emb)
+    dedupSemanticWith(emb, cent, semBits(cent.count(), emb.count()))
   }
 
   /** Semantic-dedup core over ANY (c_label, cvec) centroid frame —
@@ -2378,33 +2300,41 @@ object VectorOps {
         (array_min(labelDists(col("embedding"))).getField("lbl").cast("long") * (1L << bits)
           + (if (bits == 0) lit(0L) // signBucket folds ≥1 bit terms
              else Vec.signBucket(col("embedding"), bits))).as("cid"))
-    // per-cell exact-decimal means — the keep-priority anchor is the cell
-    // that actually bounds the candidate pairs (the dedup_semantic_lsh
-    // discipline); NOT broadcast: the cell count grows ∝ N/target, so the
-    // mean frame joins back by its key (AQE picks broadcast while small)
-    val cellCent = labelMeanCentroids(
-        coarse.select(col("cid").as("label"), col("embedding")))
-      .select(col("c_label").as("cid"), col("cvec"))
-    // assignment frame is referenced twice (pair join + verdict join);
-    // the lineage cut materializes the one centroid aggregation + assign
-    // pass instead of recomputing it per reference. The keep-priority
-    // distance is ROUNDED to 1e-6 HERE, before any comparison (round-17
-    // 100× lesson): a cell holding two equal-mass replica cliques has its
-    // mean at the exact midpoint, so the two cliques' distances are
-    // MATHEMATICALLY equal and a raw-double compare is decided by each
-    // engine's fold noise — Spark and DuckDB ordered them oppositely.
-    // The 1e-6 grid is exactly the granularity every gate already hashes,
-    // so comparing on it adds no new cross-engine risk class, and ties on
-    // the grid fall through to the total vec_id order.
-    val a = coarse.join(cellCent, "cid")
-      .select(col("vec_id"), col("embedding"), col("cid"),
+    pruneWithinCells(coarse, "cid", "cid")
+  }
+
+  /** The semantic-dedup prune over `cells` (vec_id, embedding, `cell`):
+    * per vector, its cell, its keep-priority distance `c_dist` to the cell's
+    * exact-decimal mean, its count of cosine-≥ [[SemDupTau]] neighbours in
+    * the cell, and whether it is kept. A vector is dropped iff such a
+    * neighbour sits closer to the mean (vec_id breaks ties, so the order is
+    * total). The cell column is emitted as `out`. The mean frame is NOT
+    * broadcast: the cell count grows ∝ N/target, so it joins back by its
+    * key (AQE picks broadcast while small).
+    */
+  private def pruneWithinCells(cells: DataFrame, cell: String, out: String): DataFrame = {
+    val cent = labelMeanCentroids(cells.select(col(cell).as("label"), col("embedding")))
+      .select(col("c_label").as(cell), col("cvec"))
+    // the assignment frame is referenced twice (pair join + verdict join);
+    // the lineage cut runs the one centroid aggregation + assign pass once
+    // instead of per reference. The keep-priority distance is ROUNDED to
+    // 1e-6 HERE, before any comparison: a cell holding two equal-mass
+    // replica cliques has its mean at the exact midpoint, so the two
+    // cliques' distances are MATHEMATICALLY equal and a raw-double compare
+    // is decided by each engine's fold noise — Spark and DuckDB ordered
+    // them oppositely at 100×. The 1e-6 grid is exactly the granularity
+    // every gate already hashes, so comparing on it adds no new
+    // cross-engine risk class, and ties on the grid fall through to the
+    // total vec_id order.
+    val a = cells.join(cent, cell)
+      .select(col("vec_id"), col("embedding"), col(cell),
         round(Vec.sqDistF(col("embedding"), col("cvec")), 6).as("c_dist"))
       .localCheckpoint(eager = false)
-    // within-cluster ≥τ neighbours, with the domination verdict folded
-    // into the same pass: y beats x iff closer to the centroid (vec_id
-    // tiebreak) — one partial-agg per vector, no second join
+    // within-cell ≥τ neighbours, with the domination verdict folded into
+    // the same pass: y beats x iff closer to the mean (vec_id tiebreak) —
+    // one partial-agg per vector, no second join
     val nbrs = a.as("x").join(a.as("y"),
-        col("x.cid") === col("y.cid") && col("x.vec_id") =!= col("y.vec_id"))
+        col(s"x.$cell") === col(s"y.$cell") && col("x.vec_id") =!= col("y.vec_id"))
       .where(Vec.cosineF(col("x.embedding"), col("y.embedding")) >= SemDupTau)
       .select(col("x.vec_id").as("vec_id"),
         when(col("y.c_dist") < col("x.c_dist") ||
@@ -2413,7 +2343,7 @@ object VectorOps {
       .groupBy("vec_id")
       .agg(count(lit(1)).as("n_dup_nbrs"), max("dom").as("dominated"))
     a.join(nbrs, Seq("vec_id"), "left")
-      .select(col("vec_id"), col("cid").cast("int").as("cid"), col("c_dist"),
+      .select(col("vec_id"), col(cell).cast("int").as(out), col("c_dist"),
         coalesce(col("n_dup_nbrs"), lit(0L)).cast("int").as("n_dup_nbrs"),
         when(coalesce(col("dominated"), lit(0)) === 1, 0).otherwise(1)
           .cast("int").as("kept"))
@@ -2459,63 +2389,15 @@ object VectorOps {
     */
   def dedupSemanticLsh(s: SparkSession, dir: String): DataFrame = {
     val emb0 = Tables.embeddings(s, dir)
-    // width from the corpus-count ladder (round 17); the floor keeps
-    // every shipped sf ≤ 0.1 at the historical 5-bit contract
+    // width from the corpus-count ladder; the floor keeps every shipped
+    // sf ≤ 0.1 at the 5-bit width
     val bits = semLshBitsOf(emb0.count())
     val e = emb0
       .select(col("vec_id"), col("embedding"),
         Vec.signBucket(col("embedding"), bits).as("b"))
-    // per-bucket exact-decimal means — labelMeanCentroids keyed on the
-    // bucket (single-sourced with sim_ivf / dedup_semantic)
-    val cent = labelMeanCentroids(e.select(col("b").as("label"), col("embedding")))
-      .select(col("c_label").as("b"), col("cvec"))
-    // keep-priority distance pre-rounded to the gate's 1e-6 grid before
-    // any comparison — see dedupSemanticWith (a bucket of two equal-mass
-    // cliques puts the mean at the exact midpoint; raw-double compare is
-    // not cross-engine total at that mathematical tie)
-    // NOT broadcast (round 17): the bucket-mean frame grows ∝ n/64 under
-    // the ladder width — joined by its key; AQE broadcasts while small
-    val a = e.join(cent, "b")
-      .select(col("vec_id"), col("embedding"), col("b"),
-        round(Vec.sqDistF(col("embedding"), col("cvec")), 6).as("c_dist"))
-      .localCheckpoint(eager = false)
-    val nbrs = a.as("x").join(a.as("y"),
-        col("x.b") === col("y.b") && col("x.vec_id") =!= col("y.vec_id"))
-      .where(Vec.cosineF(col("x.embedding"), col("y.embedding")) >= SemDupTau)
-      .select(col("x.vec_id").as("vec_id"),
-        when(col("y.c_dist") < col("x.c_dist") ||
-          (col("y.c_dist") === col("x.c_dist") &&
-            col("y.vec_id") < col("x.vec_id")), 1).otherwise(0).as("dom"))
-      .groupBy("vec_id")
-      .agg(count(lit(1)).as("n_dup_nbrs"), max("dom").as("dominated"))
-    a.join(nbrs, Seq("vec_id"), "left")
-      .select(col("vec_id"), col("b").cast("int").as("bucket"), col("c_dist"),
-        coalesce(col("n_dup_nbrs"), lit(0L)).cast("int").as("n_dup_nbrs"),
-        when(coalesce(col("dominated"), lit(0)) === 1, 0).otherwise(1)
-          .cast("int").as("kept"))
-      .oracleSorted("vec_id")
+    pruneWithinCells(e, "b", "bucket")
   }
 
-  /** §2.I `kmeans_clusters`: the reference's iterative k-means re-expressed
-    * over DataFrames [ref: stackoverflow/…/StackOverflow.scala#kmeans].
-    *
-    *  - I1 init: deterministic first-vector-per-label (window rn=1) instead
-    *    of the reference's seeded reservoir sample — cross-engine RNG does
-    *    not reproduce, determinism is the contract (SURVEY §2.I1).
-    *  - I2 loop: run to CONVERGENCE with a loud 120-iteration cap
-    *    (reference contract: converge-or-120); each
-    *    iteration bakes the k×dim centers into the plan as a literal array
-    *    column, assigns SHUFFLE-FREE via a per-row codegen'd-sqDist argmin
-    *    (array_min over (dist, cid) structs), recomputes means via
-    *    posexplode → groupBy(cid, pos) partial aggregation, and collects
-    *    only k×dim (sum, count) rows to the driver.
-    *  - A5: the embeddings input is cached across iterations.
-    *  - I4 report: per-cluster size, dominant label (D12 two-level mode),
-    *    label share, median L2 norm (D11).
-    *
-    * No DuckDB oracle (iterative, driver-coordinated — per SURVEY contract);
-    * covered by the convergence unit test on a separable dataset.
-    */
   /** I1 deterministic init: first vector of each label, cluster id = rank of
     * label (k = #labels). Collects k×dim doubles to the driver — the loop's
     * coordinator holds them anyway (SURVEY §2.I2); float→double widening is
@@ -2530,30 +2412,25 @@ object VectorOps {
       .collect()
       .map(_.getSeq[Float](0).map(_.toDouble))
 
-  /** Centers as a LITERAL array-of-structs column (k×dim doubles baked into
-    * the plan — the driver holds them anyway, SURVEY §2.I2): the argmin is a
-    * per-row HOF fold, so assignment is SHUFFLE-FREE and needs no join back
-    * to the corpus — vs the k-row crossJoin form, which blows the row count
-    * up k× and argmin-shuffles by vec_id every iteration.
-    */
-  private def centersLit(cs: Array[Seq[Double]]): Column =
-    // One complex-typed literal, which generated code reads from
-    // `references[i]`: the source, and so the compiled class (the codegen
-    // cache keys on source text), is the same in every iteration
-    // (VectorOpsSpec).
-    typedLit(cs.toSeq.zipWithIndex.map { case (c, i) => Center(i, c) })
-
-  /** One k-means center, the element type of the centers literals. */
+  /** One k-means center, the element type of the centers literal. */
   private case class Center(cid: Int, center: Seq[Double])
 
   /** One integer k-means center of `kmeans_int_trace`. */
   private case class IntCenter(cid: Int, cx: Long, cy: Long)
 
-  /** Nearest-centroid argmin as a (dist, cid) struct — ties break on the
-    * lower cid, exactly like SQL `ORDER BY dist, cid`.
+  /** The nearest of the centers `centers(s)` to `v`, as a (dist, cid)
+    * struct; ties break on the lower cid, exactly like SQL
+    * `ORDER BY dist, cid`. The centers are baked into the plan as ONE
+    * complex-typed literal, which generated code reads from
+    * `references[i]`: the source, and so the compiled class (the codegen
+    * cache keys on source text), is the same in every iteration
+    * (VectorOpsSpec). The argmin is a per-row fold over that literal, so
+    * assignment is shuffle-free and needs no join back to the corpus.
     */
-  private def nearestCenter(cs: Array[Seq[Double]]): Column =
-    array_min(centroidDists(centersLit(cs), col("embedding"), "center", "cid", "cid"))
+  private def nearest(centers: Array[Array[Seq[Double]]], s: Column, v: Column): Column = {
+    val bySub = typedLit(centers.toSeq.map(_.toSeq.zipWithIndex.map { case (c, cid) => Center(cid, c) }))
+    array_min(centroidDists(element_at(bySub, s + 1), v, "center", "cid", "cid"))
+  }
 
   /** Per centroid of the array `cents`, the struct (dist, `idAs`): the
     * squared distance from `v` to its `vec` field, and its `id` field.
@@ -2581,39 +2458,36 @@ object VectorOps {
     cent.agg(collect_list(struct(col("c_label"), col("cvec"))).as("cents"))
       .localCheckpoint(eager = false)
 
-  private def assignedTo(emb: DataFrame, cs: Array[Seq[Double]]): DataFrame =
-    emb.select(col("vec_id"), col("label"), col("embedding"),
-      nearestCenter(cs).getField("cid").as("cid"))
+  /** `emb` as the (s, v) points of one subspace, s = 0. */
+  private def points(emb: DataFrame): DataFrame =
+    emb.select(lit(0).as("s"), col("embedding").as("v"))
 
-  /** One k-means re-center step: per (cid, pos), the sum `sv` of the
-    * dimension-`pos` components of the vectors assigned to `cs(cid)`, and
-    * their count `n`. The sums are exact DECIMAL(28,20), so the loop's
-    * movement sequence and exit iteration are run-independent: double
-    * partial sums merge in shuffle-arrival order, and an ulp of that noise
-    * near the convergence tolerance would flip whole iterations.
+  /** One re-center step over (s, v) points: per (s, cid, pos), the sum `sv`
+    * of the dimension-`pos` components of the points whose [[nearest]]
+    * center is `centers(s)(cid)`, and their count `n`. The sums are exact
+    * DECIMAL(28,20), so the loop's movement sequence and exit iteration
+    * are run-independent: double partial sums merge in shuffle-arrival
+    * order, and an ulp of that noise near the convergence tolerance would
+    * flip whole iterations.
     */
-  private def recenterSums(emb: DataFrame, cs: Array[Seq[Double]]): DataFrame = {
+  private def recenterSums(points: DataFrame, centers: Array[Array[Seq[Double]]]): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    assignedTo(emb, cs)
-      .select(col("cid"), posexplode(col("embedding")))
-      .groupBy("cid", "pos")
+    points.select(col("s"), nearest(centers, col("s"), col("v")).getField("cid").as("cid"),
+        posexplode(col("v")))
+      .groupBy("s", "cid", "pos")
       .agg(sum(col("col").cast("double").cast(DecimalType(28, 20)))
         .cast("double").as("sv"), count(lit(1)).as("n"))
   }
 
   /** `kmeans_assign`: ONE k-means assignment step — classify every vector to
-    * its nearest init centroid (round-2 VERDICT #7: a single
-    * classify-to-literal-centroids pass is pure SQL, so this converts part
-    * of the `kmeans_clusters` loop from a rows-only claim into a
-    * hash-matched oracle row; `sim_ivf` already proved the argmin is
-    * SQL-expressible). Same shuffle-free literal-centers codegen argmin the
-    * full loop uses; one window (init) + one narrow projection.
+    * its nearest init centroid with the [[nearest]] argmin the loop runs,
+    * so the classify step of `kmeans_clusters` is hash-matched against
+    * DuckDB; one window (init) + one narrow projection.
     */
   def kmeansAssign(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label"), col("embedding"))
-    val centers = initCenters(emb)
-    val near = nearestCenter(centers)
+    val near = nearest(Array(initCenters(emb)), lit(0), col("embedding"))
     emb.select(col("vec_id"), col("label"),
         near.getField("cid").as("cid"),
         round(near.getField("dist"), 6).as("sq_dist"))
@@ -2622,145 +2496,145 @@ object VectorOps {
 
   /** K-means loop control, mirroring the reference's converge-or-cap
     * contract [ref: stackoverflow/…/StackOverflow.scala#kmeansMaxIterations
-    * = 120 with a loose `converged(distance) = distance < kmeansEta` — the
-    * previous fixed 5 iterations were the last reference-semantics
-    * softness]: the loop exits when the MAX per-centroid squared movement
-    * of an iteration drops below `KmeansTol`, or at `KmeansMaxIters` with
-    * a WARNING (like the reference, which returns the cap-iteration
-    * centers — k-means convergence is an approximation knob, unlike
-    * `clusterLabels` where non-convergence means wrong components and the
-    * loop fails loudly). Tol calibration, measured at sf0.1: movement
-    * drops 0.68 → 6e-4 in 6 iterations, then oscillates in the 1e-4..1e-5
-    * band for ~40 more before hitting the exact assignment fixpoint at 46
-    * — paying 5× the iterations for micro-adjustments below data scale
-    * (per-coordinate RMS < 3e-3 on [-1,1] components) buys nothing the
-    * cluster report can see.
+    * = 120 with a loose `converged(distance) = distance < kmeansEta`]: the
+    * loop exits when the MAX per-centroid squared movement of an iteration
+    * drops below `KmeansTol`, or at `KmeansMaxIters` with a WARNING (like
+    * the reference, which returns the cap-iteration centers — k-means
+    * convergence is an approximation knob, unlike `clusterLabels` where
+    * non-convergence means wrong components and the loop fails loudly).
+    * Tol calibration, measured at sf0.1: movement drops 0.68 → 6e-4 in 6
+    * iterations, then oscillates in the 1e-4..1e-5 band for ~40 more
+    * before hitting the exact assignment fixpoint at 46 — paying 5× the
+    * iterations for micro-adjustments below data scale (per-coordinate
+    * RMS < 3e-3 on [-1,1] components) buys nothing the cluster report can
+    * see.
     */
   val KmeansMaxIters = 120
   val KmeansTol = 5e-4
 
-  /** I2/I3: the k-means center loop — init from first-vector-per-label,
-    * then driver-coordinated passes to CONVERGENCE (each: shuffle-free
-    * argmin assignment + partial-aggregated per-dimension means; only
-    * k×dim (sum, count) rows reach the driver per pass — the convergence
-    * check is a driver-side k×dim comparison, no extra job). Callers cache
-    * `emb` across the loop. Shared by `kmeans_clusters` (report) and
-    * `simIvfKmeans` (learned IVF centroids).
+  /** Lloyd's iteration, one independent k-means per subspace `s`: `points`
+    * are (s: int, v: array<float>) rows and `seed(s)` the starting centers
+    * of subspace s. Each iteration is one pass over the points: the
+    * shuffle-free [[nearest]] assignment feeds [[recenterSums]], and only
+    * its (subspaces × k × dim) cells reach the driver. An empty cluster
+    * keeps its center. The loop stops once the largest squared movement
+    * of any center drops to `tol`, or at `maxIters` with a warning.
+    *
+    * It runs in [[graft.functions.Confs.kBoundedLoop]] and caches `points`
+    * for exactly its own lifetime, so callers neither cache nor cut.
+    *
+    * @return the final centers and the per-iteration max squared movements
     */
-  private[graft] def kmeansCenters(emb: DataFrame, maxIters: Int = KmeansMaxIters,
-                                   tol: Double = KmeansTol): Array[Seq[Double]] =
-    kmeansCentersTraced(emb, maxIters, tol)._1
+  private def lloyd(points: DataFrame, seed: Array[Array[Seq[Double]]], maxIters: Int,
+                    tol: Double): (Array[Array[Seq[Double]]], List[Double]) =
+    graft.functions.Confs.kBoundedLoop(points) { points =>
+      val pts = points.cache()
+      try {
+        var centers = seed
+        var moved = Double.MaxValue
+        var trace = List.empty[Double]
+        var it = 0
+        while (it < maxIters && moved > tol) {
+          it += 1
+          val sums = recenterSums(pts, centers).collect().groupBy(r => (r.getInt(0), r.getInt(1)))
+          val next = centers.zipWithIndex.map { case (sub, si) =>
+            sub.zipWithIndex.map { case (old, cid) =>
+              sums.get((si, cid)).fold(old)(
+                _.sortBy(_.getInt(2)).map(r => r.getDouble(3) / r.getLong(4)).toSeq)
+            }
+          }
+          moved = centers.zip(next).map { case (os, ns) =>
+            os.zip(ns).map { case (o, n) =>
+              o.zip(n).map { case (a, b) => (a - b) * (a - b) }.sum }.max }.max
+          trace ::= moved
+          centers = next
+        }
+        if (moved > tol)
+          System.err.println(s"[graft] k-means stopped at the $maxIters-iteration cap " +
+            s"with max center movement $moved > $tol")
+        (centers, trace.reverse)
+      } finally { pts.unpersist(); () }
+    }
 
-  /** Loop core, also returning the per-iteration max-squared-movement
-    * sequence (round-7: surfaced as a `kmeans_clusters` output column so
-    * the gate artifact records the loop's trajectory, not just its fixed
-    * point — the movements are run-independent because the center sums are
-    * exact decimals).
+  /** I2/I3: the k-means centers, [[lloyd]] over one subspace seeded by
+    * [[initCenters]], with the per-iteration max squared movements. Shared
+    * by `kmeans_clusters` (report) and the learned-centroid forms
+    * `simIvfKmeans` and `dedupSemanticKmeans`.
     */
   private[graft] def kmeansCentersTraced(emb: DataFrame, maxIters: Int = KmeansMaxIters,
-                                         tol: Double = KmeansTol): (Array[Seq[Double]], List[Double]) =
-    // AQE scoped off for the loop: every per-iteration exchange carries
-    // k×dim partial-agg rows (corpus-size independent), so adaptive
-    // re-planning only adds a per-iteration driver round trip — see
-    // graft.functions.Confs. Results are unaffected (physical-only).
-    graft.functions.Confs.kBoundedLoop(emb) { emb =>
-    var centers = initCenters(emb)
-    var moved = Double.MaxValue
-    var trace = List.empty[Double]
-    var it = 0
-    while (it < maxIters && moved > tol) {
-      it += 1
-      val sums = recenterSums(emb, centers).collect()
-      val byCluster = sums.groupBy(_.getInt(0))
-      val next = centers.zipWithIndex.map { case (old, cid) =>
-        byCluster.get(cid) match {
-          case Some(rows) =>
-            rows.sortBy(_.getInt(1)).map(r => r.getDouble(2) / r.getLong(3)).toSeq
-          case None => old // empty cluster keeps its center
-        }
-      }
-      moved = centers.zip(next).map { case (o, n) =>
-        o.zip(n).map { case (a, b) => (a - b) * (a - b) }.sum }.max
-      trace ::= moved
-      centers = next
-    }
-    if (moved > tol)
-      System.err.println(s"[graft] kmeans stopped at the $maxIters-iteration cap " +
-        s"with max center movement $moved > $tol (reference converge-or-cap contract)")
-    (centers, trace.reverse)
+                                         tol: Double = KmeansTol): (Array[Seq[Double]], List[Double]) = {
+    val (centers, trace) = lloyd(points(emb), Array(initCenters(emb)), maxIters, tol)
+    (centers.head, trace)
   }
 
+  /** §2.I `kmeans_clusters`: the reference's iterative k-means re-expressed
+    * over DataFrames [ref: stackoverflow/…/StackOverflow.scala#kmeans].
+    *
+    *  - I1 init: deterministic first-vector-per-label (window rn=1) instead
+    *    of the reference's seeded reservoir sample — cross-engine RNG does
+    *    not reproduce, determinism is the contract (SURVEY §2.I1).
+    *  - I2 loop: [[kmeansCentersTraced]], run to CONVERGENCE with a loud
+    *    120-iteration cap (reference contract: converge-or-120).
+    *  - I4 report: per-cluster size, dominant label (D12 two-level mode),
+    *    label share, median L2 norm (D11), and the loop's movement trace.
+    */
   def kmeansClusters(s: SparkSession, dir: String): DataFrame = {
-    // A5: cached across the iteration loop; the cache is dropped before
-    // returning (round-2 VERDICT #5 — no cached frame outlives its query
-    // invocation), which is safe because every consumer either collects
-    // inside this call or reads the checkpointed final assignment below.
     val emb = Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("label"), col("embedding")).cache()
-    try {
-      val (centers, movements) = kmeansCentersTraced(emb)
-      // the full convergence trajectory, identical on every row: the gate
-      // artifact records WHICH path the loop took, not just where it
-      // landed (round-7; deterministic because the center sums are exact
-      // decimals — see recenterSums). Each movement renders as
-      // floor(m·10¹²) — an integer both engines produce bit-identically
-      // from the identical double (the graph_pagerank floor trick; the
-      // previous %.6e format was NOT cross-engine replayable — Java
-      // rounds the decimal expansion HALF_UP where C-family printf
-      // rounds half-even — which kept this query the registry's last
-      // no_oracle row, round-15 VERDICT #1). Movements are ≤ ~dim·4, so
-      // the pico-unit product stays far under 2^53 where floor parity
-      // holds exactly — guarded (round-16 ADVICE): an out-of-range
-      // movement from a larger-magnitude fixture must fail loudly here,
-      // not surface as an unexplained cross-engine hash mismatch.
-      val moveSeq = movements.map { m =>
-        require(m < (1L << 53) / 1e12,
-          s"kmeans movement $m exceeds the 2^53/1e12 floor-parity bound")
-        math.floor(m * 1e12).toLong.toString
-      }.mkString(",")
+      .select(col("vec_id"), col("label"), col("embedding"))
+    val (centers, movements) = kmeansCentersTraced(emb)
+    // the full convergence trajectory, identical on every row: the gate
+    // artifact records WHICH path the loop took, not just where it landed
+    // (deterministic because the center sums are exact decimals). Each
+    // movement renders as floor(m·10¹²), an integer both engines produce
+    // bit-identically from the identical double (the graph_pagerank floor
+    // trick; a %.6e format is not cross-engine replayable: Java rounds the
+    // decimal expansion HALF_UP where C-family printf rounds half-even).
+    // Movements are ≤ ~dim·4, so the pico-unit product stays far under
+    // 2^53 where floor parity holds exactly; an out-of-range movement from
+    // a larger-magnitude fixture must fail loudly here, not surface as an
+    // unexplained cross-engine hash mismatch.
+    val moveSeq = movements.map { m =>
+      require(m < (1L << 53) / 1e12,
+        s"kmeans movement $m exceeds the 2^53/1e12 floor-parity bound")
+      math.floor(m * 1e12).toLong.toString
+    }.mkString(",")
 
-      // Final assignment, materialized eagerly with its lineage cut: the
-      // report below reads it twice, and after the cut it no longer
-      // references `emb`, so the cache can be released in `finally`. The
-      // checkpointed frame is (cid, label, nrm) — corpus-row count but
-      // 3 narrow columns, block-manager-resident and freed by the
-      // ContextCleaner when the result frame is garbage (unlike an
-      // InMemoryRelation, which outlives the call until an explicit
-      // unpersist).
-      val scored = assignedTo(emb, centers)
-        .select(col("cid"), col("label"), Vec.l2F(col("embedding")).as("nrm"))
-        .localCheckpoint()
+    // Final assignment as (cid, label, nrm): the report below reads it
+    // twice, so it is cut once (lazily; the blocks are freed by the
+    // ContextCleaner when the result frame is garbage).
+    val scored = emb
+      .select(nearest(Array(centers), lit(0), col("embedding")).getField("cid").as("cid"),
+        col("label"), Vec.l2F(col("embedding")).as("nrm"))
+      .localCheckpoint(eager = false)
 
-      // I4: cluster report — size, dominant label + share, median norm.
-      val topLabel = scored.groupBy("cid", "label").agg(count(lit(1)).as("n"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("cid").orderBy(desc("n"), asc("label"))))
-        .filter(col("rn") === 1)
-        .select(col("cid"), col("label").as("top_label"), col("n").as("top_n"))
-      scored.groupBy("cid")
-        .agg(count(lit(1)).as("n_vecs"), round(median(col("nrm")), 6).as("median_norm"))
-        .join(topLabel, "cid")
-        .select(col("cid").as("cluster_id"), col("n_vecs"), col("top_label"),
-          round(col("top_n").cast("double") / col("n_vecs"), 4).as("label_share"),
-          col("median_norm"), lit(moveSeq).as("movement_seq"))
-        .oracleSorted("cluster_id")
-    } finally emb.unpersist()
+    // I4: cluster report — size, dominant label + share, median norm.
+    val topLabel = scored.groupBy("cid", "label").agg(count(lit(1)).as("n"))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy("cid").orderBy(desc("n"), asc("label"))))
+      .filter(col("rn") === 1)
+      .select(col("cid"), col("label").as("top_label"), col("n").as("top_n"))
+    scored.groupBy("cid")
+      .agg(count(lit(1)).as("n_vecs"), round(median(col("nrm")), 6).as("median_norm"))
+      .join(topLabel, "cid")
+      .select(col("cid").as("cluster_id"), col("n_vecs"), col("top_label"),
+        round(col("top_n").cast("double") / col("n_vecs"), 4).as("label_share"),
+        col("median_norm"), lit(moveSeq).as("movement_seq"))
+      .oracleSorted("cluster_id")
   }
 
-  /** `kmeans_iter1` (round-7): the loop's FIRST transition, hash-matched —
-    * init centers (first vector per label), one shuffle-free argmin
-    * assignment, then the per-(cluster, dimension) mean with the SAME
-    * exact-decimal sum discipline the loop uses. DuckDB replays init +
-    * argmin (the `kmeans_assign` SQL family) + AVG per dimension, so the
-    * iteration the loop actually executes is oracled, not just
-    * unit-tested; `kmeans_assign` pins the classify step, this pins the
-    * re-center step. Scale shape: posexplode shuffles k×dim groups with
-    * map-side partial aggregation — the loop's own per-pass cost.
+  /** `kmeans_iter1`: the loop's FIRST transition, hash-matched — init
+    * centers (first vector per label), then the loop's own
+    * [[recenterSums]] step, so the iteration the loop executes is oracled,
+    * not just unit-tested: DuckDB replays init + argmin (the
+    * `kmeans_assign` SQL family) + AVG per dimension. `kmeans_assign` pins
+    * the classify step, this pins the re-center step. Scale shape:
+    * posexplode shuffles k×dim groups with map-side partial aggregation —
+    * the loop's own per-pass cost.
     */
   def kmeansIter1(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label"), col("embedding"))
-    recenterSums(emb, initCenters(emb))
+    recenterSums(points(emb), Array(initCenters(emb)))
       .select(col("cid"), col("pos"),
         round(col("sv") / col("n"), 6).as("center_val"), col("n"))
       .oracleSorted("cid", "pos")
@@ -2794,7 +2668,7 @@ object VectorOps {
     * Architecture = the real loop's (not a SQL translation): the driver
     * holds k×2 integer centers, each iteration bakes them into the plan as
     * a literal array and assigns SHUFFLE-FREE via the codegen'd per-row
-    * packed argmin (`kmeans_clusters`'s centersLit discipline — no k-way
+    * packed argmin (the [[nearest]] literal discipline — no k-way
     * crossJoin, no shuffle-by-point), then one partial-aggregated
     * groupBy(cid) returns k (Σx, Σy, n) rows to the coordinator. Per
     * iteration: one scan + one k-group shuffle — the textbook per-pass
@@ -2833,7 +2707,7 @@ object VectorOps {
       val frames = Seq.newBuilder[(Int, Int, Long, Long, Long)]
       for (it <- 1 to KmIntIters) {
         // one complex-typed Literal — identical generated source across the
-        // 8 iterations, so the argmin stage compiles once (see centersLit)
+        // 8 iterations, so the argmin stage compiles once (see [[nearest]])
         val centLit = typedLit(centers.toSeq.map { case (cid, cx, cy) => IntCenter(cid, cx, cy) })
         // packed ordinal argmin: min over (sqdist·k + cid) — total order,
         // ties to the lower cid, all-integer (see header)

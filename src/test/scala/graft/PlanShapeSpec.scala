@@ -138,6 +138,34 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(joinSubtree.contains("SelectedBucketsCount: 8 out of 8"), joinSubtree)
   }
 
+  test("join_bucketed reads from the bucketed stage; a dropped table is re-registered over its files, not rewritten") {
+    import java.nio.file.{Files, Paths}
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import graft.operators.Joins
+    def scans(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.sparkPlan.collect { case f: FileSourceScanExec => f }
+    def dataFiles(root: String): Map[String, Long] = {
+      val walk = Files.walk(Paths.get(root))
+      try walk.filter(_.toString.endsWith(".parquet")).toArray.map(_.asInstanceOf[java.nio.file.Path])
+        .map(p => p.toString -> Files.getLastModifiedTime(p).toMillis).toMap
+      finally walk.close()
+    }
+    val first = Joins.joinBucketed(spark, sfDir)
+    val root = graft.Staging.stagedRoot(Joins.BucketStageDir)
+    val roots = scans(first).flatMap(_.relation.location.rootPaths.map(_.toUri.getPath))
+    assert(roots.size == 2 && roots.forall(_.startsWith(s"$root/")), s"$roots vs $root")
+    val files = dataFiles(root)
+    assert(files.nonEmpty)
+    scans(first).flatMap(_.tableIdentifier).foreach(t => spark.sql(s"DROP TABLE ${t.table}"))
+    val again = Joins.joinBucketed(spark, sfDir)
+    assert(dataFiles(root) == files, "the staged bucketed files were rewritten")
+    val p = again.queryExecution.executedPlan.toString
+    val joinSubtree = p.substring(p.indexOf("SortMergeJoin"))
+    assert(!joinSubtree.contains("Exchange"), joinSubtree)
+    assert(joinSubtree.contains("SelectedBucketsCount: 8 out of 8"), joinSubtree)
+    assert(again.collect().toSeq == first.collect().toSeq)
+  }
+
   test("query_q3: predicates reach every scan, dims broadcast, top-10 is a heap (C8)") {
     val df = graft.operators.Joins.queryQ3(spark, sfDir)
     val p = df.queryExecution.executedPlan.toString

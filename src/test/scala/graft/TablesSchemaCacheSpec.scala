@@ -155,6 +155,25 @@ class TablesSchemaCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(inPlace.count() == copied.count())
   }
 
+  test("a table of fewer rows than N loads from one non-empty file per row; a 0-row table loads in place") {
+    val dir = tempDir()
+    val few = s"$dir/region.parquet"
+    Tables.region(spark, sfDir).orderBy("r_regionkey").limit(3).coalesce(1).write.parquet(few)
+    Tables.nation(spark, sfDir).limit(0).coalesce(1).write.parquet(s"$dir/nation.parquet")
+    assert(spark.sparkContext.defaultParallelism > 3)
+    val copied = Tables.region(spark, dir)
+    val files = copied.inputFiles.toSeq
+    assert(files.size == 3 && files.forall(_.contains(s"${Tables.CopyStageDir}/region/by/")), files)
+    files.foreach(f => assert(footer(f).getBlocks.asScala.map(_.getRowCount).sum > 0, f))
+    val orig = spark.read.parquet(few)
+    assert(copied.exceptAll(orig).isEmpty && orig.exceptAll(copied).isEmpty && orig.count() == 3)
+    val empty = Tables.nation(spark, dir)
+    assert(empty.inputFiles.nonEmpty &&
+      empty.inputFiles.forall(_.contains(s"$dir/nation.parquet")), empty.inputFiles.toSeq)
+    assert(empty.count() == 0)
+    assert(stagedCopies(dir).size == 1)
+  }
+
   test("rewriting a dataset at the same path re-infers its schema and reads the new rows") {
     import spark.implicits._
     val path = s"${tempDir()}/t.parquet"

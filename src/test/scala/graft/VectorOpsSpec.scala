@@ -105,7 +105,7 @@ class VectorOpsSpec extends AnyFunSuite {
     import spark.implicits._
     val rnd = new scala.util.Random(19)
     // Same blob construction as the label-mean IVF test — but here the
-    // centroids are LEARNED by the k-means loop (kmeansCenters), the shape a
+    // centroids are LEARNED by the k-means loop (kmeansCentersTraced), the shape a
     // user runs on an unlabeled corpus. Converged centers sit at the blob
     // means, so probing 2 of 3 lists must still recover the exact top-k.
     val data = (0 until 90).map { i =>
@@ -148,12 +148,17 @@ class VectorOpsSpec extends AnyFunSuite {
     import org.apache.spark.metrics.source.CodegenMetrics
     val emb = Tables.embeddings(spark, sfDir).select(col("vec_id"), col("label"), col("embedding"))
     // tol < 0: the loop runs exactly maxIters iterations
-    VectorOps.kmeansCentersTraced(emb, maxIters = 1, tol = -1.0)
-    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    val (_, trace) = VectorOps.kmeansCentersTraced(emb, maxIters = 4, tol = -1.0)
-    assert(trace.length == 4)
-    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiled,
-      "a k-means iteration compiled a new class: a per-iteration value entered the generated source")
+    val trainings = Seq[(String, Int => Unit)](
+      "k-means centers" -> { n =>
+        assert(VectorOps.kmeansCentersTraced(emb, maxIters = n, tol = -1.0)._2.length == n) },
+      "PQ codebooks" -> { n => VectorOps.pqKmeansSubCodebooks(emb, maxIters = n, tol = -1.0); () })
+    trainings.foreach { case (what, train) =>
+      train(1)
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      train(4)
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiled,
+        s"a $what iteration compiled a new class: a per-iteration value entered the generated source")
+    }
   }
 
   test("quantile_bins NTILE law at sf0.1: monotone deciles, exact bucket sizes") {
